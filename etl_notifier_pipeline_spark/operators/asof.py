@@ -108,10 +108,13 @@ def _asof_join_union_sort(
     right_time: str,
     right_values: Sequence[str],
 ) -> DataFrame:
-    """Scale path, and the default since r14 (measured at sf10 —
-    OPTIMIZATION_r14.md): tag and union both sides, shuffle ONCE by
-    the key, and let a running ``last(..., ignorenulls=True)`` window
-    carry the newest at-or-before right row onto every left row.
+    """Scale path, and the default since r14: tag and union both
+    sides, shuffle ONCE by the key, and let a running
+    ``last(..., ignorenulls=True)`` window carry the newest
+    at-or-before right row onto every left row. The switch was made
+    on plan shape (one exchange instead of a join plus an anti-join
+    restore) and is unmeasured: no committed artifact times it
+    against ``window`` or ``pandas``.
 
     Sort order within a key: (time ASC NULLS FIRST, is_left ASC,
     right-value tuple DESC NULLS FIRST). The pieces:

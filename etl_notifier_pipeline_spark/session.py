@@ -156,6 +156,13 @@ def get_spark(
         # session tz pinned UTC the instant semantics are identical.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # List a read's root paths on the driver up to 1024 paths
+        # (Spark's default launches a listing job above 32). A 64-bucket
+        # BucketedTableStore read passes 65+ paths; building one such
+        # read on local[2] (4-core host) cost 0.53 s wall / 1.2-1.5 s
+        # CPU with the listing job, 0.05 s / 0.08-0.16 s listed
+        # serially. Catalog reads pass one file per table, under 32.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", driver_mem)
         # Per-task DATA budget, both sides of the shuffle — the r11
         # spill diagnosis (docs/SCALE.md "The spill levers, measured"):

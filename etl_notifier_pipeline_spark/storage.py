@@ -29,6 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -800,6 +801,21 @@ def _predicates_to_column(predicates: list[tuple]):
     return cond
 
 
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the
+    schema Spark reports for parquet it reads back."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def _sweep_stale_staging(path: str, stale_s: float = 300.0) -> None:
     """Drop staging dirs abandoned by crashed writers. Staged files are
     never referenced by a pointer or manifest, so this is always safe;
@@ -823,8 +839,24 @@ class BucketedTableStore:
 
         <root>/<table>/v=<n>/schema/            # 0-row schema anchor
         <root>/<table>/v=<n>/data/__bucket=<k>/part-*.parquet
-        <root>/<table>/v=<n>/_manifest.json     # bucket -> [dirs]
+        <root>/<table>/v=<n>/_manifest.json
         <root>/<table>/_CURRENT                 # "v=<n>"
+
+    with the manifest
+
+        {"schema": "v=<n>/schema",
+         "data_schema": <StructType JSON>,       # the read schema
+         "bucket_keys": ["k", ...],              # hashed columns, in order
+         "n_buckets": 64,
+         "buckets": {"<k>": ["v=<m>/data/__bucket=<k>", ...]},
+         "deltas": {"<k>": [...]}}               # merge-on-read only
+
+    Reads pass ``data_schema`` to the parquet reader, so building a
+    read launches no footer-inference job. ``bucket_keys`` and
+    ``n_buckets`` record how the data was bucketed: writes that keep
+    some buckets (append, keyed mutations, compaction) hash new rows
+    the same way, and keyed reads and mutations refuse to prune when
+    the declared keys differ from the recorded ones.
 
     Every row lives in bucket ``xxhash64(key cols) % n_buckets``. A
     keyed mutation hashes the incoming keys, reads ONLY the affected
@@ -907,11 +939,36 @@ class BucketedTableStore:
         with open(os.path.join(self._dir(table), f"v={v}", "_manifest.json")) as f:
             return json.load(f)
 
-    def _bucket_col(self, table: str, df: DataFrame):
-        from pyspark.sql import functions as F
+    @staticmethod
+    def _bucket_col(bucketing: tuple[list[str], int]):
+        cols, n = bucketing
+        return F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
 
-        cols = self.keys.get(table) or df.columns
-        return F.pmod(F.xxhash64(*cols), F.lit(self.n_buckets)).cast("int")
+    def _bucketing(
+        self, table: str, m: dict | None, df: DataFrame
+    ) -> tuple[list[str], int]:
+        """``(columns, n_buckets)`` to hash ``df``'s rows by: what the
+        manifest ``m`` records for the data already written, else the
+        declared keys (all columns when none are declared) and this
+        store's bucket count."""
+        if m is not None and "bucket_keys" in m:
+            return list(m["bucket_keys"]), int(m["n_buckets"])
+        return list(self.keys.get(table) or df.columns), self.n_buckets
+
+    def _keyed_bucketing(self, table: str, m: dict) -> tuple[list[str], int]:
+        """The manifest's bucketing, checked against the declared keys.
+        Pruning by keys the data was not bucketed by would open the
+        wrong buckets: a keyed read would miss rows, and a keyed
+        mutation would duplicate or drop them."""
+        declared = list(self.keys.get(table) or [])
+        recorded = m.get("bucket_keys")
+        if recorded is None or list(recorded) != declared:
+            raise ValueError(
+                f"{table!r}: declared bucket keys {declared} differ from the "
+                f"keys its data was bucketed by ({recorded}; None = not "
+                f"recorded). Overwrite the table to re-bucket it."
+            )
+        return declared, int(m["n_buckets"])
 
     def _write_version(
         self, table: str, df: DataFrame, carry: dict[str, list[str]] | None,
@@ -920,6 +977,8 @@ class BucketedTableStore:
         carry_deltas: dict[str, list[str]] | None = None,
         manifest_extra: dict | None = None,
         cdc_from_staged=None,
+        base_version: int | None = None,
+        bucketing: tuple[list[str], int] | None = None,
     ) -> int:
         """Write ``df``'s rows bucket-partitioned into the next version
         dir and commit a manifest that is ``carry`` (prior entries for
@@ -947,10 +1006,22 @@ class BucketedTableStore:
         prior version's delta entries, carried forward for buckets NOT
         rewritten this commit (a base-rewriting commit reads the merged
         view, so the affected buckets' deltas are folded in and their
-        entries dropped)."""
-        v = (self.current_version(table) or 0) + 1
+        entries dropped).
+
+        ``base_version`` is the version ``df`` and ``carry`` were read
+        from; the commit's CAS fails unless it is still current. Left
+        None, the base is whatever is current when staging starts.
+        ``bucketing`` (columns, n) must be the carried entries'
+        bucketing; a full rewrite defaults to the declared keys."""
+        if base_version is None:
+            base_version = self.current_version(table) or 0
+        v = base_version + 1
         vrel = f"v={v}"
-        staging = self._bstage(table, df)
+        if bucketing is None:
+            bucketing = self._bucketing(table, None, df)
+        staging = self._bstage(
+            table, df.withColumn("__bucket", self._bucket_col(bucketing))
+        )
         if cdc_from_staged is not None:
             try:
                 staged = self.spark.read.parquet(
@@ -972,9 +1043,7 @@ class BucketedTableStore:
             )
         if delta_df is not None:
             (
-                delta_df.withColumn(
-                    "__bucket", self._bucket_col(table, delta_df)
-                )
+                delta_df.withColumn("__bucket", self._bucket_col(bucketing))
                 .write.partitionBy("__bucket")
                 .mode("overwrite")
                 .parquet(os.path.join(staging, "delta"))
@@ -999,7 +1068,7 @@ class BucketedTableStore:
                 if name.startswith("__bucket="):
                     k = name.removeprefix("__bucket=")
                     deltas.setdefault(k, []).append(f"{vrel}/delta/{name}")
-        manifest = {"schema": f"{vrel}/schema", "buckets": buckets}
+        manifest = self._new_manifest(vrel, df, bucketing, buckets)
         if deltas:
             manifest["deltas"] = deltas
         if manifest_extra:
@@ -1007,15 +1076,38 @@ class BucketedTableStore:
         self._bcommit(table, v, manifest, staging)
         return v
 
+    @staticmethod
+    def _new_manifest(
+        vrel: str, df: DataFrame, bucketing: tuple[list[str], int],
+        buckets: dict[str, list[str]],
+    ) -> dict:
+        """Manifest of a commit that staged ``df`` (its schema is the
+        one the anchor holds) hashed by ``bucketing``. Parquet reads
+        every column back nullable, so the recorded schema is too."""
+        return {
+            "schema": f"{vrel}/schema",
+            "data_schema": _as_nullable(df.schema).jsonValue(),
+            "bucket_keys": list(bucketing[0]),
+            "n_buckets": bucketing[1],
+            "buckets": buckets,
+        }
+
     def _bstage(self, table: str, df: DataFrame) -> str:
         """Write schema anchor + bucket-partitioned data into a private
-        staging dir (promoted or discarded at commit, as TableStore)."""
+        staging dir (promoted or discarded at commit, as TableStore).
+        Rows go to the bucket in ``df``'s ``__bucket`` column if it has
+        one, else to the bucket of the declared keys."""
+        if "__bucket" not in df.columns:
+            df = df.withColumn(
+                "__bucket", self._bucket_col(self._bucketing(table, None, df))
+            )
         os.makedirs(self._dir(table), exist_ok=True)
         staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
-        df.limit(0).write.mode("overwrite").parquet(os.path.join(staging, "schema"))
+        df.drop("__bucket").limit(0).write.mode("overwrite").parquet(
+            os.path.join(staging, "schema")
+        )
         (
-            df.withColumn("__bucket", self._bucket_col(table, df))
-            .write.partitionBy("__bucket")
+            df.write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(os.path.join(staging, "data"))
         )
@@ -1052,9 +1144,9 @@ class BucketedTableStore:
 
     # -- TableStore surface --------------------------------------------------
 
-    def _read_paths(
-        self, table: str, bucket_ids: set[int] | None, version: int | None = None
-    ) -> DataFrame:
+    def _resolve(self, table: str, version: int | None) -> dict:
+        """Manifest of ``version`` (None = current), which must be
+        retained."""
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"no such table: {table}")
@@ -1063,12 +1155,22 @@ class BucketedTableStore:
                 f"{table!r} version {version} not retained "
                 f"(retained: {self.versions(table)})"
             )
-        m = self._manifest(table, v)
+        return self._manifest(table, v)
+
+    def _scan(
+        self, table: str, m: dict, bucket_ids: set[int] | None
+    ) -> DataFrame:
+        """Rows of manifest ``m``, restricted to ``bucket_ids`` (None =
+        every bucket). Building the frame runs no Spark job when the
+        manifest records the schema."""
         paths = [os.path.join(self._dir(table), m["schema"])]
         for k, dirs in m["buckets"].items():
             if bucket_ids is None or int(k) in bucket_ids:
                 paths.extend(os.path.join(self._dir(table), d) for d in dirs)
-        base = self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        if "data_schema" in m:
+            reader = reader.schema(T.StructType.fromJson(m["data_schema"]))
+        base = reader.parquet(*paths)
         delta_paths = [
             os.path.join(self._dir(table), d)
             for k, dirs in m.get("deltas", {}).items()
@@ -1151,7 +1253,7 @@ class BucketedTableStore:
         (time travel). Version dirs are immutable after the pointer
         swap, so a reader holding version N sees a consistent snapshot
         regardless of concurrent mutations (snapshot isolation)."""
-        return self._read_paths(table, None, version)
+        return self._scan(table, self._resolve(table, version), None)
 
     def read_keyed(
         self, table: str, key_df: DataFrame, version: int | None = None
@@ -1164,21 +1266,24 @@ class BucketedTableStore:
         (hash-index point-read semantics from plain parquet); the
         reference got this from a Postgres PK btree, Delta/Iceberg from
         MERGE-style partition pruning. ``key_df`` carries exactly the
-        declared key columns; the tiny distinct-bucket collect is
+        declared key columns; the bucket-id collect is
         key-count-sized, never table-sized."""
         keys = self.keys.get(table)
         if not keys:
             raise ValueError(
                 f"read_keyed({table!r}): no declared bucket keys"
             )
-        probe = key_df.select(*keys).distinct()
+        m = self._resolve(table, version)
+        bucketing = self._keyed_bucketing(table, m)
+        # One bucket id per requested key, collected without a distinct
+        # (a shuffle, so two jobs): the probe is broadcast below, so the
+        # key set is driver-sized anyway.
         ids = {
             r["b"]
-            for r in probe.select(
-                self._bucket_col(table, probe).alias("b")
-            ).distinct().collect()
+            for r in key_df.select(self._bucket_col(bucketing).alias("b")).collect()
         }
-        part = self._read_paths(table, ids, version)
+        probe = key_df.select(*keys).distinct()
+        part = self._scan(table, m, ids)
         return part.join(F.broadcast(probe), list(keys), "left_semi")
 
     def overwrite(self, table: str, df: DataFrame) -> int:
@@ -1204,14 +1309,14 @@ class BucketedTableStore:
         ``apply_keyed_mutation(op="update")`` instead."""
         if not self.exists(table):
             return self.overwrite(table, df)
-        existing = set(self.read(table).columns)
+        v = self.current_version(table)
+        m = self._manifest(table, v)
+        existing = set(self._scan(table, m, None).columns)
         if set(df.columns) != existing:
             raise ValueError(
                 f"append to {table!r}: columns {sorted(set(df.columns))} "
                 f"do not match table columns {sorted(existing)}"
             )
-        v = self.current_version(table)
-        m = self._manifest(table, v)
         if m.get("deltas"):
             # Deltas only exist via apply_keyed_mutation, which
             # requires declared bucket keys — and those are the columns
@@ -1254,7 +1359,11 @@ class BucketedTableStore:
                     )
         new_v = (v or 0) + 1
         vrel = f"v={new_v}"
-        staging = self._bstage(table, df)
+        # new rows hash the way the carried buckets were written
+        bucketing = self._bucketing(table, m, df)
+        staging = self._bstage(
+            table, df.withColumn("__bucket", self._bucket_col(bucketing))
+        )
         buckets = {k: list(dirs) for k, dirs in m["buckets"].items()}
         data_dir = os.path.join(staging, "data")
         if os.path.isdir(data_dir):
@@ -1262,7 +1371,7 @@ class BucketedTableStore:
                 if name.startswith("__bucket="):
                     k = name.removeprefix("__bucket=")
                     buckets.setdefault(k, []).append(f"{vrel}/data/{name}")
-        manifest = {"schema": f"{vrel}/schema", "buckets": buckets}
+        manifest = self._new_manifest(vrel, df, bucketing, buckets)
         if m.get("deltas"):
             # enforced above: appended keys are disjoint from delta
             # keys, so carried deltas cannot shadow the new rows
@@ -1331,16 +1440,22 @@ class BucketedTableStore:
                 table, incoming.select(*data_cols).limit(0),
                 carry=None, affected=None,
             )
-        bucket = F.pmod(
-            F.xxhash64(*self.keys[table]), F.lit(self.n_buckets)
-        ).cast("int")
+        # Pin the base once: the affected buckets' read, the carried
+        # manifest and the commit's CAS all use version v0, so a commit
+        # landing in between fails this one (ConcurrentWriteError)
+        # instead of having its rows in the affected buckets erased.
+        v0 = self.current_version(table)
+        m = self._manifest(table, v0)
+        bucketing = self._keyed_bucketing(table, m)
         affected = {
             r["b"]
-            for r in incoming.select(bucket.alias("b")).distinct().collect()
+            for r in incoming.select(
+                self._bucket_col(bucketing).alias("b")
+            ).distinct().collect()
         }
         if strategy == "merge_on_read":
             v = self._apply_mutation_mor(
-                table, incoming, keys, order_by, op, affected
+                table, incoming, keys, order_by, op, affected, v0, m, bucketing
             )
             # Always return the MUTATION commit's version — callers
             # locate its CDC sidecar (cdc_dir(table, v)) or bound a
@@ -1369,7 +1484,7 @@ class BucketedTableStore:
                     except ConcurrentWriteError:
                         self.last_auto_compact_version = None
             return v
-        current = self._read_paths(table, affected)
+        current = self._scan(table, m, affected)
         if op == "insert":
             result = insert_if_absent(current, incoming, keys, order_by)
         elif op == "update":
@@ -1410,14 +1525,13 @@ class BucketedTableStore:
                     keys,
                 )
 
-        v = self.current_version(table)
-        m = self._manifest(table, v)
         # a copy-on-write commit reads the MERGED view of the affected
         # buckets, so their delta entries are folded into the rewritten
         # base; other buckets' deltas carry forward
         return self._write_version(
             table, result, carry=m["buckets"], affected=affected,
             cdc_from_staged=cdc_fn, carry_deltas=m.get("deltas"),
+            base_version=v0, bucketing=bucketing,
         )
 
     def _apply_mutation_mor(
@@ -1428,8 +1542,12 @@ class BucketedTableStore:
         order_by: list[str],
         op: str,
         affected: set[int],
+        v0: int,
+        m: dict,
+        bucketing: tuple[list[str], int],
     ) -> int:
-        """Merge-on-read write path: stage O(batch) delta rows — the
+        """Merge-on-read write path, based on version ``v0`` (manifest
+        ``m``, bucketed by ``bucketing``): stage O(batch) delta rows — the
         mutation's winners plus tombstones — and commit a manifest that
         carries EVERY base bucket forward untouched. The delta rows are
         exactly the reconciliation inputs: ``__mor_seq`` = this commit's
@@ -1472,9 +1590,9 @@ class BucketedTableStore:
             )
         # delta rows carry the BASE table's full column set (a delete
         # batch brings only keys — its tombstones get typed NULLs)
-        base_schema = self.read(table).schema
+        base_schema = self._scan(table, m, None).schema
         data_cols = [f.name for f in base_schema.fields]
-        v_next = (self.current_version(table) or 0) + 1
+        v_next = v0 + 1
         if op == "update":
             winners = _pick_per_key(incoming, keys, order_by, keep="last")
             delta = winners.select(*data_cols).withColumn(
@@ -1493,7 +1611,7 @@ class BucketedTableStore:
         elif op == "insert":
             first = _pick_per_key(incoming, keys, order_by, keep="first")
             live_keys = (
-                self._read_paths(table, affected)
+                self._scan(table, m, affected)
                 .select(*keys)
                 .dropDuplicates(list(keys))
             )
@@ -1510,7 +1628,7 @@ class BucketedTableStore:
         cdc_df = None
         if self.capture_cdc:
             batch_keys = incoming.select(*keys).distinct()
-            old_matched = self._read_paths(table, affected).join(
+            old_matched = self._scan(table, m, affected).join(
                 batch_keys, list(keys), "left_semi"
             )
             # the new key-matched slice IS the delta applied to the old
@@ -1521,16 +1639,16 @@ class BucketedTableStore:
                 delta.filter(~F.col("__mor_deleted")).select(*data_cols)
             )
             cdc_df = snapshot_diff(old_matched, new_matched, keys)
-        v = self.current_version(table)
-        m = self._manifest(table, v)
         return self._write_version(
             table,
-            self.read(table).select(*data_cols).limit(0),
+            self._scan(table, m, None).select(*data_cols).limit(0),
             carry=m["buckets"],
             affected=set(),
             cdc_df=cdc_df,
             delta_df=delta,
             carry_deltas=m.get("deltas"),
+            base_version=v0,
+            bucketing=bucketing,
         )
 
     def cdc_dir(self, table: str, v: int) -> str | None:
@@ -1623,10 +1741,11 @@ class BucketedTableStore:
         fragmented |= {int(k) for k in m.get("deltas", {})}
         if not fragmented:
             return None
-        rows = self._read_paths(table, fragmented)
+        rows = self._scan(table, m, fragmented)
         return self._write_version(
             table, rows, carry=m["buckets"], affected=fragmented,
             carry_deltas=m.get("deltas"),
+            base_version=v, bucketing=self._bucketing(table, m, rows),
             # marker: this commit changes LAYOUT, not data — change
             # feeds skip it instead of paying an empty snapshot_diff
             manifest_extra={"compaction": True},

@@ -163,7 +163,13 @@ class ApprovalPipeline:
             from etl_notifier_pipeline_spark.storage import BucketedTableStore
 
             root = self.store_root or tempfile.mkdtemp(prefix="pipeline_store_")
-            self.store = BucketedTableStore(self.spark, root, keys=self.keys)
+            # The ledger is keyed by event_id, like the reference's
+            # processed_files point queries: its lookups and status
+            # transitions touch only the batch's buckets.
+            self.store = BucketedTableStore(
+                self.spark, root,
+                keys={**self.keys, "processed_files": ["event_id"]},
+            )
         self.ledger = Ledger(self.spark, self.store)
         self.dead_letters: list[dict] = []
 

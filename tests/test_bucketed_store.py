@@ -1674,3 +1674,174 @@ class TestWriterRacingAutoCompaction:
         assert got == self._expected(
             n, [(0, 100.0), (1, 200.0), (5, 777.0)]
         )
+
+
+class TestPinnedBaseVersion:
+    """A keyed mutation reads the affected buckets, carries the other
+    buckets' manifest entries and commits against ONE pinned version.
+    A commit landing between its read and its commit must either fail
+    it (ConcurrentWriteError) or survive in the result — never have its
+    rows in the affected buckets silently erased."""
+
+    @pytest.mark.parametrize("strategy", ["copy_on_write", "merge_on_read"])
+    def test_append_between_read_and_commit_survives(
+        self, spark, tmp_path, monkeypatch, strategy
+    ):
+        from etl_notifier_pipeline_spark.storage import ConcurrentWriteError
+
+        # one bucket: the interleaved row is always in an affected bucket
+        store = BucketedTableStore(
+            spark, str(tmp_path / strategy), keys={"t": ["k"]}, n_buckets=1
+        )
+        store.overwrite("t", spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
+        real_scan = store._scan
+        fired = []
+
+        def racing_scan(*args, **kwargs):
+            out = real_scan(*args, **kwargs)
+            if not fired:
+                fired.append(True)
+                store.append("t", spark.createDataFrame([(3, "c")], ["k", "v"]))
+            return out
+
+        monkeypatch.setattr(store, "_scan", racing_scan)
+        incoming = spark.createDataFrame([(1, "A")], ["k", "v"]).withColumn(
+            "__file_order", F.monotonically_increasing_id()
+        )
+        try:
+            store.apply_keyed_mutation(
+                "t", incoming, ["k"], ["__file_order"], "update", strategy=strategy
+            )
+            committed = True
+        except ConcurrentWriteError:
+            committed = False
+        monkeypatch.undo()
+        assert fired, "the interleaved append never ran"
+        got = {r["k"]: r["v"] for r in store.read("t").collect()}
+        assert got.get(3) == "c", "the interleaved append was erased"
+        assert got == ({1: "A", 2: "b", 3: "c"} if committed else {1: "a", 2: "b", 3: "c"})
+        assert not [
+            p for p in os.listdir(tmp_path / strategy / "t") if p.startswith(".staging-")
+        ]
+
+
+class TestBucketingRecorded:
+    def test_manifest_records_schema_and_bucketing(self, spark, tmp_path):
+        store = BucketedTableStore(
+            spark, str(tmp_path / "m"), keys={"t": ["k"]}, n_buckets=4
+        )
+        store.overwrite("t", spark.createDataFrame([(1, "a")], "k int not null, v string"))
+        m = store._manifest("t", store.current_version("t"))
+        assert (m["bucket_keys"], m["n_buckets"]) == (["k"], 4)
+        from pyspark.sql import types as T
+
+        assert T.StructType.fromJson(m["data_schema"]) == store.read("t").schema
+        # the read schema is what a footer-inferring read reports
+        anchor = os.path.join(str(tmp_path / "m"), "t", m["schema"])
+        assert spark.read.parquet(anchor).schema == store.read("t").schema
+
+    def test_keyed_ops_refuse_other_bucketing(self, spark, tmp_path):
+        """Data bucketed by all columns must not be pruned by a key:
+        the key's bucket is not where the rows live."""
+        root = str(tmp_path / "mm")
+        rows = [(i, f"v{i}") for i in range(40)]
+        BucketedTableStore(spark, root, n_buckets=8).overwrite(
+            "t", spark.createDataFrame(rows, ["k", "v"])
+        )
+        keyed = BucketedTableStore(spark, root, keys={"t": ["k"]}, n_buckets=8)
+        probe = spark.createDataFrame([(5,)], ["k"])
+        with pytest.raises(ValueError, match="bucketed by"):
+            keyed.read_keyed("t", probe)
+        with pytest.raises(ValueError, match="bucketed by"):
+            keyed.apply_keyed_mutation(
+                "t", spark.createDataFrame([(5, "X")], ["k", "v"]),
+                ["k"], ["v"], "update",
+            )
+        assert sorted(tuple(r) for r in keyed.read("t").collect()) == rows
+        # an overwrite re-buckets by the declared keys; keyed ops then work
+        keyed.overwrite("t", keyed.read("t").localCheckpoint())
+        assert [tuple(r) for r in keyed.read_keyed("t", probe).collect()] == [(5, "v5")]
+
+    def test_recorded_bucket_count_wins(self, spark, tmp_path):
+        """A store opened with another n_buckets hashes by the count the
+        data was written with."""
+        root = str(tmp_path / "nb")
+        BucketedTableStore(spark, root, keys={"t": ["k"]}, n_buckets=4).overwrite(
+            "t", spark.createDataFrame([(i, f"v{i}") for i in range(40)], ["k", "v"])
+        )
+        other = BucketedTableStore(spark, root, keys={"t": ["k"]}, n_buckets=16)
+        probe = spark.createDataFrame([(i,) for i in range(0, 40, 7)], ["k"])
+        got = sorted(tuple(r) for r in other.read_keyed("t", probe).collect())
+        assert got == [(i, f"v{i}") for i in range(0, 40, 7)]
+        other.append("t", spark.createDataFrame([(99, "v99")], ["k", "v"]))
+        m = other._manifest("t", other.current_version("t"))
+        assert m["n_buckets"] == 4 and len(m["buckets"]) <= 4
+
+    def test_ledger_written_under_other_bucketing_is_refused(self, spark, tmp_path):
+        """A store_root whose ledger was bucketed by all columns: the
+        event_id-keyed pipeline must refuse it, not treat a redelivered
+        event as fresh and apply it twice."""
+        from tests.test_ledger_pipeline import batch, ev, make_arrivals
+        from etl_notifier_pipeline_spark.ledger import Ledger
+
+        root = str(tmp_path / "store")
+        csv_root = tmp_path / "csv"
+        csv_root.mkdir()
+        (csv_root / "people.csv").write_text("pid,name\n1,ann\n")
+        old = BucketedTableStore(spark, root, keys={"people": ["pid"]})
+        led = Ledger(spark, old)
+        led.record_arrivals(make_arrivals(spark, ("people.csv", "e1", "b", "insert")))
+        led.mark(spark.createDataFrame([("e1",)], ["event_id"]), "approved")
+        pipe = ApprovalPipeline(
+            spark=spark, notifier=LogNotifier(), keys={"people": ["pid"]},
+            csv_root=str(csv_root), store_root=root,
+        )
+        with pytest.raises(ValueError, match="bucketed by"):
+            pipe.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
+        assert not pipe.store.exists("people")
+
+
+class TestReadsLaunchNoJobs:
+    def test_read_and_pruned_read_build_without_jobs(self, spark, tmp_path, monkeypatch):
+        """Building a read of a 64-bucket table (65 root paths) lists
+        them on the driver and takes the schema from the manifest: no
+        listing job, no footer job. Inside read_keyed only the bucket-id
+        collect may run one."""
+        store = BucketedTableStore(
+            spark, str(tmp_path / "j"), keys={"t": ["k"]}, n_buckets=64
+        )
+        store.overwrite("t", spark.range(2000).select(
+            F.col("id").alias("k"), F.col("id").cast("string").alias("v")
+        ))
+        assert len(store._manifest("t", store.current_version("t"))["buckets"]) == 64
+        sc = spark.sparkContext
+
+        def jobs(fn, group):
+            sc.setJobGroup(group, group)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            # job-start events reach the status store asynchronously
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        _, n = jobs(lambda: spark.range(10).count(), "reads-control")
+        assert n >= 1, "the job counter sees no jobs at all"
+        df, n = jobs(lambda: store.read("t"), "reads-full")
+        assert n == 0
+        assert df.count() == 2000
+
+        real_scan = store._scan
+        scan_jobs = []
+
+        def counted_scan(*args, **kwargs):
+            out, k = jobs(lambda: real_scan(*args, **kwargs), "reads-pruned")
+            scan_jobs.append(k)
+            return out
+
+        monkeypatch.setattr(store, "_scan", counted_scan)
+        probe = spark.createDataFrame([(5,), (1234,)], ["k"])
+        got = store.read_keyed("t", probe)
+        assert scan_jobs == [0]
+        assert sorted(r["k"] for r in got.collect()) == [5, 1234]

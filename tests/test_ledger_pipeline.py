@@ -175,3 +175,113 @@ class TestApprovalPipeline:
         pipeline.run_batch(batch(spark, ev("e4", "approve", "people_del.csv", "people", "delete")))
         assert led.processed_files().collect()[0]["status"] == "failed"
         assert "no primary key" in pipeline.dead_letters[-1]["error"]
+
+
+class TestLedgerParityAcrossStores:
+    """The keyed ledger (the default BucketedTableStore, with
+    processed_files bucketed by event_id) and the overwrite ledger (a
+    plain TableStore) end one mixed sequence in the same state."""
+
+    def _run(self, spark, pipe):
+        led = pipe.ledger
+        led.record_arrivals(make_arrivals(
+            spark, ("people.csv", "e1", "b", "insert"),
+            ("people_v2.csv", "e2", "b", "update"),
+            ("people_del.csv", "e3", "b", "delete"),
+            ("people_v2.csv", "e4", "b", "update"),
+            ("missing.csv", "e5", "b", "insert"),
+        ))
+        pipe.run_batch(batch(
+            spark,
+            ev("e1", "approve", "people.csv", "people", "insert"),
+            ev("e2", "approve", "people_v2.csv", "people", "update"),
+            ev("e3", "approve", "people_del.csv", "people", "delete"),
+            ev("e4", "reject", "people_v2.csv", "people", "update"),
+            ev("e5", "approve", "missing.csv", "people", "insert"),
+        ), 0)
+        # redelivery of e2 (arrival and approval), and a second arrival
+        # of people.csv under a new event
+        led.record_arrivals(make_arrivals(
+            spark, ("people_v2.csv", "e2", "b", "update"),
+            ("people.csv", "e6", "b", "update"),
+        ))
+        pipe.run_batch(batch(
+            spark,
+            ev("e2", "approve", "people_v2.csv", "people", "update"),
+            ev("e6", "approve", "people.csv", "people", "update"),
+        ), 1)
+        assert pipe.drain_deletes() == 1
+        return pipe
+
+    @staticmethod
+    def _state(pipe):
+        from etl_notifier_pipeline_spark.ledger import (
+            DELETE_CONTROL_SCHEMA,
+            PROCESSED_FILES_SCHEMA,
+        )
+
+        def rows(table, cols):
+            return sorted(tuple(r) for r in pipe.store.read(table).select(*cols).collect())
+
+        dc = [f.name for f in DELETE_CONTROL_SCHEMA.fields if f.name != "executed_timestamp"]
+        return {
+            "processed_files": rows("processed_files", [f.name for f in PROCESSED_FILES_SCHEMA.fields]),
+            "delete_control": rows("delete_control", dc),
+            "dead_letters": rows("dead_letters", pipe.store.read("dead_letters").columns),
+            "people": rows("people", ["pid", "name"]),
+        }
+
+    def test_keyed_and_overwrite_ledgers_agree(self, spark, tmp_path):
+        from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
+
+        csv_root = tmp_path / "csv"
+        csv_root.mkdir()
+        (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
+        (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
+        (csv_root / "people_del.csv").write_text("pid,name\n1,ann\n")
+
+        def pipe(**store):
+            return ApprovalPipeline(
+                spark=spark, notifier=LogNotifier(), keys={"people": ["pid"]},
+                csv_root=str(csv_root), **store,
+            )
+
+        plain = self._run(spark, pipe(store=TableStore(spark, str(tmp_path / "plain"))))
+        keyed = self._run(spark, pipe(store_root=str(tmp_path / "keyed")))
+        assert isinstance(keyed.store, BucketedTableStore)
+        assert keyed.ledger._keyed() and not plain.ledger._keyed()
+        want = self._state(plain)
+        assert self._state(keyed) == want
+        assert {r[1]: r[6] for r in want["processed_files"]} == {
+            "e1": "approved", "e2": "approved", "e3": "approved",
+            "e4": "rejected", "e5": "failed", "e6": "approved",
+        }
+        assert want["people"] == [("2", "bob"), ("3", "cyd")]
+        assert len(plain.notifier.sent) == len(keyed.notifier.sent) == 6
+
+        # A mark_many rewrites only the buckets its event ids hash into.
+        ids = ["e7", "e8"]
+        for p in (plain, keyed):
+            p.ledger.record_arrivals(make_arrivals(
+                spark, *[("people.csv", e, "b", "insert") for e in ids]
+            ))
+        store = keyed.store
+        before = store._manifest("processed_files", store.current_version("processed_files"))
+        outcomes = spark.createDataFrame(
+            [(e, "rejected", True, "2026-01-02T00:00:00Z") for e in ids],
+            "event_id string, status string, is_processed boolean, approval_timestamp string",
+        )
+        for p in (plain, keyed):
+            p.ledger.mark_many(outcomes)
+        after = store._manifest("processed_files", store.current_version("processed_files"))
+        changed = {
+            int(k) for k in set(before["buckets"]) | set(after["buckets"])
+            if before["buckets"].get(k) != after["buckets"].get(k)
+        }
+        hashed = {
+            r["b"] for r in outcomes.select(
+                F.pmod(F.xxhash64("event_id"), F.lit(store.n_buckets)).alias("b")
+            ).collect()
+        }
+        assert changed == hashed
+        assert self._state(keyed) == self._state(plain)

@@ -54,42 +54,39 @@ def _api(spark, path: str):
 
 def _stages(spark) -> dict[int, dict]:
     app_id = spark.sparkContext.applicationId
-    try:
-        stages = _api(spark, f"applications/{app_id}/stages?status=complete")
-    except Exception:
-        return {}
-    return {
-        (s["stageId"], s["attemptId"]): s
-        for s in stages
-        if isinstance(s, dict)
-    }
+    stages = _api(spark, f"applications/{app_id}/stages?status=complete")
+    return {(s["stageId"], s["attemptId"]): s for s in stages}
 
 
-def _gc_and_heap(spark) -> tuple[int, int]:
+def _gc_and_heap(spark, peak: bool = True) -> tuple[int, int | None]:
     """(total JVM GC ms across executors, peak JVM heap bytes).
 
     GC time is cumulative per executor — diff it around a run. Peak
     heap is a high-water mark, not diffable, but still tells whether a
-    run operated near the heap ceiling (the GC-thrash regime)."""
+    run operated near the heap ceiling (the GC-thrash regime). Executors
+    report it with their heartbeats, so ``peak=False`` skips it (None)
+    for a read taken before any work ran.
+
+    Errors propagate: a failed metrics read aborts the run instead of
+    recording zeros."""
     app_id = spark.sparkContext.applicationId
-    try:
-        execs = _api(spark, f"applications/{app_id}/executors")
-    except Exception:
-        return 0, 0
-    gc = sum(int(e.get("totalGCTime", 0)) for e in execs)
-    peak = max(
-        (
-            int((e.get("peakMemoryMetrics") or {}).get("JVMHeapMemory", 0))
-            for e in execs
-        ),
-        default=0,
-    )
-    return gc, peak
+    execs = _api(spark, f"applications/{app_id}/executors")
+    gc = sum(int(e["totalGCTime"]) for e in execs)
+    if not peak:
+        return gc, None
+    peaks = [
+        int(e["peakMemoryMetrics"]["JVMHeapMemory"])
+        for e in execs
+        if "peakMemoryMetrics" in e
+    ]
+    if not peaks:
+        raise RuntimeError("no executor reports peakMemoryMetrics")
+    return gc, max(peaks)
 
 
 def measured_run(spark, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
     before = _stages(spark)
-    gc0, _ = _gc_and_heap(spark)
+    gc0 = _gc_and_heap(spark, peak=False)[0]
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
@@ -100,7 +97,7 @@ def measured_run(spark, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
         if key in before:
             continue
         for f in METRIC_FIELDS:
-            delta[f] += int(s.get(f, 0))
+            delta[f] += int(s[f])
     delta["jvmGcTimeMs"] = gc1 - gc0
     delta["peakJvmHeapBytes"] = peak
     return wall, delta
