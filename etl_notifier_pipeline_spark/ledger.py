@@ -16,25 +16,29 @@ Spark-first changes: idempotency and version assignment are
 set-at-a-time (anti-join / window) instead of per-event point queries;
 state lives in TableStore parquet versions with atomic pointer swaps.
 
-Cost per micro-batch. On a ``BucketedTableStore`` that declares
-``processed_files`` keyed by ``["event_id"]`` (the approval pipeline's
-default store does), the event-id lookups are the reference's point
-queries in batch form and touch only the buckets the batch's event ids
-hash into:
+Both tables are keyed (``LEDGER_KEYS``): ``processed_files`` by
+event_id, ``delete_control`` by query_id. Every lookup and transition
+is the store's keyed call — ``read_keyed`` or
+``apply_keyed_mutation(op="update")``, which reads at one pinned
+version and commits with a CAS on it — the batch form of the
+reference's keyed statements. A ``BucketedTableStore`` holding the
+ledger must declare these keys (the approval pipeline's default store
+does); its keyed calls touch only the buckets the batch's keys hash
+into:
 
 - ``filter_unprocessed`` and the redelivery anti-join in
   ``record_arrivals``: one ``read_keyed`` each, O(affected buckets);
 - ``mark_many``: ``read_keyed`` of the batch's rows, then a
-  copy-on-write ``apply_keyed_mutation(op="update")`` that rewrites
-  only those buckets (about 9 of 64 for a 10-event batch).
+  copy-on-write update that rewrites only those buckets (about 9 of
+  64 for a 10-event batch);
+- ``drain_deletes``: the update flipping ``executed_flag`` rewrites
+  only the pending query_ids' buckets.
 
 Still O(ledger): ``record_arrivals``' per-file base version, a scan of
 the two columns ``(file_name, file_version)`` semi-joined to the
-batch's file names (file names are not the bucketing key). The appends
-themselves are O(batch). ``delete_control`` is not bucketed by key, so
-``queue_deletes`` and ``drain_deletes`` stay O(delete_control). On any
-other store (a plain ``TableStore``) every lookup scans the ledger and
-``mark_many`` rewrites it whole.
+batch's file names (file names are not the bucketing key), and the
+pending scans of ``queue_deletes`` and ``drain_deletes``. The appends
+themselves are O(batch).
 """
 
 from __future__ import annotations
@@ -46,7 +50,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_notifier_pipeline_spark.storage import TableStore
+from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
 
 PROCESSED_FILES_SCHEMA = T.StructType(
     [
@@ -75,13 +79,17 @@ DELETE_CONTROL_SCHEMA = T.StructType(
     ]
 )
 
+# The ledger tables' keys: what its keyed reads and updates match on,
+# and what a BucketedTableStore holding the ledger must bucket it by.
+LEDGER_KEYS = {"processed_files": ["event_id"], "delete_control": ["query_id"]}
+
 VALID_STATUSES = ("pending", "approved", "rejected", "failed")
 
 
 @dataclass
 class Ledger:
     spark: SparkSession
-    store: TableStore
+    store: TableStore | BucketedTableStore
 
     def _empty(self, schema: T.StructType) -> DataFrame:
         return self.spark.createDataFrame([], schema)
@@ -91,18 +99,11 @@ class Ledger:
             return self.store.read("processed_files")
         return self._empty(PROCESSED_FILES_SCHEMA)
 
-    def _keyed(self) -> bool:
-        """The store buckets ``processed_files`` by event_id."""
-        keys = getattr(self.store, "keys", {}).get("processed_files")
-        return keys is not None and list(keys) == ["event_id"]
-
     def _rows_for(self, events: DataFrame) -> DataFrame:
-        """Every ledger row whose event_id is in ``events`` — plus, on a
-        store without the event_id bucketing, all the others (callers
-        join on event_id, so the extra rows never match)."""
-        if self._keyed() and self.store.exists("processed_files"):
-            return self.store.read_keyed("processed_files", events.select("event_id"))
-        return self.processed_files()
+        """Every ledger row whose event_id is in ``events``."""
+        if not self.store.exists("processed_files"):
+            return self._empty(PROCESSED_FILES_SCHEMA)
+        return self.store.read_keyed("processed_files", events.select("event_id"))
 
     def delete_control(self) -> DataFrame:
         if self.store.exists("delete_control"):
@@ -116,14 +117,15 @@ class Ledger:
         (``data-query.py:87-108``), assigning per-file versions
         set-at-a-time: next_version = MAX(existing)+row_number within
         the batch — the batch form of the reference's MAX+1
-        (``data-query.py:70-85``). Duplicate event_ids (redelivery) are
-        dropped by anti-join (ST1).
+        (``data-query.py:70-85``). Event_ids already in the ledger
+        (redelivery) are dropped by anti-join (ST1), and an event_id
+        delivered more than once in the batch keeps one row.
 
         ``arrivals`` columns: file_name, event_id, bucket, operation.
         """
         fresh = arrivals.join(
             self._rows_for(arrivals).select("event_id"), "event_id", "left_anti"
-        )
+        ).dropDuplicates(["event_id"])
         # The one O(ledger) scan left on the approval path: file names
         # are not the bucketing key, so this reads the two columns of
         # every row, keeping only the batch's files before the max.
@@ -190,47 +192,28 @@ class Ledger:
         event (r01 scale fix: per-event ``mark`` was O(events × ledger)
         per micro-batch).
 
-        On an event_id-bucketed store the commit is a keyed update of
-        the outcomes' rows: a ``read_keyed`` of those rows, then a
-        copy-on-write ``apply_keyed_mutation`` that rewrites only their
-        buckets. Elsewhere it is one read + overwrite of the ledger.
+        The commit is a keyed update of the outcomes' rows: a
+        ``read_keyed`` of those rows, then ``apply_keyed_mutation``.
 
         ``outcomes`` columns: event_id, status, is_processed,
         approval_timestamp. Duplicate event_ids keep one arbitrary row
         (callers produce at most one outcome per event); event_ids
         absent from the ledger are ignored.
         """
-        o = F.broadcast(
-            outcomes.select(
-                "event_id",
-                F.col("status").alias("__new_status"),
-                F.col("is_processed").alias("__new_processed"),
-                F.col("approval_timestamp").alias("__new_ts"),
-            ).dropDuplicates(["event_id"])
-        )
-        keyed = self._keyed()
+        new = outcomes.select(
+            "event_id", "status", "is_processed", "approval_timestamp"
+        ).dropDuplicates(["event_id"])
         updated = (
-            self._rows_for(outcomes).join(o, "event_id", "inner" if keyed else "left")
-            .withColumn("is_processed",
-                        F.coalesce(F.col("__new_processed"), F.col("is_processed")))
-            .withColumn(
-                "approval_timestamp",
-                F.when(F.col("__new_status").isNotNull(), F.col("__new_ts")).otherwise(
-                    F.col("approval_timestamp")
-                ),
-            )
-            .withColumn("status", F.coalesce(F.col("__new_status"), F.col("status")))
-            .drop("__new_status", "__new_processed", "__new_ts")
+            self._rows_for(outcomes)
+            .drop("status", "is_processed", "approval_timestamp")
+            .join(F.broadcast(new), "event_id")
+            .select([f.name for f in PROCESSED_FILES_SCHEMA.fields])
         )
-        if not keyed:
-            self.store.overwrite("processed_files", updated)
-            return
         # Batch-sized rows, used by the bucket-id collect, the
         # anti-join and the union of the mutation: compute them once.
         updated = updated.localCheckpoint()
-        self.store.apply_keyed_mutation(
-            "processed_files", updated, ["event_id"], ["event_id"], "update"
-        )
+        keys = LEDGER_KEYS["processed_files"]
+        self.store.apply_keyed_mutation("processed_files", updated, keys, keys, "update")
 
     # -- ST4: two-phase delete queue ----------------------------------------
 
@@ -302,18 +285,23 @@ class Ledger:
     def drain_deletes(self, apply_fn) -> int:
         """EP4 — execute all pending deletes (``delete-control.py:39-101``)
         set-at-a-time: hand the full pending frame to ``apply_fn``
-        (which runs the anti-join overwrites per target table), then
-        flip executed_flag in one overwrite."""
-        dc = self.delete_control()
-        pending = dc.filter(~F.col("executed_flag"))
+        (which runs the keyed deletes per target table), then flip
+        executed_flag on exactly those rows in one keyed update — a
+        delete queued meanwhile stays pending (or, if its commit lands
+        inside the update's read-to-commit window, the update fails
+        with ``ConcurrentWriteError`` and the drain can be rerun)."""
+        # Read once: the count, apply_fn's per-table key sets and the
+        # keyed update (its bucket-id collect, anti-join and union) all
+        # use these rows.
+        pending = self.delete_control().filter(~F.col("executed_flag")).localCheckpoint()
         n = pending.count()
         if n == 0:
             return 0
         apply_fn(pending)
         now = F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-        updated = dc.withColumn(
-            "executed_timestamp",
-            F.when(~F.col("executed_flag"), now).otherwise(F.col("executed_timestamp")),
-        ).withColumn("executed_flag", F.lit(True))
-        self.store.overwrite("delete_control", updated)
+        done = pending.withColumn("executed_flag", F.lit(True)).withColumn(
+            "executed_timestamp", now
+        )
+        keys = LEDGER_KEYS["delete_control"]
+        self.store.apply_keyed_mutation("delete_control", done, keys, keys, "update")
         return n

@@ -31,6 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_notifier_pipeline_spark.operators.mutations import (
+    _pick_per_key,
+    delete_by_keys,
+    insert_if_absent,
+    snapshot_diff,
+    upsert,
+)
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed a version after this write began.
@@ -257,6 +265,39 @@ class TableStore:
         if evolved or "#mergeSchema" in self._manifest_flags(table, cur):
             manifest = ["#mergeSchema", *manifest]
         self._commit(table, v, manifest, staging)
+        return v
+
+    # -- the keyed contract (shared with BucketedTableStore) -----------------
+
+    def read_keyed(self, table: str, key_df: DataFrame) -> DataFrame:
+        """Rows whose key — ``key_df``'s columns — is in ``key_df``: a
+        full read, then a broadcast semi-join. The unbucketed form of
+        ``BucketedTableStore.read_keyed``."""
+        probe = F.broadcast(key_df.distinct())
+        return self.read(table).join(probe, key_df.columns, "left_semi")
+
+    def apply_keyed_mutation(
+        self,
+        table: str,
+        incoming: DataFrame,
+        keys: list[str],
+        order_by: list[str],
+        op: str,
+    ) -> int:
+        """Keyed insert/update/delete (see ``_mutation_plan``) as a full
+        rewrite: the table is read at ONE pinned version and the commit's
+        CAS is on that version, so a commit landing in between fails
+        this one (``ConcurrentWriteError``) instead of being erased. A
+        missing table is created empty from the incoming data columns."""
+        if not self.exists(table):
+            data_cols = [c for c in incoming.columns if not c.startswith("__")]
+            self.overwrite(table, incoming.select(*data_cols).limit(0))
+        v0 = self.current_version(table)
+        result = _mutation_plan(
+            self.read(table, version=v0), incoming, keys, order_by, op
+        )
+        v = v0 + 1
+        self._commit(table, v, [f"v={v}"], self._stage(table, result))
         return v
 
     def versions(self, table: str) -> list[int]:
@@ -827,6 +868,24 @@ def _sweep_stale_staging(path: str, stale_s: float = 300.0) -> None:
         pass
 
 
+def _mutation_plan(
+    current: DataFrame, incoming: DataFrame, keys: list[str],
+    order_by: list[str], op: str,
+) -> DataFrame:
+    """The rows of ``current`` after a keyed ``op``: ``insert`` keeps
+    the first incoming row per absent key (``ON CONFLICT DO NOTHING``),
+    ``update`` the last incoming row per key (upsert), ``delete`` drops
+    the incoming keys. ``incoming`` may carry ``__``-prefixed helper
+    columns for ``order_by``."""
+    if op == "insert":
+        return insert_if_absent(current, incoming, keys, order_by)
+    if op == "update":
+        return upsert(current, incoming, keys, order_by)
+    if op == "delete":
+        return delete_by_keys(current, incoming.select(*keys), keys)
+    raise ValueError(f"unknown operation {op!r}")
+
+
 class BucketedTableStore:
     """Key-hash-bucketed TableStore: incremental keyed mutations.
 
@@ -837,22 +896,21 @@ class BucketedTableStore:
     gap with MERGE. Without either in the container, this backend gets
     the same I/O bound from deterministic hash bucketing:
 
-        <root>/<table>/v=<n>/schema/            # 0-row schema anchor
         <root>/<table>/v=<n>/data/__bucket=<k>/part-*.parquet
         <root>/<table>/v=<n>/_manifest.json
         <root>/<table>/_CURRENT                 # "v=<n>"
 
     with the manifest
 
-        {"schema": "v=<n>/schema",
-         "data_schema": <StructType JSON>,       # the read schema
+        {"data_schema": <StructType JSON>,       # the read schema
          "bucket_keys": ["k", ...],              # hashed columns, in order
          "n_buckets": 64,
          "buckets": {"<k>": ["v=<m>/data/__bucket=<k>", ...]},
          "deltas": {"<k>": [...]}}               # merge-on-read only
 
     Reads pass ``data_schema`` to the parquet reader, so building a
-    read launches no footer-inference job. ``bucket_keys`` and
+    read launches no footer-inference job, and a read of zero bucket
+    dirs is an empty typed frame. ``bucket_keys`` and
     ``n_buckets`` record how the data was bucketed: writes that keep
     some buckets (append, keyed mutations, compaction) hash new rows
     the same way, and keyed reads and mutations refuse to prune when
@@ -933,7 +991,7 @@ class BucketedTableStore:
             return int(f.read().strip().removeprefix("v="))
 
     def _manifest(self, table: str, v: int) -> dict:
-        """{"schema": reldir, "buckets": {"<k>": [reldir, ...]}}."""
+        """Version ``v``'s manifest (layout in the class docstring)."""
         import json
 
         with open(os.path.join(self._dir(table), f"v={v}", "_manifest.json")) as f:
@@ -1022,20 +1080,14 @@ class BucketedTableStore:
         staging = self._bstage(
             table, df.withColumn("__bucket", self._bucket_col(bucketing))
         )
+        data_dir = os.path.join(staging, "data")
+        staged_buckets = [
+            n for n in os.listdir(data_dir) if n.startswith("__bucket=")
+        ]
         if cdc_from_staged is not None:
-            try:
-                staged = self.spark.read.parquet(
-                    os.path.join(staging, "data")
-                )
-                staged = staged.select(
-                    *[c for c in staged.columns if c != "__bucket"]
-                )
-            except Exception:
-                # zero staged rows -> no partition dirs to infer from;
-                # the schema anchor gives the empty typed frame
-                staged = self.spark.read.parquet(
-                    os.path.join(staging, "schema")
-                )
+            staged = self.spark.read.schema(_as_nullable(df.schema)).parquet(
+                *[os.path.join(data_dir, n) for n in staged_buckets]
+            )
             cdc_df = cdc_from_staged(staged)
         if cdc_df is not None:
             cdc_df.write.mode("overwrite").parquet(
@@ -1052,12 +1104,8 @@ class BucketedTableStore:
         for k, dirs in (carry or {}).items():
             if affected is None or int(k) not in affected:
                 buckets[k] = dirs
-        data_dir = os.path.join(staging, "data")
-        if os.path.isdir(data_dir):
-            for name in os.listdir(data_dir):
-                if name.startswith("__bucket="):
-                    k = name.removeprefix("__bucket=")
-                    buckets[k] = [f"{vrel}/data/{name}"]
+        for name in staged_buckets:
+            buckets[name.removeprefix("__bucket=")] = [f"{vrel}/data/{name}"]
         deltas: dict[str, list[str]] = {}
         for k, dirs in (carry_deltas or {}).items():
             if affected is None or int(k) not in affected:
@@ -1081,11 +1129,10 @@ class BucketedTableStore:
         vrel: str, df: DataFrame, bucketing: tuple[list[str], int],
         buckets: dict[str, list[str]],
     ) -> dict:
-        """Manifest of a commit that staged ``df`` (its schema is the
-        one the anchor holds) hashed by ``bucketing``. Parquet reads
-        every column back nullable, so the recorded schema is too."""
+        """Manifest of a commit that staged ``df`` hashed by
+        ``bucketing``. Parquet reads every column back nullable, so the
+        recorded schema is too."""
         return {
-            "schema": f"{vrel}/schema",
             "data_schema": _as_nullable(df.schema).jsonValue(),
             "bucket_keys": list(bucketing[0]),
             "n_buckets": bucketing[1],
@@ -1093,19 +1140,16 @@ class BucketedTableStore:
         }
 
     def _bstage(self, table: str, df: DataFrame) -> str:
-        """Write schema anchor + bucket-partitioned data into a private
-        staging dir (promoted or discarded at commit, as TableStore).
-        Rows go to the bucket in ``df``'s ``__bucket`` column if it has
-        one, else to the bucket of the declared keys."""
+        """Write bucket-partitioned data into a private staging dir
+        (promoted or discarded at commit, as TableStore). Rows go to the
+        bucket in ``df``'s ``__bucket`` column if it has one, else to
+        the bucket of the declared keys."""
         if "__bucket" not in df.columns:
             df = df.withColumn(
                 "__bucket", self._bucket_col(self._bucketing(table, None, df))
             )
         os.makedirs(self._dir(table), exist_ok=True)
         staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
-        df.drop("__bucket").limit(0).write.mode("overwrite").parquet(
-            os.path.join(staging, "schema")
-        )
         (
             df.write.partitionBy("__bucket")
             .mode("overwrite")
@@ -1161,16 +1205,22 @@ class BucketedTableStore:
         self, table: str, m: dict, bucket_ids: set[int] | None
     ) -> DataFrame:
         """Rows of manifest ``m``, restricted to ``bucket_ids`` (None =
-        every bucket). Building the frame runs no Spark job when the
-        manifest records the schema."""
-        paths = [os.path.join(self._dir(table), m["schema"])]
-        for k, dirs in m["buckets"].items():
-            if bucket_ids is None or int(k) in bucket_ids:
-                paths.extend(os.path.join(self._dir(table), d) for d in dirs)
-        reader = self.spark.read
-        if "data_schema" in m:
-            reader = reader.schema(T.StructType.fromJson(m["data_schema"]))
-        base = reader.parquet(*paths)
+        every bucket). Building the frame runs no Spark job: the schema
+        comes from the manifest."""
+        if "data_schema" not in m:
+            raise ValueError(
+                f"{table!r}: its manifest records no data_schema (written "
+                f"by older code). Overwrite the table to re-bucket it."
+            )
+        paths = [
+            os.path.join(self._dir(table), d)
+            for k, dirs in m["buckets"].items()
+            if bucket_ids is None or int(k) in bucket_ids
+            for d in dirs
+        ]
+        base = self.spark.read.schema(
+            T.StructType.fromJson(m["data_schema"])
+        ).parquet(*paths)
         delta_paths = [
             os.path.join(self._dir(table), d)
             for k, dirs in m.get("deltas", {}).items()
@@ -1242,7 +1292,7 @@ class BucketedTableStore:
             if v > cur:
                 continue  # orphan above the pointer: never committed
             m = self._manifest(table, v)
-            refs = [m["schema"]] + [d for dirs in m["buckets"].values() for d in dirs]
+            refs = [d for dirs in m["buckets"].values() for d in dirs]
             refs += [d for dirs in m.get("deltas", {}).values() for d in dirs]
             if all(os.path.exists(os.path.join(self._dir(table), d)) for d in refs):
                 out.append(v)
@@ -1417,14 +1467,6 @@ class BucketedTableStore:
           ``compact()`` folds the deltas into the base. Same winners
           as copy_on_write (pinned in tests/test_bucketed_store.py).
         """
-        from pyspark.sql import functions as F
-
-        from etl_notifier_pipeline_spark.operators.mutations import (
-            delete_by_keys,
-            insert_if_absent,
-            upsert,
-        )
-
         if self.keys.get(table) is None:
             raise ValueError(
                 f"apply_keyed_mutation needs declared bucket keys for {table!r}"
@@ -1485,20 +1527,9 @@ class BucketedTableStore:
                         self.last_auto_compact_version = None
             return v
         current = self._scan(table, m, affected)
-        if op == "insert":
-            result = insert_if_absent(current, incoming, keys, order_by)
-        elif op == "update":
-            result = upsert(current, incoming, keys, order_by)
-        elif op == "delete":
-            result = delete_by_keys(current, incoming.select(*keys), keys)
-        else:
-            raise ValueError(f"unknown operation {op!r}")
+        result = _mutation_plan(current, incoming, keys, order_by, op)
         cdc_fn = None
         if self.capture_cdc:
-            from etl_notifier_pipeline_spark.operators.mutations import (
-                snapshot_diff,
-            )
-
             # The staged data files and the CDC sidecar must describe
             # the SAME evaluation of `result`: with order_by ties, two
             # executions could pick different winners — committing
@@ -1559,11 +1590,6 @@ class BucketedTableStore:
         key-matched old slice against the delta applied to it — the
         same slice semantics as copy_on_write, derived from the single
         checkpointed delta so data and feed cannot disagree."""
-        from etl_notifier_pipeline_spark.operators.mutations import (
-            _pick_per_key,
-            snapshot_diff,
-        )
-
         # Read-side reconciliation (_reconcile_deltas) shadows by the
         # DECLARED bucket keys; a delta written under different key
         # columns would be reconciled wrongly and append()'s shadow
@@ -1663,7 +1689,7 @@ class BucketedTableStore:
     def restore(self, table: str, version: int) -> int:
         """Metadata-only rollback, the bucketed twin of
         ``TableStore.restore``: commit a new version whose manifest
-        (schema anchor + per-bucket dir lists) is ``version``'s
+        (per-bucket dir lists and their schema) is ``version``'s
         verbatim. Zero data movement; undone versions stay
         time-travelable until vacuumed.
 
@@ -1770,7 +1796,6 @@ class BucketedTableStore:
             vdir = os.path.join(self._dir(table), f"v={recent}")
             if os.path.isdir(vdir):
                 m = self._manifest(table, recent)
-                referenced.add(m["schema"].split("/", 1)[0])
                 referenced.add(f"v={recent}")
                 for dirs in m["buckets"].values():
                     for d in dirs:
@@ -1788,50 +1813,3 @@ class BucketedTableStore:
             elif name.startswith(".staging-"):
                 _sweep_stale_staging(os.path.join(self._dir(table), name))
 
-
-class CatalogTableStore:
-    """Metastore-backed TableStore twin (SURVEY §1.3's
-    ``df.write.saveAsTable`` mapping): tables live in the session
-    catalog / warehouse dir under a namespace instead of the
-    pointer-file layout. Same duck-typed surface the control plane uses
-    (exists/read/overwrite/append), so ``Ledger``/``ApprovalPipeline``
-    run unchanged against either backend.
-
-    Trade-offs vs ``TableStore`` (deliberate, documented): the catalog
-    handles concurrent readers and name resolution, and ``append`` is a
-    true file-level append; but plain-parquet ``saveAsTable`` overwrite
-    is not atomic mid-write — pick THIS backend when a metastore is the
-    deployment target (with Delta/Iceberg providing the transactional
-    overwrite), the pointer-swap backend when it is not.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str = "engine") -> None:
-        self.spark = spark
-        self.namespace = namespace
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-
-    def _qualified(self, table: str) -> str:
-        return f"{self.namespace}.{table}"
-
-    def exists(self, table: str) -> bool:
-        return self.spark.catalog.tableExists(self._qualified(table))
-
-    def read(self, table: str) -> DataFrame:
-        return self.spark.table(self._qualified(table))
-
-    def overwrite(self, table: str, df: DataFrame) -> int:
-        # Self-referential overwrites (the mutation pattern: read t,
-        # transform, write t) must materialize first — saveAsTable
-        # cannot scan the table it is truncating. localCheckpoint keeps
-        # the materialization distributed (executor-local blocks, no
-        # driver collect).
-        if self.exists(table):
-            df = df.localCheckpoint()
-        df.write.mode("overwrite").format("parquet").saveAsTable(
-            self._qualified(table)
-        )
-        return 0
-
-    def append(self, table: str, df: DataFrame) -> int:
-        df.write.mode("append").format("parquet").saveAsTable(self._qualified(table))
-        return 0

@@ -32,10 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_notifier_pipeline_spark.functions import decode_event_payload
-from etl_notifier_pipeline_spark.ledger import Ledger
-from etl_notifier_pipeline_spark.operators import delete_by_keys, insert_if_absent, upsert
+from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS, Ledger
 from etl_notifier_pipeline_spark.sources.ingest import read_csv_all_string
-from etl_notifier_pipeline_spark.storage import TableStore
+from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
 
 log = logging.getLogger(__name__)
 
@@ -141,11 +140,13 @@ class ApprovalPipeline:
     keys: dict[str, list[str]]  # table -> primary-key columns (replaces S6 catalog)
     csv_root: str  # where "bucket" files live locally
     # Default backend is the incremental BucketedTableStore (built at
-    # ``store_root``, or a temp dir if unset): keyed mutations rewrite
-    # O(affected buckets), not O(table) — the 100 TB-survivable default.
-    # Pass ``store=`` explicitly (e.g. a plain full-rewrite TableStore)
-    # to opt out.
-    store: TableStore | None = None
+    # ``store_root``, or a temp dir if unset, declaring ``keys`` plus
+    # the ledger's ``LEDGER_KEYS``): keyed mutations rewrite O(affected
+    # buckets), not O(table) — the 100 TB-survivable default. Any store
+    # with the keyed calls works (e.g. a plain full-rewrite TableStore);
+    # a BucketedTableStore passed as ``store=`` must declare the same
+    # keys.
+    store: TableStore | BucketedTableStore | None = None
     store_root: str | None = None
     # Driver-side staging iterates the micro-batch's approval events
     # (human-in-the-loop click rates — tens, not millions). Nothing
@@ -160,15 +161,11 @@ class ApprovalPipeline:
         if self.store is None:
             import tempfile
 
-            from etl_notifier_pipeline_spark.storage import BucketedTableStore
-
             root = self.store_root or tempfile.mkdtemp(prefix="pipeline_store_")
-            # The ledger is keyed by event_id, like the reference's
-            # processed_files point queries: its lookups and status
-            # transitions touch only the batch's buckets.
+            # The ledger's lookups and status transitions touch only the
+            # batch's buckets, like the reference's keyed point queries.
             self.store = BucketedTableStore(
-                self.spark, root,
-                keys={**self.keys, "processed_files": ["event_id"]},
+                self.spark, root, keys={**self.keys, **LEDGER_KEYS}
             )
         self.ledger = Ledger(self.spark, self.store)
         self.dead_letters: list[dict] = []
@@ -238,8 +235,12 @@ class ApprovalPipeline:
                 f"plane; a machine-scale feed on this topic is a "
                 f"wiring bug (raise the cap explicitly to override)"
             )
+        seen: set[str] = set()
         for row in staged_rows:
             ev = row.asDict()
+            if ev["event_id"] in seen:  # delivered twice in this batch
+                continue
+            seen.add(ev["event_id"])
             try:
                 staged = self._stage_event(ev)
             except Exception as exc:
@@ -394,25 +395,13 @@ class ApprovalPipeline:
             if op == "insert"
             else f"Upserted file rows into {table}."
         )
-        if keys and hasattr(self.store, "apply_keyed_mutation"):
-            # Incremental backend (BucketedTableStore / Delta-shaped):
-            # the store rewrites only the buckets the incoming keys
-            # hash into — O(affected buckets), not O(table).
+        if keys:
+            # S8: the store creates the table on first arrival (all-
+            # string from headers); a BucketedTableStore rewrites only
+            # the buckets the incoming keys hash into.
             self.store.apply_keyed_mutation(table, combined, keys, order, op)
-            return {ev["event_id"]: details for ev, _ in items}
-        if not self.store.exists(table):
-            # S8: create on first arrival — all-string from headers
-            self.store.overwrite(table, combined.drop(*helper).limit(0))
-        target = self.store.read(table)
-        if op == "insert":
-            result = (
-                insert_if_absent(target, combined, keys, order)
-                if keys
-                else target.unionByName(combined.drop(*helper))
-            )
         else:
-            result = upsert(target, combined, keys, order)
-        self.store.overwrite(table, result)
+            self.store.append(table, combined.drop(*helper))
         return {ev["event_id"]: details for ev, _ in items}
 
     # -- EP4: scheduled delete drain ---------------------------------------
@@ -430,12 +419,7 @@ class ApprovalPipeline:
                     .select(F.from_json("key_json", key_schema).alias("k"))
                     .select("k.*")
                 )
-                if hasattr(self.store, "apply_keyed_mutation"):
-                    self.store.apply_keyed_mutation(table, key_df, keys, [], "delete")
-                else:
-                    self.store.overwrite(
-                        table, delete_by_keys(self.store.read(table), key_df, keys)
-                    )
+                self.store.apply_keyed_mutation(table, key_df, keys, [], "delete")
 
         return self.ledger.drain_deletes(apply)
 

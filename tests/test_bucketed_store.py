@@ -59,7 +59,9 @@ class TestIncrementalBytes:
 
     def test_matches_full_rewrite_backend(self, spark, bstore, tmp_path):
         """Same winners as the plain TableStore full-rewrite path for
-        insert (first-per-key), update (last-per-key) and delete."""
+        insert (first-per-key), update (last-per-key) and delete — both
+        through BucketedTableStore's and TableStore's
+        apply_keyed_mutation, against hand-rolled plans."""
         from etl_notifier_pipeline_spark.operators.mutations import (
             delete_by_keys,
             insert_if_absent,
@@ -71,6 +73,8 @@ class TestIncrementalBytes:
         )
         plain = TableStore(spark, str(tmp_path / "plain"))
         plain.overwrite("t", base)
+        keyed_plain = TableStore(spark, str(tmp_path / "keyed_plain"))
+        keyed_plain.overwrite("t", base)
         bstore.overwrite("t", base)
 
         ins = spark.createDataFrame(
@@ -85,11 +89,13 @@ class TestIncrementalBytes:
         plain.overwrite("t", upsert(plain.read("t"), upd, ["k"], ["__file_order"]))
         plain.overwrite("t", delete_by_keys(plain.read("t"), dels, ["k"]))
 
-        bstore.apply_keyed_mutation("t", ins, ["k"], ["__file_order"], "insert")
-        bstore.apply_keyed_mutation("t", upd, ["k"], ["__file_order"], "update")
-        bstore.apply_keyed_mutation("t", dels, ["k"], [], "delete")
+        for store in (bstore, keyed_plain):
+            store.apply_keyed_mutation("t", ins, ["k"], ["__file_order"], "insert")
+            store.apply_keyed_mutation("t", upd, ["k"], ["__file_order"], "update")
+            store.apply_keyed_mutation("t", dels, ["k"], [], "delete")
 
         want = sorted(tuple(r) for r in plain.read("t").collect())
+        assert sorted(tuple(r) for r in keyed_plain.read("t").collect()) == want
         got = sorted(tuple(r) for r in bstore.read("t").collect())
         assert got == want
         assert (2, "newest") in got and (1, "v1") in got
@@ -143,8 +149,11 @@ class TestPipelineOnBucketedBackend:
         """Full approval lifecycle on the bucketed backend: mutations go
         through apply_keyed_mutation (no full-table rewrite), results
         identical to the pointer-swap backend."""
+        from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS
+
         store = BucketedTableStore(
-            spark, str(tmp_path / "store"), keys={"people": ["pid"]}, n_buckets=8
+            spark, str(tmp_path / "store"),
+            keys={"people": ["pid"], **LEDGER_KEYS}, n_buckets=8,
         )
         csv_root = tmp_path / "bucket"
         csv_root.mkdir()
@@ -1683,34 +1692,39 @@ class TestPinnedBaseVersion:
     it (ConcurrentWriteError) or survive in the result — never have its
     rows in the affected buckets silently erased."""
 
-    @pytest.mark.parametrize("strategy", ["copy_on_write", "merge_on_read"])
+    @pytest.mark.parametrize("backend", ["copy_on_write", "merge_on_read", "table_store"])
     def test_append_between_read_and_commit_survives(
-        self, spark, tmp_path, monkeypatch, strategy
+        self, spark, tmp_path, monkeypatch, backend
     ):
         from etl_notifier_pipeline_spark.storage import ConcurrentWriteError
 
-        # one bucket: the interleaved row is always in an affected bucket
-        store = BucketedTableStore(
-            spark, str(tmp_path / strategy), keys={"t": ["k"]}, n_buckets=1
-        )
+        if backend == "table_store":
+            store = TableStore(spark, str(tmp_path / backend))
+            read_fn, kwargs = "read", {}
+        else:
+            # one bucket: the interleaved row is always in an affected bucket
+            store = BucketedTableStore(
+                spark, str(tmp_path / backend), keys={"t": ["k"]}, n_buckets=1
+            )
+            read_fn, kwargs = "_scan", {"strategy": backend}
         store.overwrite("t", spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]))
-        real_scan = store._scan
+        real_read = getattr(store, read_fn)
         fired = []
 
-        def racing_scan(*args, **kwargs):
-            out = real_scan(*args, **kwargs)
+        def racing_read(*args, **kw):
+            out = real_read(*args, **kw)
             if not fired:
                 fired.append(True)
                 store.append("t", spark.createDataFrame([(3, "c")], ["k", "v"]))
             return out
 
-        monkeypatch.setattr(store, "_scan", racing_scan)
+        monkeypatch.setattr(store, read_fn, racing_read)
         incoming = spark.createDataFrame([(1, "A")], ["k", "v"]).withColumn(
             "__file_order", F.monotonically_increasing_id()
         )
         try:
             store.apply_keyed_mutation(
-                "t", incoming, ["k"], ["__file_order"], "update", strategy=strategy
+                "t", incoming, ["k"], ["__file_order"], "update", **kwargs
             )
             committed = True
         except ConcurrentWriteError:
@@ -1721,7 +1735,7 @@ class TestPinnedBaseVersion:
         assert got.get(3) == "c", "the interleaved append was erased"
         assert got == ({1: "A", 2: "b", 3: "c"} if committed else {1: "a", 2: "b", 3: "c"})
         assert not [
-            p for p in os.listdir(tmp_path / strategy / "t") if p.startswith(".staging-")
+            p for p in os.listdir(tmp_path / backend / "t") if p.startswith(".staging-")
         ]
 
 
@@ -1736,9 +1750,6 @@ class TestBucketingRecorded:
         from pyspark.sql import types as T
 
         assert T.StructType.fromJson(m["data_schema"]) == store.read("t").schema
-        # the read schema is what a footer-inferring read reports
-        anchor = os.path.join(str(tmp_path / "m"), "t", m["schema"])
-        assert spark.read.parquet(anchor).schema == store.read("t").schema
 
     def test_keyed_ops_refuse_other_bucketing(self, spark, tmp_path):
         """Data bucketed by all columns must not be pruned by a key:
@@ -1781,17 +1792,21 @@ class TestBucketingRecorded:
         """A store_root whose ledger was bucketed by all columns: the
         event_id-keyed pipeline must refuse it, not treat a redelivered
         event as fresh and apply it twice."""
-        from tests.test_ledger_pipeline import batch, ev, make_arrivals
-        from etl_notifier_pipeline_spark.ledger import Ledger
+        from tests.test_ledger_pipeline import batch, ev
+        from etl_notifier_pipeline_spark.ledger import PROCESSED_FILES_SCHEMA
 
         root = str(tmp_path / "store")
         csv_root = tmp_path / "csv"
         csv_root.mkdir()
         (csv_root / "people.csv").write_text("pid,name\n1,ann\n")
         old = BucketedTableStore(spark, root, keys={"people": ["pid"]})
-        led = Ledger(spark, old)
-        led.record_arrivals(make_arrivals(spark, ("people.csv", "e1", "b", "insert")))
-        led.mark(spark.createDataFrame([("e1",)], ["event_id"]), "approved")
+        old.append("processed_files", spark.createDataFrame(
+            [("people.csv", "e1", 1, True, "b", "insert", "approved", None)],
+            PROCESSED_FILES_SCHEMA,
+        ))
+        assert old._manifest("processed_files", 1)["bucket_keys"] == [
+            f.name for f in PROCESSED_FILES_SCHEMA.fields
+        ]
         pipe = ApprovalPipeline(
             spark=spark, notifier=LogNotifier(), keys={"people": ["pid"]},
             csv_root=str(csv_root), store_root=root,

@@ -63,6 +63,47 @@ class TestLedger:
         again = led.queue_deletes(reqs)
         assert again.count() == 0
 
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
+    def test_delete_queued_during_drain_stays_pending(self, spark, tmp_path, backend):
+        """A delete queued while a drain runs its deletes is either left
+        pending by the drain's executed-flag flip, or fails the flip
+        with ConcurrentWriteError — never marked executed unapplied or
+        erased."""
+        from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS
+        from etl_notifier_pipeline_spark.storage import (
+            BucketedTableStore,
+            ConcurrentWriteError,
+            TableStore,
+        )
+
+        root = str(tmp_path / backend)
+        store = (
+            TableStore(spark, root) if backend == "table_store"
+            else BucketedTableStore(spark, root, keys=LEDGER_KEYS)
+        )
+        led = Ledger(spark, store)
+
+        def req(k):
+            return spark.createDataFrame(
+                [("e1", "t", f'{{"k":"{k}"}}')], ["event_id", "target_table", "key_json"]
+            )
+
+        led.queue_deletes(req(1))
+        applied = []
+
+        def apply_fn(pending):
+            applied.extend(r["key_json"] for r in pending.collect())
+            led.queue_deletes(req(2))
+
+        try:
+            assert led.drain_deletes(apply_fn) == 1
+            drained = True
+        except ConcurrentWriteError:
+            drained = False
+        assert applied == ['{"k":"1"}']
+        flags = {r["key_json"]: r["executed_flag"] for r in led.delete_control().collect()}
+        assert flags == {'{"k":"1"}': drained, '{"k":"2"}': False}
+
 
 @pytest.fixture()
 def pipeline(spark, tmp_store, tmp_path):
@@ -190,9 +231,16 @@ class TestLedgerParityAcrossStores:
             ("people_del.csv", "e3", "b", "delete"),
             ("people_v2.csv", "e4", "b", "update"),
             ("missing.csv", "e5", "b", "insert"),
+            # delivered twice in one batch: one ledger row, version 1
+            ("people_add.csv", "e9", "b", "insert"),
+            ("people_add.csv", "e9", "b", "insert"),
         ))
+        e9 = led.processed_files().filter(F.col("event_id") == "e9")
+        assert [r["file_version"] for r in e9.collect()] == [1]
         pipe.run_batch(batch(
             spark,
+            ev("e9", "approve", "people_add.csv", "people", "insert"),
+            ev("e9", "approve", "people_add.csv", "people", "insert"),
             ev("e1", "approve", "people.csv", "people", "insert"),
             ev("e2", "approve", "people_v2.csv", "people", "update"),
             ev("e3", "approve", "people_del.csv", "people", "delete"),
@@ -239,6 +287,7 @@ class TestLedgerParityAcrossStores:
         (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
         (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
         (csv_root / "people_del.csv").write_text("pid,name\n1,ann\n")
+        (csv_root / "people_add.csv").write_text("pid,name\n4,dee\n")
 
         def pipe(**store):
             return ApprovalPipeline(
@@ -249,15 +298,18 @@ class TestLedgerParityAcrossStores:
         plain = self._run(spark, pipe(store=TableStore(spark, str(tmp_path / "plain"))))
         keyed = self._run(spark, pipe(store_root=str(tmp_path / "keyed")))
         assert isinstance(keyed.store, BucketedTableStore)
-        assert keyed.ledger._keyed() and not plain.ledger._keyed()
         want = self._state(plain)
         assert self._state(keyed) == want
         assert {r[1]: r[6] for r in want["processed_files"]} == {
             "e1": "approved", "e2": "approved", "e3": "approved",
             "e4": "rejected", "e5": "failed", "e6": "approved",
+            "e9": "approved",
         }
-        assert want["people"] == [("2", "bob"), ("3", "cyd")]
-        assert len(plain.notifier.sent) == len(keyed.notifier.sent) == 6
+        assert [r[2] for r in want["processed_files"] if r[1] == "e9"] == [1]
+        assert want["people"] == [("2", "bob"), ("3", "cyd"), ("4", "dee")]
+        for p in (plain, keyed):
+            assert len(p.notifier.sent) == 7
+            assert sum("(Event ID: e9)" in body for _, body in p.notifier.sent) == 1
 
         # A mark_many rewrites only the buckets its event ids hash into.
         ids = ["e7", "e8"]

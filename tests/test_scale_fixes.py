@@ -333,44 +333,6 @@ class TestLshParameterization:
         assert counts and all(r["count"] <= 4 for r in counts)
 
 
-class TestCatalogTableStore:
-    def test_ledger_pipeline_runs_on_catalog_backend(self, spark, tmp_path):
-        """The control plane is backend-agnostic: the metastore-backed
-        store (saveAsTable under a namespace) passes the same
-        insert/upsert lifecycle as the pointer-swap store."""
-        import uuid
-
-        from etl_notifier_pipeline_spark.storage import CatalogTableStore
-
-        ns = f"eng_{uuid.uuid4().hex[:8]}"
-        store = CatalogTableStore(spark, namespace=ns)
-        csv_root = tmp_path / "bucket"
-        csv_root.mkdir()
-        (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
-        (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
-        pipe = ApprovalPipeline(
-            spark=spark, store=store, notifier=LogNotifier(),
-            keys={"people": ["pid"]}, csv_root=str(csv_root),
-        )
-        led = pipe.ledger
-        led.record_arrivals(spark.createDataFrame(
-            [("people.csv", "e1", "b", "insert"), ("people_v2.csv", "e2", "b", "update")],
-            ["file_name", "event_id", "bucket", "operation"],
-        ))
-        from tests.test_ledger_pipeline import batch, ev
-
-        pipe.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
-        pipe.run_batch(batch(spark, ev("e2", "approve", "people_v2.csv", "people", "update")))
-        assert sorted(tuple(r) for r in store.read("people").collect()) == [
-            ("1", "ann"), ("2", "BOB"), ("3", "cyd")]
-        statuses = {r["event_id"]: r["status"] for r in led.processed_files().collect()}
-        assert statuses == {"e1": "approved", "e2": "approved"}
-        # replay is still idempotent on this backend
-        pipe.run_batch(batch(spark, ev("e1", "approve", "people.csv", "people", "insert")))
-        assert store.read("people").count() == 3
-        spark.sql(f"DROP DATABASE {ns} CASCADE")
-
-
 class TestCrashRecovery:
     def test_partial_write_is_invisible_and_recoverable(self, spark, tmp_store):
         """A writer that dies after writing files but BEFORE the
@@ -401,11 +363,12 @@ class TestPipelineWithBucketedStore:
         bucket's files forward from the previous version — the
         O(affected-buckets) commit the full-rewrite TableStore can't
         give. Results must be identical to the sequential semantics."""
+        from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS
         from etl_notifier_pipeline_spark.storage import BucketedTableStore
 
         bstore = BucketedTableStore(
             spark, str(tmp_path / "bstore"),
-            keys={"people": ["pid"]}, n_buckets=8,
+            keys={"people": ["pid"], **LEDGER_KEYS}, n_buckets=8,
         )
         rows = [(str(i), f"p{i}") for i in range(80)]
         bstore.overwrite(
