@@ -13,8 +13,8 @@ The reference's exactly-once machinery is two Postgres tables:
   this engine stores *keys as data* (table + key JSON), never SQL.
 
 Spark-first changes: idempotency and version assignment are
-set-at-a-time (anti-join / window) instead of per-event point queries;
-state lives in TableStore parquet versions with atomic pointer swaps.
+set-at-a-time instead of per-event point queries; state lives in
+TableStore parquet versions with atomic pointer swaps.
 
 Both tables are keyed (``LEDGER_KEYS``): ``processed_files`` by
 event_id, ``delete_control`` by query_id. Every lookup and transition
@@ -24,21 +24,33 @@ version and commits with a CAS on it — the batch form of the
 reference's keyed statements. A ``BucketedTableStore`` holding the
 ledger must declare these keys (the approval pipeline's default store
 does); its keyed calls touch only the buckets the batch's keys hash
-into:
+into (about 9 of 64 for a 10-event batch).
 
-- ``filter_unprocessed`` and the redelivery anti-join in
-  ``record_arrivals``: one ``read_keyed`` each, O(affected buckets);
-- ``mark_many``: ``read_keyed`` of the batch's rows, then a
-  copy-on-write update that rewrites only those buckets (about 9 of
-  64 for a 10-event batch);
-- ``drain_deletes``: the update flipping ``executed_flag`` rewrites
-  only the pending query_ids' buckets.
+Where the work runs. A batch's event-sized data — arrivals, outcomes,
+the keys of a lookup — stays on the driver and reaches Spark only as a
+``local_frame`` (an Arrow-backed local relation: projections, filters
+and collects over it launch no job). What data sizes stays a Spark
+plan: the ledger scans, the appends and the keyed update.
 
-Still O(ledger): ``record_arrivals``' per-file base version, a scan of
-the two columns ``(file_name, file_version)`` semi-joined to the
-batch's file names (file names are not the bucketing key), and the
-pending scans of ``queue_deletes`` and ``drain_deletes``. The appends
-themselves are O(batch).
+- ``record_arrivals``: one collect of the arrivals (first delivery of
+  an event_id wins), one keyed read of the known event_ids, one scan of
+  ``(file_name, file_version)`` filtered to the batch's files, versions
+  assigned on the driver, one append of a local frame. A batch of
+  redeliveries commits nothing.
+- ``filter_unprocessed``: one keyed read of the batch's processed
+  event_ids; ``events`` is filtered by them, so a local ``events``
+  stays local.
+- ``mark_many``: one collect of the outcomes (the last per event_id
+  wins) and one keyed read of their ledger rows, merged on the driver,
+  then one keyed update of a local frame.
+- ``queue_deletes`` and ``drain_deletes``: Spark plans throughout, as
+  CSV rows size their requests.
+
+Still O(ledger): ``record_arrivals``' per-file base version (file names
+are not the bucketing key, so its two-column scan reads every row) and
+the pending scans of ``queue_deletes`` and ``drain_deletes``. Everything
+else is O(batch) on a ``BucketedTableStore``; on a plain ``TableStore``
+the keyed reads and the update scan the whole table.
 """
 
 from __future__ import annotations
@@ -50,7 +62,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
+from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore, local_frame
 
 PROCESSED_FILES_SCHEMA = T.StructType(
     [
@@ -85,6 +97,8 @@ LEDGER_KEYS = {"processed_files": ["event_id"], "delete_control": ["query_id"]}
 
 VALID_STATUSES = ("pending", "approved", "rejected", "failed")
 
+_EVENT_ID_SCHEMA = T.StructType([T.StructField("event_id", T.StringType(), False)])
+
 
 @dataclass
 class Ledger:
@@ -92,18 +106,20 @@ class Ledger:
     store: TableStore | BucketedTableStore
 
     def _empty(self, schema: T.StructType) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, [], schema)
 
     def processed_files(self) -> DataFrame:
         if self.store.exists("processed_files"):
             return self.store.read("processed_files")
         return self._empty(PROCESSED_FILES_SCHEMA)
 
-    def _rows_for(self, events: DataFrame) -> DataFrame:
-        """Every ledger row whose event_id is in ``events``."""
+    def _rows_for(self, event_ids) -> DataFrame:
+        """Every ledger row whose event_id is in ``event_ids`` (driver-
+        side ids): a keyed read whose key set is a local frame."""
         if not self.store.exists("processed_files"):
             return self._empty(PROCESSED_FILES_SCHEMA)
-        return self.store.read_keyed("processed_files", events.select("event_id"))
+        keys = local_frame(self.spark, [(e,) for e in event_ids], _EVENT_ID_SCHEMA)
+        return self.store.read_keyed("processed_files", keys)
 
     def delete_control(self) -> DataFrame:
         if self.store.exists("delete_control"):
@@ -114,54 +130,60 @@ class Ledger:
 
     def record_arrivals(self, arrivals: DataFrame) -> DataFrame:
         """Append pending control rows for a batch of file arrivals
-        (``data-query.py:87-108``), assigning per-file versions
-        set-at-a-time: next_version = MAX(existing)+row_number within
-        the batch — the batch form of the reference's MAX+1
+        (``data-query.py:87-108``) and return them as a local frame.
+        Each file's new versions continue from its current MAX in
+        event_id order — the batch form of the reference's MAX+1
         (``data-query.py:70-85``). Event_ids already in the ledger
-        (redelivery) are dropped by anti-join (ST1), and an event_id
-        delivered more than once in the batch keeps one row.
+        (redelivery, ST1) are dropped, an event_id delivered more than
+        once in the batch keeps its first delivery, and a batch with no
+        fresh event_id commits nothing.
 
         ``arrivals`` columns: file_name, event_id, bucket, operation.
         """
-        fresh = arrivals.join(
-            self._rows_for(arrivals).select("event_id"), "event_id", "left_anti"
-        ).dropDuplicates(["event_id"])
+        batch: dict = {}
+        for r in arrivals.select("file_name", "event_id", "bucket", "operation").collect():
+            batch.setdefault(r["event_id"], r)
+        known = {r["event_id"] for r in self._rows_for(batch).select("event_id").collect()}
+        fresh = sorted(e for e in batch if e not in known)
+        if not fresh:
+            return self._empty(PROCESSED_FILES_SCHEMA)
         # The one O(ledger) scan left on the approval path: file names
         # are not the bucketing key, so this reads the two columns of
-        # every row, keeping only the batch's files before the max.
-        base = (
+        # every row, keeping only the batch's files.
+        files = list({batch[e]["file_name"] for e in fresh})
+        version: dict = {}
+        for f, v in (
             self.processed_files()
             .select("file_name", "file_version")
-            .join(
-                F.broadcast(arrivals.select("file_name").distinct()),
-                "file_name", "left_semi",
-            )
-            .groupBy("file_name")
-            .agg(F.max("file_version").alias("base_version"))
-        )
-        w = W.partitionBy("file_name").orderBy("event_id")
-        rows = (
-            fresh.join(F.broadcast(base), "file_name", "left")
-            .withColumn(
-                "file_version",
-                (F.coalesce(F.col("base_version"), F.lit(0)) + F.row_number().over(w)).cast("int"),
-            )
-            .withColumn("is_processed", F.lit(False))
-            .withColumn("status", F.lit("pending"))
-            .withColumn("approval_timestamp", F.lit(None).cast("string"))
-            .select([f.name for f in PROCESSED_FILES_SCHEMA.fields])
-        )
-        self.store.append("processed_files", rows)
-        return rows
+            .filter(F.col("file_name").isin(files))
+            .collect()
+        ):
+            version[f] = max(version.get(f, 0), v)
+        rows = []
+        for e in fresh:
+            a = batch[e]
+            version[a["file_name"]] = version.get(a["file_name"], 0) + 1
+            rows.append((
+                a["file_name"], e, version[a["file_name"]], False,
+                a["bucket"], a["operation"], "pending", None,
+            ))
+        out = local_frame(self.spark, rows, PROCESSED_FILES_SCHEMA)
+        self.store.append("processed_files", out)
+        return out
 
     # -- ST1: idempotency ---------------------------------------------------
 
     def filter_unprocessed(self, events: DataFrame) -> DataFrame:
-        """Drop events whose event_id is already marked processed —
-        one anti-join replacing the reference's per-event point SELECT
-        (``process-pipeline.py:89-101``)."""
-        done = self._rows_for(events).filter(F.col("is_processed")).select("event_id")
-        return events.join(done, "event_id", "left_anti")
+        """``events`` without those whose event_id is already marked
+        processed — one keyed read of the batch's processed event_ids
+        replacing the reference's per-event point SELECT
+        (``process-pipeline.py:89-101``). The result is ``events``
+        filtered by those ids, so a local ``events`` stays local."""
+        ids = {r["event_id"] for r in events.select("event_id").collect()}
+        processed = self._rows_for(ids).filter(F.col("is_processed"))
+        done = [r["event_id"] for r in processed.select("event_id").collect()]
+        eid = F.col("event_id")
+        return events.filter(eid.isNull() | ~eid.isin(done))
 
     # -- EP3 step e: status transition -------------------------------------
 
@@ -192,28 +214,32 @@ class Ledger:
         event (r01 scale fix: per-event ``mark`` was O(events × ledger)
         per micro-batch).
 
-        The commit is a keyed update of the outcomes' rows: a
-        ``read_keyed`` of those rows, then ``apply_keyed_mutation``.
+        The outcomes and their ledger rows (one ``read_keyed``) are
+        collected and merged on the driver, then committed as one
+        ``apply_keyed_mutation`` update of a local frame.
 
         ``outcomes`` columns: event_id, status, is_processed,
-        approval_timestamp. Duplicate event_ids keep one arbitrary row
-        (callers produce at most one outcome per event); event_ids
-        absent from the ledger are ignored.
+        approval_timestamp. The last outcome per event_id wins;
+        event_ids absent from the ledger are ignored, and a batch of
+        only those commits nothing.
         """
-        new = outcomes.select(
-            "event_id", "status", "is_processed", "approval_timestamp"
-        ).dropDuplicates(["event_id"])
-        updated = (
-            self._rows_for(outcomes)
-            .drop("status", "is_processed", "approval_timestamp")
-            .join(F.broadcast(new), "event_id")
-            .select([f.name for f in PROCESSED_FILES_SCHEMA.fields])
-        )
-        # Batch-sized rows, used by the bucket-id collect, the
-        # anti-join and the union of the mutation: compute them once.
-        updated = updated.localCheckpoint()
+        new = {
+            r["event_id"]: r.asDict()
+            for r in outcomes.select(
+                "event_id", "status", "is_processed", "approval_timestamp"
+            ).collect()
+        }
+        updated = []
+        for row in self._rows_for(new).collect():
+            merged = {**row.asDict(), **new[row["event_id"]]}
+            updated.append(tuple(merged[f] for f in PROCESSED_FILES_SCHEMA.names))
+        if not updated:
+            return
         keys = LEDGER_KEYS["processed_files"]
-        self.store.apply_keyed_mutation("processed_files", updated, keys, keys, "update")
+        self.store.apply_keyed_mutation(
+            "processed_files", local_frame(self.spark, updated, PROCESSED_FILES_SCHEMA),
+            keys, keys, "update",
+        )
 
     # -- ST4: two-phase delete queue ----------------------------------------
 

@@ -752,9 +752,9 @@ def m16_keyed_point_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Primary-key point read on the bucketed store: the requested keys
     hash to their owning buckets, ONLY those buckets' files are opened
     (path-level pruning, the read-side twin of apply_keyed_mutation),
-    and a broadcast semi-join selects the rows — O(table·min(k,B)/B)
-    bytes for k keys, the engine's answer to the reference's Postgres
-    PK-btree point SELECT. The bytes bound is pinned in
+    and an ``isin`` filter on the collected keys selects the rows —
+    O(table·min(k,B)/B) bytes for k keys, the engine's answer to the
+    reference's Postgres PK-btree point SELECT. The bytes bound is pinned in
     tests/test_bucketed_store.py."""
     import tempfile
 

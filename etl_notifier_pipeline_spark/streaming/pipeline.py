@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from etl_notifier_pipeline_spark.functions import decode_event_payload
 from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS, Ledger
 from etl_notifier_pipeline_spark.sources.ingest import read_csv_all_string
-from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
+from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore, local_frame
 
 log = logging.getLogger(__name__)
 
@@ -96,6 +96,17 @@ OUTCOME_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
         T.StructField("details", T.StringType(), True),
         T.StructField("approval_timestamp", T.StringType(), True),
+    ]
+)
+
+
+DEAD_LETTER_SCHEMA = T.StructType(
+    [
+        T.StructField(name, T.StringType(), True)
+        for name in (
+            "event_id", "operation", "table_name", "file_name", "bucket",
+            "error", "approval_timestamp",
+        )
     ]
 )
 
@@ -178,9 +189,17 @@ class ApprovalPipeline:
 
         Driver-side iteration here is over *events in the micro-batch*
         (a handful of file approvals), never over data rows — each
-        event fans out to distributed DataFrame plans. Scale-critical
-        batching, all O(1)-rewrites-per-batch where the reference (and
-        r01/r02 of this engine) was O(events):
+        event fans out to distributed DataFrame plans. The events are
+        collected once (at most ``max_events_per_batch``), the first
+        delivery of each event_id is kept, and from then on the
+        batch's event-sized data — the events, their outcomes and dead
+        letters — stays on the driver and reaches Spark only as a
+        ``local_frame``: the ledger filter, the ledger mark and the
+        notification render collect it without a job. Spark jobs run
+        for what rows size: the ledger's keyed reads and commits, the
+        CSV reads and the table mutations. Scale-critical batching,
+        all O(1)-rewrites-per-batch where the reference (and r01/r02
+        of this engine) was O(events):
 
         - ledger status transitions accumulate and apply as ONE
           ``mark_many`` per micro-batch;
@@ -201,7 +220,24 @@ class ApprovalPipeline:
         staging; a storage failure while applying a coalesced run
         dead-letters that run's events together (they share one write).
         """
-        fresh = self.ledger.filter_unprocessed(events)
+        # Policy-bounded collect: never pull more than cap+1 rows to
+        # the driver, and refuse the batch past the cap (see
+        # ``max_events_per_batch``).
+        cap = self.max_events_per_batch
+        rows = events.limit(cap + 1).collect()
+        if len(rows) > cap:
+            raise ValueError(
+                f"approval micro-batch exceeds max_events_per_batch="
+                f"{cap}: approval events are a human-scale control "
+                f"plane; a machine-scale feed on this topic is a "
+                f"wiring bug (raise the cap explicitly to override)"
+            )
+        first: dict = {}  # an event delivered twice in the batch runs once
+        for row in rows:
+            first.setdefault(row["event_id"], row)
+        fresh = self.ledger.filter_unprocessed(
+            local_frame(self.spark, list(first.values()), events.schema)
+        )
         outcomes: list[tuple] = []
         batch_dead: list[dict] = []
 
@@ -223,24 +259,8 @@ class ApprovalPipeline:
         # new run (each still applies exactly as sequential would).
         runs_by_table: dict[str, list] = {}  # table -> [(run key, items)]
         run_order: list[tuple[str, int]] = []  # (table, run index) in arrival order
-        # Policy-bounded collect: never pull more than cap+1 rows to
-        # the driver, and refuse the batch past the cap (see
-        # ``max_events_per_batch``).
-        cap = self.max_events_per_batch
-        staged_rows = fresh.limit(cap + 1).collect()
-        if len(staged_rows) > cap:
-            raise ValueError(
-                f"approval micro-batch exceeds max_events_per_batch="
-                f"{cap}: approval events are a human-scale control "
-                f"plane; a machine-scale feed on this topic is a "
-                f"wiring bug (raise the cap explicitly to override)"
-            )
-        seen: set[str] = set()
-        for row in staged_rows:
+        for row in fresh.collect():
             ev = row.asDict()
-            if ev["event_id"] in seen:  # delivered twice in this batch
-                continue
-            seen.add(ev["event_id"])
             try:
                 staged = self._stage_event(ev)
             except Exception as exc:
@@ -281,19 +301,18 @@ class ApprovalPipeline:
             self.dead_letters.extend(batch_dead)
             self.store.append(
                 "dead_letters",
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [
                         (d["event_id"], d.get("operation"), d.get("table_name"),
                          d.get("file_name"), d.get("bucket"), d["error"],
                          d.get("approval_timestamp"))
                         for d in batch_dead
                     ],
-                    "event_id string, operation string, table_name string, "
-                    "file_name string, bucket string, error string, "
-                    "approval_timestamp string",
+                    DEAD_LETTER_SCHEMA,
                 ),
             )
-        odf = self.spark.createDataFrame(outcomes, OUTCOME_SCHEMA)
+        odf = local_frame(self.spark, outcomes, OUTCOME_SCHEMA)
         self.ledger.mark_many(
             odf.select(
                 "event_id", "status",

@@ -246,3 +246,23 @@ def test_tools_reference_only_names_they_import():
                 f"{name!r} does not resolve on the imported module"
             )
     assert not problems, "\n".join(problems)
+
+
+def test_scale_bench_metrics_read_the_status_store(spark):
+    """tools/scale_bench.py reads stage metrics and GC time from the JVM
+    status store, which the engine session keeps with its UI disabled:
+    a run's stages show up in the completed-stage diff with their
+    counters, and the GC read returns a number, not a REST error."""
+    from pyspark.sql import functions as F
+
+    from tools.scale_bench import METRIC_FIELDS, _gc_and_heap, _stages
+
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    before = _stages(spark)
+    spark.range(20_000).groupBy((F.col("id") % 7).alias("g")).count().collect()
+    new = {k: s for k, s in _stages(spark).items() if k not in before}
+    assert new
+    assert all(set(s) == set(METRIC_FIELDS) for s in new.values())
+    assert sum(s["shuffleWriteBytes"] for s in new.values()) > 0
+    gc, peak = _gc_and_heap(spark, peak=False)
+    assert isinstance(gc, int) and gc >= 0 and peak is None

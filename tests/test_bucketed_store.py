@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
+from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore, local_frame
 from etl_notifier_pipeline_spark.streaming import ApprovalPipeline, LogNotifier
 
 
@@ -1816,34 +1816,39 @@ class TestBucketingRecorded:
         assert not pipe.store.exists("people")
 
 
+def _jobs(spark, fn, group):
+    """``(fn(), jobs fn launched)``, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestReadsLaunchNoJobs:
+    @staticmethod
+    def _table(spark, root):
+        store = BucketedTableStore(spark, root, keys={"t": ["k"]}, n_buckets=64)
+        store.overwrite("t", spark.range(2000).select(
+            F.col("id").alias("k"), F.col("id").cast("string").alias("v")
+        ))
+        return store
+
     def test_read_and_pruned_read_build_without_jobs(self, spark, tmp_path, monkeypatch):
         """Building a read of a 64-bucket table (65 root paths) lists
         them on the driver and takes the schema from the manifest: no
         listing job, no footer job. Inside read_keyed only the bucket-id
         collect may run one."""
-        store = BucketedTableStore(
-            spark, str(tmp_path / "j"), keys={"t": ["k"]}, n_buckets=64
-        )
-        store.overwrite("t", spark.range(2000).select(
-            F.col("id").alias("k"), F.col("id").cast("string").alias("v")
-        ))
+        store = self._table(spark, str(tmp_path / "j"))
         assert len(store._manifest("t", store.current_version("t"))["buckets"]) == 64
-        sc = spark.sparkContext
 
-        def jobs(fn, group):
-            sc.setJobGroup(group, group)
-            try:
-                out = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            # job-start events reach the status store asynchronously
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-        _, n = jobs(lambda: spark.range(10).count(), "reads-control")
+        _, n = _jobs(spark, lambda: spark.range(10).count(), "reads-control")
         assert n >= 1, "the job counter sees no jobs at all"
-        df, n = jobs(lambda: store.read("t"), "reads-full")
+        df, n = _jobs(spark, lambda: store.read("t"), "reads-full")
         assert n == 0
         assert df.count() == 2000
 
@@ -1851,7 +1856,7 @@ class TestReadsLaunchNoJobs:
         scan_jobs = []
 
         def counted_scan(*args, **kwargs):
-            out, k = jobs(lambda: real_scan(*args, **kwargs), "reads-pruned")
+            out, k = _jobs(spark, lambda: real_scan(*args, **kwargs), "reads-pruned")
             scan_jobs.append(k)
             return out
 
@@ -1860,3 +1865,57 @@ class TestReadsLaunchNoJobs:
         got = store.read_keyed("t", probe)
         assert scan_jobs == [0]
         assert sorted(r["k"] for r in got.collect()) == [5, 1234]
+
+    def test_keyed_read_of_local_keys_builds_without_jobs(self, spark, tmp_path):
+        """With a ``local_frame`` key set, read_keyed collects the keys
+        and their bucket ids without a job, so building the read
+        launches none at all."""
+        from pyspark.sql import types as T
+
+        store = self._table(spark, str(tmp_path / "lk"))
+        probe = local_frame(
+            spark, [(5,), (1234,), (5,)], T.StructType([T.StructField("k", T.LongType())])
+        )
+        got, n = _jobs(spark, lambda: store.read_keyed("t", probe), "reads-local-keys")
+        assert n == 0
+        assert sorted(tuple(r) for r in got.collect()) == [(5, "5"), (1234, "1234")]
+
+    def test_local_frame_collect_launches_no_job(self, spark):
+        """A projection plus collect over a ``local_frame`` is a
+        LocalTableScan: no job, with rows and without."""
+        from pyspark.sql import types as T
+
+        schema = T.StructType(
+            [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
+        )
+        for rows in ([(i, f"v{i}") for i in range(10)], []):
+            df = local_frame(spark, rows, schema)
+            assert df.schema == schema
+            out, n = _jobs(
+                spark,
+                lambda: df.select((F.col("k") + 1).alias("k1"), F.upper("v")).collect(),
+                f"local-collect-{len(rows)}",
+            )
+            assert n == 0
+            assert [r["k1"] for r in out] == [k + 1 for k, _ in rows]
+
+
+class TestCompositeKeyedRead:
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
+    def test_composite_keys_match_exactly(self, spark, tmp_path, backend):
+        """read_keyed on two key columns returns exactly the rows whose
+        key pair was asked for (not every row matching either column),
+        with duplicate and null probe keys."""
+        rows = [(a, b, f"{a}-{b}") for a in range(6) for b in ("x", "y")]
+        df = spark.createDataFrame(rows, "a long, b string, v string")
+        root = str(tmp_path / backend)
+        store = (
+            TableStore(spark, root) if backend == "table_store"
+            else BucketedTableStore(spark, root, keys={"t": ["a", "b"]}, n_buckets=8)
+        )
+        store.overwrite("t", df)
+        probe = spark.createDataFrame(
+            [(1, "x"), (4, "y"), (1, "x"), (None, "y"), (9, "x")], "a long, b string"
+        )
+        got = sorted(tuple(r) for r in store.read_keyed("t", probe).collect())
+        assert got == [(1, "x", "1-x"), (4, "y", "4-y")]

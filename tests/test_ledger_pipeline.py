@@ -18,6 +18,15 @@ def make_arrivals(spark, *rows):
     )
 
 
+def make_store(spark, root, backend):
+    from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS
+    from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
+
+    if backend == "table_store":
+        return TableStore(spark, root)
+    return BucketedTableStore(spark, root, keys=LEDGER_KEYS)
+
+
 class TestLedger:
     def test_versioning_and_idempotency(self, spark, tmp_store):
         led = Ledger(spark, tmp_store)
@@ -64,23 +73,32 @@ class TestLedger:
         assert again.count() == 0
 
     @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
+    def test_redelivery_commits_no_version(self, spark, tmp_path, backend):
+        """An arrival batch whose event_ids are all in the ledger, and a
+        mark of event_ids all absent from it, commit nothing: an empty
+        version would move a real snapshot toward vacuum."""
+        store = make_store(spark, str(tmp_path / backend), backend)
+        led = Ledger(spark, store)
+        arrival = make_arrivals(spark, ("f.csv", "e1", "b", "insert"))
+        led.record_arrivals(arrival)
+        v = store.current_version("processed_files")
+        assert led.record_arrivals(arrival).count() == 0
+        led.record_arrivals(arrival)
+        assert store.current_version("processed_files") == v
+        led.mark(spark.createDataFrame([("e9",)], ["event_id"]), "approved")
+        assert store.current_version("processed_files") == v
+        assert [tuple(r) for r in led.processed_files().select(
+            "event_id", "file_version", "status").collect()] == [("e1", 1, "pending")]
+
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
     def test_delete_queued_during_drain_stays_pending(self, spark, tmp_path, backend):
         """A delete queued while a drain runs its deletes is either left
         pending by the drain's executed-flag flip, or fails the flip
         with ConcurrentWriteError — never marked executed unapplied or
         erased."""
-        from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS
-        from etl_notifier_pipeline_spark.storage import (
-            BucketedTableStore,
-            ConcurrentWriteError,
-            TableStore,
-        )
+        from etl_notifier_pipeline_spark.storage import ConcurrentWriteError
 
-        root = str(tmp_path / backend)
-        store = (
-            TableStore(spark, root) if backend == "table_store"
-            else BucketedTableStore(spark, root, keys=LEDGER_KEYS)
-        )
+        store = make_store(spark, str(tmp_path / backend), backend)
         led = Ledger(spark, store)
 
         def req(k):
@@ -234,9 +252,14 @@ class TestLedgerParityAcrossStores:
             # delivered twice in one batch: one ledger row, version 1
             ("people_add.csv", "e9", "b", "insert"),
             ("people_add.csv", "e9", "b", "insert"),
+            # delivered twice with different operations: the first wins
+            ("other.csv", "e12", "b", "insert"),
+            ("other.csv", "e12", "b", "delete"),
         ))
         e9 = led.processed_files().filter(F.col("event_id") == "e9")
         assert [r["file_version"] for r in e9.collect()] == [1]
+        e12 = led.processed_files().filter(F.col("event_id") == "e12")
+        assert [(r["file_version"], r["operation"]) for r in e12.collect()] == [(1, "insert")]
         pipe.run_batch(batch(
             spark,
             ev("e9", "approve", "people_add.csv", "people", "insert"),
@@ -247,12 +270,17 @@ class TestLedgerParityAcrossStores:
             ev("e4", "reject", "people_v2.csv", "people", "update"),
             ev("e5", "approve", "missing.csv", "people", "insert"),
         ), 0)
-        # redelivery of e2 (arrival and approval), and a second arrival
-        # of people.csv under a new event
+        # redelivery of e2 (arrival and approval), and two more arrivals
+        # of people.csv (version 1 = e1): versions continue in event_id
+        # order, not delivery order
         led.record_arrivals(make_arrivals(
             spark, ("people_v2.csv", "e2", "b", "update"),
             ("people.csv", "e6", "b", "update"),
+            ("people.csv", "e10", "b", "update"),
         ))
+        people = led.processed_files().filter(F.col("file_name") == "people.csv")
+        assert sorted((r["event_id"], r["file_version"]) for r in people.collect()) == [
+            ("e1", 1), ("e10", 2), ("e6", 3)]
         pipe.run_batch(batch(
             spark,
             ev("e2", "approve", "people_v2.csv", "people", "update"),
@@ -303,7 +331,7 @@ class TestLedgerParityAcrossStores:
         assert {r[1]: r[6] for r in want["processed_files"]} == {
             "e1": "approved", "e2": "approved", "e3": "approved",
             "e4": "rejected", "e5": "failed", "e6": "approved",
-            "e9": "approved",
+            "e9": "approved", "e10": "pending", "e12": "pending",
         }
         assert [r[2] for r in want["processed_files"] if r[1] == "e9"] == [1]
         assert want["people"] == [("2", "bob"), ("3", "cyd"), ("4", "dee")]
@@ -337,3 +365,79 @@ class TestLedgerParityAcrossStores:
         }
         assert changed == hashed
         assert self._state(keyed) == self._state(plain)
+
+
+class TestControlPlaneJobBudget:
+    """An approval batch's control plane — ``filter_unprocessed``,
+    ``mark_many`` and the notification render — launches jobs only for
+    the ledger's keyed reads and its one commit: the events, outcomes
+    and key sets it handles are local frames. The budget is the count
+    measured with local frames; the data plane (CSV staging, table
+    mutations, the dead-letter append) is counted apart."""
+
+    # filter_unprocessed's keyed read, mark_many's keyed read and its
+    # update commit (four jobs); the plain store adds a schema-inference
+    # job to each of its three reads.
+    BUDGET = {"table_store": 9, "bucketed": 6}
+
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
+    def test_control_plane_job_budget(self, spark, tmp_path, backend, monkeypatch):
+        from etl_notifier_pipeline_spark.storage import TableStore, local_frame
+        from etl_notifier_pipeline_spark.streaming.pipeline import approval_event_schema
+
+        csv_root = tmp_path / "csv"
+        csv_root.mkdir()
+        (csv_root / "people.csv").write_text("pid,name\n1,ann\n2,bob\n")
+        (csv_root / "people_v2.csv").write_text("pid,name\n2,BOB\n3,cyd\n")
+        (csv_root / "people_del.csv").write_text("pid,name\n1,ann\n")
+        root = str(tmp_path / backend)
+        pipe = ApprovalPipeline(
+            spark=spark, notifier=LogNotifier(), keys={"people": ["pid"]},
+            csv_root=str(csv_root),
+            **({"store": TableStore(spark, root)} if backend == "table_store"
+               else {"store_root": root}),
+        )
+        events = [
+            ev("e1", "approve", "people.csv", "people", "insert"),
+            ev("e2", "approve", "people_v2.csv", "people", "update"),
+            ev("e3", "approve", "people_del.csv", "people", "delete"),
+            ev("e4", "reject", "people_v2.csv", "people", "update"),
+            ev("e5", "approve", "missing.csv", "people", "insert"),
+        ]
+        pipe.ledger.record_arrivals(make_arrivals(
+            spark, *[(e["file_name"], e["event_id"], "b", e["operation"]) for e in events]
+        ))
+        schema = approval_event_schema()
+        approvals = local_frame(
+            spark, [tuple(e[f] for f in schema.names) for e in events], schema
+        )
+
+        sc = spark.sparkContext
+        control, data = f"budget-control-{backend}", f"budget-data-{backend}"
+
+        def in_data(fn):
+            def run(*args, **kwargs):
+                outer = sc.getLocalProperty("spark.jobGroup.id")
+                sc.setJobGroup(data, data)
+                try:
+                    return fn(*args, **kwargs)
+                finally:
+                    sc.setJobGroup(outer, outer)
+            return run
+
+        for name in ("_stage_event", "_apply_run"):
+            monkeypatch.setattr(pipe, name, in_data(getattr(pipe, name)))
+        monkeypatch.setattr(pipe.store, "append", in_data(pipe.store.append))
+        sc.setJobGroup(control, control)
+        try:
+            pipe.run_batch(approvals, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+        def jobs(group):
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert len(pipe.notifier.sent) == 5
+        assert jobs(data) > 0, "the job counter sees no data-plane jobs"
+        assert jobs(control) <= self.BUDGET[backend]

@@ -27,7 +27,7 @@ Claims under test, each measured per-measurement-canary-stamped
 Per-commit measurements ride tools/benchproto.stamped_runs (n_runs=1
 one-shots still carry their own canary bracket, so host drift between
 commits stays attributable); steady-state reads use n_runs=3 with
-dispersion. Stage metrics ride the Spark REST API exactly as
+dispersion. Stage metrics come from the JVM status store exactly as
 tools/scale_bench.py does. Usage:
 
     python tools/lakehouse_bench.py [--rows 60000000] [--commits 10] \
@@ -840,9 +840,7 @@ def main() -> None:
             print(f"wrote {json_out}")
         return
 
-    spark = get_spark(
-        f"lakehouse-bench-{rung}", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark(f"lakehouse-bench-{rung}")
     if rung in ("copy_on_write", "merge_on_read"):
         doc, store, view = run_rung(spark, root, n_rows, n_commits, rung)
         if rung == "copy_on_write":

@@ -3,7 +3,7 @@
 Runs the same headline set as bench.py against an amplified fixture
 (tools/scale_up.py) and records, per query, what bench.py's wall-clock
 number cannot show: shuffle read/write bytes, memory/disk spill, and
-input bytes, pulled from the Spark status REST API by diffing the
+input bytes, read from the Spark JVM's status store by diffing the
 completed-stage set around each run. This is the r4 verdict's headline
 ask — the difference between "the plan SHAPE would survive 100 TB" and
 "we RAN it at a scale where shuffle and AQE actually engage, here are
@@ -23,7 +23,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -46,16 +45,34 @@ METRIC_FIELDS = (
 )
 
 
-def _api(spark, path: str):
-    ui = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{ui}/api/v1/{path}", timeout=10) as r:
-        return json.load(r)
+def _status_store(spark):
+    """The JVM ``AppStatusStore``: the data behind the UI's REST API,
+    kept with the UI disabled too (``perfbench/tracing.py`` reads it
+    the same way)."""
+    return spark.sparkContext._jsc.sc().statusStore()
 
 
-def _stages(spark) -> dict[int, dict]:
-    app_id = spark.sparkContext.applicationId
-    stages = _api(spark, f"applications/{app_id}/stages?status=complete")
-    return {(s["stageId"], s["attemptId"]): s for s in stages}
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _stages(spark) -> dict[tuple[int, int], dict[str, int]]:
+    """Completed stages by ``(stageId, attemptId)``, each with its
+    ``METRIC_FIELDS``. Errors propagate: a failed read aborts the run
+    instead of recording zeros."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    complete = jvm.java.util.Collections.singletonList(
+        jvm.org.apache.spark.status.api.v1.StageStatus.COMPLETE
+    )
+    stages = _status_store(spark).stageList(
+        complete, False, False, sc._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    )
+    return {
+        (s.stageId(), s.attemptId()): {f: int(getattr(s, f)()) for f in METRIC_FIELDS}
+        for s in _seq(stages)
+    }
 
 
 def _gc_and_heap(spark, peak: bool = True) -> tuple[int, int | None]:
@@ -69,15 +86,14 @@ def _gc_and_heap(spark, peak: bool = True) -> tuple[int, int | None]:
 
     Errors propagate: a failed metrics read aborts the run instead of
     recording zeros."""
-    app_id = spark.sparkContext.applicationId
-    execs = _api(spark, f"applications/{app_id}/executors")
-    gc = sum(int(e["totalGCTime"]) for e in execs)
+    execs = _seq(_status_store(spark).executorList(False))
+    gc = sum(int(e.totalGCTime()) for e in execs)
     if not peak:
         return gc, None
     peaks = [
-        int(e["peakMemoryMetrics"]["JVMHeapMemory"])
+        int(e.peakMemoryMetrics().get().getMetricValue("JVMHeapMemory"))
         for e in execs
-        if "peakMemoryMetrics" in e
+        if e.peakMemoryMetrics().isDefined()
     ]
     if not peaks:
         raise RuntimeError("no executor reports peakMemoryMetrics")
@@ -97,7 +113,7 @@ def measured_run(spark, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
         if key in before:
             continue
         for f in METRIC_FIELDS:
-            delta[f] += int(s[f])
+            delta[f] += s[f]
     delta["jvmGcTimeMs"] = gc1 - gc0
     delta["peakJvmHeapBytes"] = peak
     return wall, delta
@@ -141,12 +157,7 @@ def main() -> None:
 
     names = only or bench.HEADLINE
     canary_pre = bench.host_canary_ms()
-    # The engine session disables the UI (serving threads cost memory
-    # in a 164-query sweep); the metrics REST API lives on the UI
-    # server, so this harness turns it back on for its own session.
-    spark = get_spark(
-        "scale-bench", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("scale-bench")
     out: dict[str, dict] = {}
     from etl_notifier_pipeline_spark.extensions import dedup as _dedup
 

@@ -49,12 +49,9 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/repo/.scale/sf100"
     configure_io_canary(sf_dir)  # probe what this run measures
 
-    # The engine session disables the UI; measured_run reads stage
-    # metrics from the UI's REST API (scale_bench does the same), so
-    # this harness turns it back on — without it every spill/shuffle
-    # field in the artifact silently reads 0 and the A/B can't verify
-    # the residual-spill claim it exists to test.
-    spark = get_spark("x29-ab", extra_conf={"spark.ui.enabled": "true"})
+    # measured_run reads stage metrics from the JVM status store, which
+    # the engine session keeps with its UI disabled.
+    spark = get_spark("x29-ab")
     variants = {
         "two_agg": lambda s, d: X.substring_dup_stats(
             load_table(s, d, "documents"), width=40, stride=20,

@@ -59,9 +59,7 @@ def main() -> None:
     # measurement (see lakehouse_bench) — CPU canaries only.
     configure_io_canary(None, enabled=False)
 
-    spark = get_spark(
-        "zonemap-bench", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("zonemap-bench")
     store_root = os.path.join(os.path.dirname(sf_dir), "zonemap_store")
     store = TableStore(spark, store_root)
 
