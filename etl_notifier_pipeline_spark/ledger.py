@@ -13,8 +13,10 @@ The reference's exactly-once machinery is two Postgres tables:
   this engine stores *keys as data* (table + key JSON), never SQL.
 
 Spark-first changes: idempotency and version assignment are
-set-at-a-time instead of per-event point queries; state lives in
-TableStore parquet versions with atomic pointer swaps.
+set-at-a-time instead of per-event point queries; state lives in the
+versions of a store (``storage._VersionedStore``: ``TableStore`` or
+``BucketedTableStore``), committed by a locked, version-CAS pointer
+swap.
 
 Both tables are keyed (``LEDGER_KEYS``): ``processed_files`` by
 event_id, ``delete_control`` by query_id. Every lookup and transition
@@ -62,7 +64,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore, local_frame
+from etl_notifier_pipeline_spark.storage import _VersionedStore, local_frame
 
 PROCESSED_FILES_SCHEMA = T.StructType(
     [
@@ -103,7 +105,7 @@ _EVENT_ID_SCHEMA = T.StructType([T.StructField("event_id", T.StringType(), False
 @dataclass
 class Ledger:
     spark: SparkSession
-    store: TableStore | BucketedTableStore
+    store: _VersionedStore
 
     def _empty(self, schema: T.StructType) -> DataFrame:
         return local_frame(self.spark, [], schema)

@@ -252,9 +252,6 @@ def change_feed(
             f"change_feed({table!r}, {lo}..{hi}): versions {missing} "
             f"not retained (horizon: {vs}); raise retain_versions"
         )
-    cdc_dir = getattr(store, "cdc_dir", None)
-    app_dirs = getattr(store, "appended_dirs", None)
-    is_comp = getattr(store, "is_compaction", None)
     out = None
     for v in range(lo, hi):
         # Fast paths, cheapest first — all three produce the identical
@@ -270,10 +267,10 @@ def change_feed(
         # 0. compact() commits rewrite LAYOUT, not data: the feed has
         #    zero rows for them by construction — skip, don't pay the
         #    empty O(table) snapshot_diff
-        if is_comp and is_comp(table, v + 1):
+        if store.is_compaction(table, v + 1):
             continue
-        sidecar = cdc_dir(table, v + 1) if cdc_dir else None
-        added = app_dirs(table, v + 1) if (app_dirs and not sidecar) else None
+        sidecar = store.cdc_dir(table, v + 1)
+        added = None if sidecar else store.appended_dirs(table, v + 1)
         if sidecar:
             d = store.spark.read.parquet(sidecar).select(
                 *keys, "change", "old_row", "new_row"

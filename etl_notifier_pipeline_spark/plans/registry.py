@@ -157,51 +157,9 @@ _R01_R02_SNAPSHOT: frozenset[str] = frozenset(
 # by the least-recently-checked green rotation below.)
 DRIVER_CHECKED: frozenset[str] = _driver_green()
 
-# Never-driver-checked queries by age: _OLDEST_UNCHECKED (named in
-# VERDICT r02) have waited two sampling rounds; _R2_UNCHECKED were
-# registered by end of round 2 but missed every sample. Both outrank
-# round-3+ additions in the rotation below, so the longest-waiting
-# queries always reach the driver's ~50-query sample first.
-_OLDEST_UNCHECKED: frozenset[str] = frozenset(
-    {
-        "d06_dedup_clusters", "d07_simhash_pairs", "q29_full_outer_join",
-        "q30_distinct_rows", "q31_rank_family", "q32_map_functions",
-        "s05_embedding_clusters", "st07_notification_render",
-        "st08_interval_join", "x06_edit_distance", "xm02_frame_schedule",
-    }
-)
-_R2_UNCHECKED: frozenset[str] = frozenset(
-    {
-        "q40_volume_shipping", "q41_market_share", "q42_sales_opportunity",
-        "q43_small_quantity_revenue", "q44_top_supplier",
-        "q45_promo_revenue_share", "q46_salted_skew_join",
-        "q47_salted_aggregation", "q48_funnel_conversion",
-        "q49_min_cost_supplier", "q50_product_profit", "q51_important_parts",
-        "q52_shipping_delay_histogram", "q53_supplier_part_counts",
-        "q54_disjunctive_revenue", "q55_excess_shipments",
-        "q56_late_sole_suppliers", "q57_returned_items",
-        "q58_revenue_forecast", "q59_multi_distinct", "q60_share_of_region",
-        "q61_large_volume_orders", "q62_ordered_export",
-        "q63_value_window_family", "q64_multiset_set_ops",
-        "q65_locf_gap_fill", "q66_multi_agg_pivot", "q67_string_battery",
-        "q68_record_days", "q69_interpolated_quartiles", "q70_gaps_islands",
-        "q71_ewma_daily", "q72_proration", "m09_incremental_agg_maintenance",
-        "x13_repetition_ratio", "x14_decontamination", "x15_weighted_sample",
-        "x16_curriculum_bins", "x17_pii_redact", "x18_chunk_windows",
-        "x19_chunk_dup_stats", "x20_shard_balance", "x21_source_mixture",
-        "x22_block_pack_spans", "x23_oov_rate", "x24_per_source_cap",
-        "x25_quality_gate", "x26_contrastive_pairs",
-        "d09_minhash_estimate_audit", "s06_label_centroids",
-        "s07_cluster_cohesion", "d08_semantic_keep_list",
-        "st09_stream_static_enrichment", "st10_cascaded_rollup",
-        "st11_interval_join_outer",
-    }
-)
-
-
 def _catalog_order() -> list[str]:
     """Registration order, rotated: never-driver-checked oracle-paired
-    queries first (oldest-waiting before newly added), then rows-only
+    queries first (in registration order), then rows-only
     (whose driver rows are the weaker rows-only check, so they re-earn
     one every round), then already-green queries LEAST-RECENTLY
     CHECKED first — the green tail cycles through the ~50-query driver
@@ -212,12 +170,10 @@ def _catalog_order() -> list[str]:
 
     def rank(n: str) -> tuple[int, int, int]:
         if n in DRIVER_CHECKED:
-            return (4, last.get(n, 0), names.index(n))
+            return (2, last.get(n, 0), names.index(n))
         if not _REGISTRY[n].oracle:
-            return (3, 0, names.index(n))
-        if n in _OLDEST_UNCHECKED:
-            return (0, 0, names.index(n))
-        return (1 if n in _R2_UNCHECKED else 2, 0, names.index(n))
+            return (1, 0, names.index(n))
+        return (0, 0, names.index(n))
 
     return sorted(names, key=rank)
 

@@ -8,13 +8,21 @@ atomicity from the classic versioned-directory + pointer-file swap:
     <root>/<table>/v=<n>/part-*.parquet
     <root>/<table>/_CURRENT        # contains "v=<n>"
 
-- writers write the full new version directory, then atomically
+- writers stage the new version's files in a private dir, then commit:
+  promote the stage to ``v=<n>``, write its manifest and atomically
   replace ``_CURRENT`` (os.replace is atomic on POSIX) — readers
   resolving through the pointer never observe a partial write;
-- single-writer-per-table discipline is assumed (documented divergence
-  from the reference's race-prone MAX+1 versioning, SURVEY §4 O7);
-  on a real deployment this maps to one Delta/Iceberg commit, which
-  this class is the minimal stand-in for.
+- concurrent writers are safe: a commit runs under a per-table
+  ``flock`` (``_CommitLock``) and compares-and-swaps the version it
+  was based on, so a writer that lost the race fails with
+  ``ConcurrentWriteError`` instead of erasing the winner's commit
+  (where the reference's MAX+1 versioning races, SURVEY §4 O7). On a
+  real deployment this maps to one Delta/Iceberg commit, which this
+  protocol is the minimal stand-in for.
+
+``TableStore`` and ``BucketedTableStore`` share that protocol
+(``_VersionedStore``) and differ only in their data layout and
+manifest format.
 """
 
 from __future__ import annotations
@@ -107,15 +115,36 @@ class _CommitLock:
             self._fd = None
 
 
-class TableStore:
+class _VersionedStore:
+    """The commit protocol and version management both stores share: a
+    table is immutable version dirs plus the ``_CURRENT`` pointer, and
+    each version's manifest names the version dirs its files live in
+    (an append or a keyed mutation references earlier dirs instead of
+    copying them). A subclass supplies its data layout (``_stage``), the
+    keyed contract (``read_keyed``, ``apply_keyed_mutation``) and its
+    manifest format:
+
+    - ``_MANIFEST``: the manifest's file name in the version dir;
+    - ``_manifest`` / ``_write_manifest``: read and write it;
+    - ``_refs``: the dirs (relative to the table dir) a manifest
+      references;
+    - ``_appendable``: whether two consecutive manifests may still be a
+      pure append (``appended_dirs``);
+    - ``_restored``: the manifest a ``restore`` commits for a copied
+      one (by default the copy itself)."""
+
+    _MANIFEST: str
+
     def __init__(
         self, spark: SparkSession, root: str, retain_versions: int = 2
     ) -> None:
-        # retain_versions = the time-travel horizon (same contract as
-        # BucketedTableStore): every retained version stays readable
-        # via read(table, version=n) and diffable via change feeds.
         self.spark = spark
         self.root = root
+        # How many trailing versions survive vacuum: the time-travel
+        # horizon. Every retained version is readable via
+        # ``read(table, version=n)`` and diffable via change feeds
+        # (snapshot isolation: a version dir is immutable once the
+        # pointer moves past it).
         self.retain_versions = max(1, retain_versions)
         os.makedirs(root, exist_ok=True)
 
@@ -134,71 +163,25 @@ class TableStore:
         with open(self._pointer(table)) as f:
             return int(f.read().strip().removeprefix("v="))
 
-    def path(self, table: str) -> str:
-        v = self.current_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        return os.path.join(self._dir(table), f"v={v}")
-
-    def _manifest(self, table: str, v: int) -> list[str]:
-        """Version dirs whose files version ``v`` references (``#``
-        lines are flags, not dirs). A version with no manifest file
-        (pre-manifest layout) is self-contained."""
-        p = os.path.join(self._dir(table), f"v={v}", "_manifest.txt")
-        if os.path.exists(p):
-            with open(p) as f:
-                return [x for x in f.read().split() if not x.startswith("#")]
-        return [f"v={v}"]
-
-    def _manifest_flags(self, table: str, v: int) -> set[str]:
-        p = os.path.join(self._dir(table), f"v={v}", "_manifest.txt")
-        if os.path.exists(p):
-            with open(p) as f:
-                return {x for x in f.read().split() if x.startswith("#")}
-        return set()
-
-    def read(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the current version, or — time travel — any version
-        still on disk (the vacuum keeps the last 2 plus whatever their
-        manifests reference; on Delta/Iceberg this maps to VERSION AS
-        OF). Version numbers come from the overwrite/append return
-        value or ``current_version``."""
-        v = self.current_version(table) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        if not os.path.isdir(os.path.join(self._dir(table), f"v={v}")):
-            raise FileNotFoundError(
-                f"{table} has no version {v} on disk (vacuumed or never written)"
-            )
-        dirs = [os.path.join(self._dir(table), d) for d in self._manifest(table, v)]
-        reader = self.spark.read
-        if "#mergeSchema" in self._manifest_flags(table, v):
-            # Only schema-evolved versions pay the footer-merge scan;
-            # un-evolved tables keep the single-footer fast path.
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*dirs)
-
-    def _stage(self, table: str, df: DataFrame) -> str:
-        """Write ``df`` into a private staging dir. Staged files are
-        invisible to readers (the pointer and every manifest name only
-        ``v=`` dirs) and are promoted — or discarded — at commit."""
+    def _new_staging(self, table: str) -> str:
+        """A fresh private staging dir. Staged files are invisible to
+        readers (the pointer and every manifest name only ``v=`` dirs)
+        and are promoted — or discarded — at commit."""
         os.makedirs(self._dir(table), exist_ok=True)
-        staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
-        df.write.mode("overwrite").parquet(staging)
-        return staging
+        return tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
 
-    def _commit(self, table: str, v: int, manifest: list[str], staging: str) -> None:
-        """Promote ``staging`` to ``v=<v>`` and swap the pointer —
-        under the per-table commit lock, with a version CAS: if any
-        other writer advanced the pointer past ``v-1`` since this write
-        began, the staged files are discarded and the commit fails
-        without touching the pointer (readers keep the committed
-        version; the caller retries against the new current). A crash
-        at ANY point before the final pointer swap leaves the pointer —
-        and therefore every reader — on the old consistent version;
-        replaying the write succeeds (an orphan ``v=<v>`` dir from the
-        crashed attempt is swept here, under the lock, where it is
-        provably unreferenced)."""
+    def _commit(self, table: str, v: int, manifest, staging: str) -> None:
+        """Promote ``staging`` to ``v=<v>``, write its ``manifest`` and
+        swap the pointer — under the per-table commit lock, with a
+        version CAS: if any other writer advanced the pointer past
+        ``v-1`` since this write began, the staged files are discarded
+        and the commit fails without touching the pointer (readers keep
+        the committed version; the caller retries against the new
+        current). A crash at ANY point before the final pointer swap
+        leaves the pointer — and therefore every reader — on the old
+        consistent version; replaying the write succeeds (an orphan
+        ``v=<v>`` dir from the crashed attempt is swept here, under the
+        lock, where it is provably unreferenced)."""
         with _CommitLock(os.path.join(self._dir(table), "_COMMIT_LOCK")):
             if (self.current_version(table) or 0) != v - 1:
                 shutil.rmtree(staging, ignore_errors=True)
@@ -213,16 +196,204 @@ class TableStore:
                 # before the pointer swap — never referenced, safe to drop
                 shutil.rmtree(target)
             os.replace(staging, target)
-            mpath = os.path.join(target, "_manifest.txt")
-            with open(mpath, "w") as f:
-                f.write("\n".join(manifest))
-            _harvest_zone_maps(target)
-            self._write_stats_agg(table, v, manifest, target)
+            self._write_manifest(table, v, manifest, target)
             tmp = self._pointer(table) + ".tmp"
             with open(tmp, "w") as f:
                 f.write(f"v={v}")
             os.replace(tmp, self._pointer(table))
-            self._vacuum(table, keep=self.retain_versions)
+            self._vacuum(table)
+
+    def _readable_version(self, table: str, version: int | None) -> int:
+        """``version``, or the current one when None; an explicit
+        ``version`` must be retained (see ``versions``)."""
+        v = self.current_version(table) if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no such table: {table}")
+        if version is not None and version not in self.versions(table):
+            raise FileNotFoundError(
+                f"{table!r} has no version {version}: not retained (vacuumed "
+                f"or never written; retained: {self.versions(table)})"
+            )
+        return v
+
+    def versions(self, table: str) -> list[int]:
+        """Versions still fully readable (their own manifest plus every
+        dir it references survive on disk), ascending — the
+        time-travel/change-feed horizon (Delta/Iceberg snapshot
+        listing). An old dir can outlive its closure when a newer
+        manifest carries forward just some of its data. Clamped to the
+        committed ``_CURRENT`` pointer: a writer that crashed after
+        staging but before the pointer swap leaves an orphan v-dir
+        above the pointer, which was never committed (``_commit``'s
+        sweep will delete it) and must not surface as a readable
+        version — otherwise ``change_feed``'s default ``to_version``
+        would diff a phantom commit."""
+        cur = self.current_version(table)
+        if cur is None:
+            return []
+        d = self._dir(table)
+        out = []
+        for name in os.listdir(d):
+            if not name.startswith("v="):
+                continue
+            v = int(name.removeprefix("v="))
+            if v > cur or not os.path.exists(os.path.join(d, name, self._MANIFEST)):
+                continue
+            refs = self._refs(self._manifest(table, v))
+            if all(os.path.exists(os.path.join(d, r)) for r in refs):
+                out.append(v)
+        return sorted(out)
+
+    @staticmethod
+    def _restored(manifest):
+        return manifest
+
+    def restore(self, table: str, version: int) -> int:
+        """Delta ``RESTORE TABLE ... TO VERSION AS OF`` / Iceberg
+        rollback as a METADATA-ONLY commit: the new version's manifest
+        is ``version``'s manifest (``_restored``), so zero data bytes
+        move — version dirs are immutable after commit, and the restore
+        simply re-references them. The rollback is itself a commit: the
+        mis-written versions it undoes stay time-travelable (and
+        ``change_feed``-diffable, surfacing the restore's
+        deletes/updates) until retention vacuums them, which is exactly
+        Delta's RESTORE contract. O(1) whatever the table size."""
+        if version not in self.versions(table):
+            raise FileNotFoundError(
+                f"{table!r} version {version} not restorable "
+                f"(retained: {self.versions(table)})"
+            )
+        manifest = self._restored(self._manifest(table, version))
+        new_v = (self.current_version(table) or 0) + 1
+        self._commit(table, new_v, manifest, self._new_staging(table))
+        return new_v
+
+    def appended_dirs(self, table: str, v: int) -> list[str] | None:
+        """If commit ``v`` was a PURE APPEND of version ``v-1`` (its
+        manifest keeps every prior dir and only adds dirs, and
+        ``_appendable`` holds), return the new dirs' absolute paths —
+        the commit's change rows are exactly those dirs' rows as
+        inserts, readable in O(new bytes). Returns None for
+        overwrites, keyed mutations and evolved commits
+        (``change_feed`` falls back to snapshot_diff). Mirrors how
+        Delta CDF serves insert-only commits from the added data files
+        without writing change files."""
+        if v <= 0:
+            return None
+        try:
+            prev = self._manifest(table, v - 1)
+            cur = self._manifest(table, v)
+        except FileNotFoundError:
+            return None
+        if not self._appendable(prev, cur):
+            return None
+        old, refs = set(self._refs(prev)), self._refs(cur)
+        if not old <= set(refs):
+            return None  # a prior dir was dropped: not an append
+        new = [d for d in refs if d not in old]
+        if not new:
+            return None
+        return [os.path.join(self._dir(table), d) for d in new]
+
+    def cdc_dir(self, table: str, v: int) -> str | None:
+        """Path of commit ``v``'s write-time CDC sidecar, or None (no
+        sidecar: ``change_feed`` falls back to its other paths)."""
+        return None
+
+    def is_compaction(self, table: str, v: int) -> bool:
+        """True when commit ``v`` changed layout but no data, so
+        ``change_feed`` emits no rows for it."""
+        return False
+
+    def _vacuum(self, table: str) -> None:
+        """Delete version dirs neither among the last
+        ``retain_versions`` nor referenced by any of their manifests
+        (readers resolving an older pointer get a grace window), and
+        staging dirs abandoned by crashed writers."""
+        v = self.current_version(table)
+        keep = self.retain_versions
+        referenced: set[str] = set()
+        for recent in range(max(1, v - keep + 1), v + 1):
+            if os.path.isdir(os.path.join(self._dir(table), f"v={recent}")):
+                for d in self._refs(self._manifest(table, recent)):
+                    referenced.add(d.split("/", 1)[0])
+        for name in os.listdir(self._dir(table)):
+            if name.startswith("v=") and name not in referenced:
+                n = int(name.removeprefix("v="))
+                if n <= v - keep:
+                    shutil.rmtree(os.path.join(self._dir(table), name), ignore_errors=True)
+            elif name.startswith(".staging-"):
+                _sweep_stale_staging(os.path.join(self._dir(table), name))
+
+
+class TableStore(_VersionedStore):
+    """Unbucketed store: every keyed mutation rewrites the whole table.
+    A version's manifest is ``_manifest.txt`` (see ``_manifest``)."""
+
+    _MANIFEST = "_manifest.txt"
+
+    def path(self, table: str) -> str:
+        v = self.current_version(table)
+        if v is None:
+            raise FileNotFoundError(f"no such table: {table}")
+        return os.path.join(self._dir(table), f"v={v}")
+
+    def _manifest(self, table: str, v: int) -> list[str]:
+        """Version ``v``'s manifest lines: ``#`` flag lines
+        (``#mergeSchema``), then the version dirs whose files it
+        references."""
+        with open(os.path.join(self._dir(table), f"v={v}", self._MANIFEST)) as f:
+            return f.read().split()
+
+    @staticmethod
+    def _refs(manifest: list[str]) -> list[str]:
+        return [x for x in manifest if not x.startswith("#")]
+
+    def _write_manifest(
+        self, table: str, v: int, manifest: list[str], target: str
+    ) -> None:
+        """Write the manifest lines, plus the version's zone maps and
+        their manifest-level fold (inside the commit lock, so every
+        committed version carries its stats)."""
+        with open(os.path.join(target, self._MANIFEST), "w") as f:
+            f.write("\n".join(manifest))
+        _harvest_zone_maps(target)
+        self._write_stats_agg(table, v, manifest, target)
+
+    @staticmethod
+    def _appendable(prev: list[str], cur: list[str]) -> bool:
+        """Same flags, and no ``#mergeSchema``: under schema evolution
+        the added dirs alone need not contain every column of the
+        merged v snapshot (an evolved append may OMIT a pre-existing
+        column), so reading only the new dirs would fail or mis-shape
+        the insert rows — only the mergeSchema-aware full read
+        (snapshot_diff path) is guaranteed correct (r7 advice #1)."""
+        flags = {x for x in prev if x.startswith("#")}
+        return "#mergeSchema" not in flags and flags == {
+            x for x in cur if x.startswith("#")
+        }
+
+    def read(self, table: str, version: int | None = None) -> DataFrame:
+        """Read the current version, or — time travel — any retained
+        version (the vacuum keeps the last ``retain_versions`` plus
+        whatever their manifests reference; on Delta/Iceberg this maps
+        to VERSION AS OF). Version numbers come from the
+        overwrite/append return value or ``current_version``."""
+        v = self._readable_version(table, version)
+        m = self._manifest(table, v)
+        dirs = [os.path.join(self._dir(table), d) for d in self._refs(m)]
+        reader = self.spark.read
+        if "#mergeSchema" in m:
+            # Only schema-evolved versions pay the footer-merge scan;
+            # un-evolved tables keep the single-footer fast path.
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*dirs)
+
+    def _stage(self, table: str, df: DataFrame) -> str:
+        """Write ``df`` into a private staging dir (``_new_staging``)."""
+        staging = self._new_staging(table)
+        df.write.mode("overwrite").parquet(staging)
+        return staging
 
     def overwrite(self, table: str, df: DataFrame) -> int:
         """Write a complete new version, then atomically swap the
@@ -261,10 +432,9 @@ class TableStore:
             )
         v = cur + 1
         staging = self._stage(table, df)
-        manifest = [*self._manifest(table, cur), f"v={v}"]
-        if evolved or "#mergeSchema" in self._manifest_flags(table, cur):
-            manifest = ["#mergeSchema", *manifest]
-        self._commit(table, v, manifest, staging)
+        m = self._manifest(table, cur)
+        flags = ["#mergeSchema"] if evolved or "#mergeSchema" in m else []
+        self._commit(table, v, [*flags, *self._refs(m), f"v={v}"], staging)
         return v
 
     # -- the keyed contract (shared with BucketedTableStore) -----------------
@@ -301,91 +471,6 @@ class TableStore:
         v = v0 + 1
         self._commit(table, v, [f"v={v}"], self._stage(table, result))
         return v
-
-    def versions(self, table: str) -> list[int]:
-        """Versions still fully readable (their own dir plus every
-        manifest-referenced dir survive on disk), ascending — the
-        time-travel/change-feed horizon. Clamped to the committed
-        ``_CURRENT`` pointer: a writer that crashed after staging but
-        before the pointer swap leaves an orphan v-dir above the
-        pointer, which was never committed (``_commit``'s sweep will
-        delete it) and must not surface as a readable version —
-        otherwise ``change_feed``'s default ``to_version`` would diff
-        a phantom commit."""
-        d = self._dir(table)
-        if not os.path.isdir(d):
-            return []
-        cur = self.current_version(table)
-        if cur is None:
-            return []
-        on_disk = {n for n in os.listdir(d) if n.startswith("v=")}
-        out = []
-        for name in sorted(on_disk, key=lambda s: int(s.removeprefix("v="))):
-            v = int(name.removeprefix("v="))
-            if v <= cur and set(self._manifest(table, v)) <= on_disk:
-                out.append(v)
-        return out
-
-    def restore(self, table: str, version: int) -> int:
-        """Delta ``RESTORE TABLE ... TO VERSION AS OF`` / Iceberg
-        rollback as a METADATA-ONLY commit: the new version's manifest
-        is ``version``'s manifest verbatim (flags included), so zero
-        data bytes move — version dirs are immutable after commit, and
-        the restore simply re-references them. The rollback is itself
-        a commit: the mis-written versions it undoes stay
-        time-travelable (and ``change_feed``-diffable, surfacing the
-        restore's deletes/updates) until retention vacuums them, which
-        is exactly Delta's RESTORE contract. O(1) whatever the table
-        size."""
-        if version not in self.versions(table):
-            raise FileNotFoundError(
-                f"{table!r} version {version} not restorable "
-                f"(retained: {self.versions(table)})"
-            )
-        manifest = [
-            *sorted(self._manifest_flags(table, version)),
-            *self._manifest(table, version),
-        ]
-        os.makedirs(self._dir(table), exist_ok=True)
-        staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
-        new_v = (self.current_version(table) or 0) + 1
-        self._commit(table, new_v, manifest, staging)
-        return new_v
-
-    def appended_dirs(self, table: str, v: int) -> list[str] | None:
-        """If commit ``v`` was a PURE APPEND of version ``v-1`` (its
-        manifest is the prior manifest plus new dirs, same schema
-        flags), return the new dirs' absolute paths — the commit's
-        change rows are exactly those dirs' rows as inserts, readable
-        in O(new bytes). Returns None for overwrites/evolved commits
-        (``change_feed`` falls back to snapshot_diff). Mirrors how
-        Delta CDF serves insert-only commits from the added data files
-        without writing change files.
-
-        Conservatively returns None whenever either version carries
-        ``#mergeSchema``: under schema evolution the added dirs alone
-        need not contain every column of the merged v snapshot (an
-        evolved append may OMIT a pre-existing column), so reading
-        only the new dirs would fail or mis-shape the insert rows —
-        only the mergeSchema-aware full read (snapshot_diff path) is
-        guaranteed correct (r7 advice #1)."""
-        if v <= 0:
-            return None
-        try:
-            prev = [d for d in self._manifest(table, v - 1) if not d.startswith("#")]
-            cur = [d for d in self._manifest(table, v) if not d.startswith("#")]
-            prev_flags = self._manifest_flags(table, v - 1)
-            cur_flags = self._manifest_flags(table, v)
-        except FileNotFoundError:
-            return None
-        if "#mergeSchema" in prev_flags or "#mergeSchema" in cur_flags:
-            return None
-        if prev_flags != cur_flags or not set(prev) <= set(cur):
-            return None
-        new = [d for d in cur if d not in set(prev)]
-        if not new:
-            return None
-        return [os.path.join(self._dir(table), d) for d in new]
 
     def _write_stats_agg(
         self, table: str, v: int, manifest: list[str], target: str
@@ -435,7 +520,7 @@ class TableStore:
                 for rel, st in sorted(agg.items())
             ]
         out: list[tuple[str, dict | None]] = []
-        for d in self._manifest(table, v):
+        for d in self._refs(self._manifest(table, v)):
             dpath = os.path.join(self._dir(table), d)
             spath = os.path.join(dpath, _STATS_NAME)
             stats: dict = {}
@@ -456,10 +541,7 @@ class TableStore:
         """File list after zone-map pruning, plus the unpruned total —
         the observable data-skipping ratio (`(kept, total)`); the
         engine's analog of Delta's `numFilesSkipped` metric."""
-        v = self.current_version(table) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        files = self._version_files(table, v)
+        files = self._version_files(table, self._readable_version(table, version))
         kept = [p for p, st in files if _file_may_match(st, predicates)]
         return kept, len(files)
 
@@ -495,7 +577,7 @@ class TableStore:
             return empty
         v = self.current_version(table) if version is None else version
         reader = self.spark.read
-        if "#mergeSchema" in self._manifest_flags(table, v):
+        if "#mergeSchema" in self._manifest(table, v):
             reader = reader.option("mergeSchema", "true")
         df = reader.parquet(*kept)
         # Schema-evolved tables: files predating an added column carry
@@ -523,10 +605,7 @@ class TableStore:
         groups, exotic types), and for float/double columns (footer
         max excludes NaN; SQL MAX returns NaN when present) — the
         answer is identical either way, only the cost differs."""
-        v = self.current_version(table) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        files = self._version_files(table, v)
+        files = self._version_files(table, self._readable_version(table, version))
         n_rows = 0
         lo: dict[str, object] = {}
         hi: dict[str, object] = {}
@@ -609,23 +688,6 @@ class TableStore:
                 n_files, *[F.col(c) for c in cols]
             ).sortWithinPartitions(*cols)
         return self.overwrite(table, clustered)
-
-    def _vacuum(self, table: str, keep: int) -> None:
-        """Delete version dirs neither recent nor referenced by any of
-        the last ``keep`` versions' manifests (readers resolving an
-        older pointer get a grace window, as before)."""
-        v = self.current_version(table)
-        referenced: set[str] = set()
-        for recent in range(max(1, v - keep + 1), v + 1):
-            if os.path.isdir(os.path.join(self._dir(table), f"v={recent}")):
-                referenced.update(self._manifest(table, recent))
-        for name in os.listdir(self._dir(table)):
-            if name.startswith("v=") and name not in referenced:
-                n = int(name.removeprefix("v="))
-                if n <= v - keep:
-                    shutil.rmtree(os.path.join(self._dir(table), name), ignore_errors=True)
-            elif name.startswith(".staging-"):
-                _sweep_stale_staging(os.path.join(self._dir(table), name))
 
 
 _STATS_NAME = "_stats.json"
@@ -920,7 +982,7 @@ def _mutation_plan(
     raise ValueError(f"unknown operation {op!r}")
 
 
-class BucketedTableStore:
+class BucketedTableStore(_VersionedStore):
     """Key-hash-bucketed TableStore: incremental keyed mutations.
 
     The plain ``TableStore`` rewrites the whole table per mutation —
@@ -976,8 +1038,7 @@ class BucketedTableStore:
         capture_cdc: bool = False,
         auto_compact_deltas: int | None = None,
     ) -> None:
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root, retain_versions)
         self.keys = dict(keys or {})
         self.n_buckets = n_buckets
         # Delta-stack policy (Delta's optimized-write/auto-compaction
@@ -992,11 +1053,6 @@ class BucketedTableStore:
         # value, so CDC/feed consumers never mistake a layout rewrite
         # for the data commit they asked about.
         self.last_auto_compact_version: int | None = None
-        # How many trailing versions survive vacuum: the time-travel
-        # horizon. Every retained version is readable via
-        # ``read(table, version=n)`` (snapshot isolation: a version dir
-        # is immutable once the pointer moves past it).
-        self.retain_versions = max(1, retain_versions)
         # capture_cdc=True is Delta's enableChangeDataFeed: every
         # keyed mutation ALSO writes its change rows (snapshot_diff
         # schema) into the version dir at commit time, so
@@ -1005,31 +1061,47 @@ class BucketedTableStore:
         # capture itself costs O(affected buckets) at write time —
         # bounded by work the mutation already does.
         self.capture_cdc = capture_cdc
-        os.makedirs(root, exist_ok=True)
 
     # -- layout helpers ------------------------------------------------------
 
-    def _dir(self, table: str) -> str:
-        return os.path.join(self.root, table)
-
-    def _pointer(self, table: str) -> str:
-        return os.path.join(self._dir(table), "_CURRENT")
-
-    def exists(self, table: str) -> bool:
-        return os.path.exists(self._pointer(table))
-
-    def current_version(self, table: str) -> int | None:
-        if not self.exists(table):
-            return None
-        with open(self._pointer(table)) as f:
-            return int(f.read().strip().removeprefix("v="))
+    _MANIFEST = "_manifest.json"
 
     def _manifest(self, table: str, v: int) -> dict:
         """Version ``v``'s manifest (layout in the class docstring)."""
-        import json
-
-        with open(os.path.join(self._dir(table), f"v={v}", "_manifest.json")) as f:
+        with open(os.path.join(self._dir(table), f"v={v}", self._MANIFEST)) as f:
             return json.load(f)
+
+    def _write_manifest(self, table: str, v: int, manifest: dict, target: str) -> None:
+        with open(os.path.join(target, self._MANIFEST), "w") as f:
+            json.dump(manifest, f)
+
+    @staticmethod
+    def _refs(manifest: dict) -> list[str]:
+        return [
+            d
+            for entry in ("buckets", "deltas")
+            for dirs in manifest.get(entry, {}).values()
+            for d in dirs
+        ]
+
+    @staticmethod
+    def _appendable(prev: dict, cur: dict) -> bool:
+        """A commit that changed the merge-on-read deltas is a keyed
+        mutation: its rows are updates/deletes, not inserts — never the
+        append fast path."""
+        return prev.get("deltas", {}) == cur.get("deltas", {})
+
+    @staticmethod
+    def _restored(manifest: dict) -> dict:
+        """Commit-NATURE markers (``"compaction"``) are stripped from
+        the copy: they describe what the ORIGINAL commit did, not the
+        restore. A restore targeting a compact() head (the common case
+        once ``auto_compact_deltas`` makes every head a compaction
+        version) DOES change data relative to the current head, so
+        carrying the marker would make ``change_feed``'s is_compaction
+        skip emit zero rows for a data-changing rollback (r9 advice
+        #1)."""
+        return {k: x for k, x in manifest.items() if k != "compaction"}
 
     @staticmethod
     def _bucket_col(bucketing: tuple[list[str], int]):
@@ -1111,7 +1183,7 @@ class BucketedTableStore:
         vrel = f"v={v}"
         if bucketing is None:
             bucketing = self._bucketing(table, None, df)
-        staging = self._bstage(
+        staging = self._stage(
             table, df.withColumn("__bucket", self._bucket_col(bucketing))
         )
         data_dir = os.path.join(staging, "data")
@@ -1155,7 +1227,7 @@ class BucketedTableStore:
             manifest["deltas"] = deltas
         if manifest_extra:
             manifest.update(manifest_extra)
-        self._bcommit(table, v, manifest, staging)
+        self._commit(table, v, manifest, staging)
         return v
 
     @staticmethod
@@ -1173,17 +1245,16 @@ class BucketedTableStore:
             "buckets": buckets,
         }
 
-    def _bstage(self, table: str, df: DataFrame) -> str:
+    def _stage(self, table: str, df: DataFrame) -> str:
         """Write bucket-partitioned data into a private staging dir
-        (promoted or discarded at commit, as TableStore). Rows go to the
-        bucket in ``df``'s ``__bucket`` column if it has one, else to
-        the bucket of the declared keys."""
+        (``_new_staging``). Rows go to the bucket in ``df``'s
+        ``__bucket`` column if it has one, else to the bucket of the
+        declared keys."""
         if "__bucket" not in df.columns:
             df = df.withColumn(
                 "__bucket", self._bucket_col(self._bucketing(table, None, df))
             )
-        os.makedirs(self._dir(table), exist_ok=True)
-        staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
+        staging = self._new_staging(table)
         (
             df.write.partitionBy("__bucket")
             .mode("overwrite")
@@ -1191,49 +1262,7 @@ class BucketedTableStore:
         )
         return staging
 
-    def _bcommit(self, table: str, v: int, manifest: dict, staging: str) -> None:
-        """Same commit protocol as ``TableStore._commit``: per-table
-        lock, version CAS (fail — discarding the stage — if another
-        writer advanced the pointer since this write began), orphan
-        sweep, rename, atomic pointer swap. A crash at any point before
-        the final swap leaves readers on the old consistent version and
-        a replay of the write succeeds."""
-        import json
-
-        with _CommitLock(os.path.join(self._dir(table), "_COMMIT_LOCK")):
-            if (self.current_version(table) or 0) != v - 1:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{table!r}: version advanced to "
-                    f"{self.current_version(table)} while writing v={v} "
-                    f"(expected {v - 1}); staged write discarded"
-                )
-            vdir = os.path.join(self._dir(table), f"v={v}")
-            if os.path.isdir(vdir):
-                shutil.rmtree(vdir)
-            os.replace(staging, vdir)
-            with open(os.path.join(vdir, "_manifest.json"), "w") as f:
-                json.dump(manifest, f)
-            tmp = self._pointer(table) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(f"v={v}")
-            os.replace(tmp, self._pointer(table))
-            self._vacuum(table, keep=self.retain_versions)
-
     # -- TableStore surface --------------------------------------------------
-
-    def _resolve(self, table: str, version: int | None) -> dict:
-        """Manifest of ``version`` (None = current), which must be
-        retained."""
-        v = version if version is not None else self.current_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        if version is not None and version not in self.versions(table):
-            raise FileNotFoundError(
-                f"{table!r} version {version} not retained "
-                f"(retained: {self.versions(table)})"
-            )
-        return self._manifest(table, v)
 
     def _scan(
         self, table: str, m: dict, bucket_ids: set[int] | None
@@ -1298,46 +1327,14 @@ class BucketedTableStore:
         shadowed = delta.select(*keys).dropDuplicates(list(keys))
         return base.join(shadowed, list(keys), "left_anti").unionByName(live)
 
-    def versions(self, table: str) -> list[int]:
-        """Retained (time-travel-readable) versions, oldest first. A
-        version is readable while its dir survives vacuum — the last
-        ``retain_versions`` commits (Delta/Iceberg snapshot listing).
-        Clamped to the committed ``_CURRENT`` pointer so a crashed
-        writer's orphan v-dir (staged + manifest written, pointer
-        never swapped) is never surfaced as readable."""
-        if not os.path.isdir(self._dir(table)):
-            return []
-        cur = self.current_version(table)
-        if cur is None:
-            return []
-        out = []
-        for name in os.listdir(self._dir(table)):
-            if not (
-                name.startswith("v=")
-                and os.path.exists(
-                    os.path.join(self._dir(table), name, "_manifest.json")
-                )
-            ):
-                continue
-            # a version is readable only if its full file closure
-            # survived vacuum (an old dir can outlive its closure when
-            # a newer manifest carries forward just some of its data)
-            v = int(name.removeprefix("v="))
-            if v > cur:
-                continue  # orphan above the pointer: never committed
-            m = self._manifest(table, v)
-            refs = [d for dirs in m["buckets"].values() for d in dirs]
-            refs += [d for dirs in m.get("deltas", {}).values() for d in dirs]
-            if all(os.path.exists(os.path.join(self._dir(table), d)) for d in refs):
-                out.append(v)
-        return sorted(out)
-
     def read(self, table: str, version: int | None = None) -> DataFrame:
         """Current snapshot, or a retained historical ``version``
         (time travel). Version dirs are immutable after the pointer
         swap, so a reader holding version N sees a consistent snapshot
         regardless of concurrent mutations (snapshot isolation)."""
-        return self._scan(table, self._resolve(table, version), None)
+        return self._scan(
+            table, self._manifest(table, self._readable_version(table, version)), None
+        )
 
     def read_keyed(
         self, table: str, key_df: DataFrame, version: int | None = None
@@ -1360,7 +1357,7 @@ class BucketedTableStore:
             raise ValueError(
                 f"read_keyed({table!r}): no declared bucket keys"
             )
-        m = self._resolve(table, version)
+        m = self._manifest(table, self._readable_version(table, version))
         bucketing = self._keyed_bucketing(table, m)
         rows = key_df.select(
             self._bucket_col(bucketing).alias("__b"), *keys
@@ -1445,7 +1442,7 @@ class BucketedTableStore:
         vrel = f"v={new_v}"
         # new rows hash the way the carried buckets were written
         bucketing = self._bucketing(table, m, df)
-        staging = self._bstage(
+        staging = self._stage(
             table, df.withColumn("__bucket", self._bucket_col(bucketing))
         )
         buckets = {k: list(dirs) for k, dirs in m["buckets"].items()}
@@ -1462,7 +1459,7 @@ class BucketedTableStore:
             manifest["deltas"] = {
                 k: list(dirs) for k, dirs in m["deltas"].items()
             }
-        self._bcommit(table, new_v, manifest, staging)
+        self._commit(table, new_v, manifest, staging)
         return new_v
 
     # -- the incremental path ------------------------------------------------
@@ -1722,65 +1719,6 @@ class BucketedTableStore:
             return p
         return None
 
-    def restore(self, table: str, version: int) -> int:
-        """Metadata-only rollback, the bucketed twin of
-        ``TableStore.restore``: commit a new version whose manifest
-        (per-bucket dir lists and their schema) is ``version``'s
-        verbatim. Zero data movement; undone versions stay
-        time-travelable until vacuumed.
-
-        Commit-NATURE markers (``"compaction"``) are stripped from the
-        copy: they describe what the ORIGINAL commit did, not this one.
-        A restore targeting a compact() head (the common case once
-        ``auto_compact_deltas`` makes every head a compaction version)
-        DOES change data relative to the current head, so carrying the
-        marker would make ``change_feed``'s is_compaction skip emit
-        zero rows for a data-changing rollback (r9 advice #1)."""
-        import copy
-
-        if version not in self.versions(table):
-            raise FileNotFoundError(
-                f"{table!r} version {version} not restorable "
-                f"(retained: {self.versions(table)})"
-            )
-        manifest = copy.deepcopy(self._manifest(table, version))
-        manifest.pop("compaction", None)
-        os.makedirs(self._dir(table), exist_ok=True)
-        staging = tempfile.mkdtemp(dir=self._dir(table), prefix=".staging-")
-        new_v = (self.current_version(table) or 0) + 1
-        self._bcommit(table, new_v, manifest, staging)
-        return new_v
-
-    def appended_dirs(self, table: str, v: int) -> list[str] | None:
-        """Pure-append detection, the bucketed twin of
-        ``TableStore.appended_dirs``: commit ``v`` kept every prior
-        bucket dir and only ADDED dirs -> those dirs' rows are the
-        commit's inserts, readable in O(new bytes)."""
-        if v <= 0:
-            return None
-        try:
-            mp = self._manifest(table, v - 1)
-            mc = self._manifest(table, v)
-        except FileNotFoundError:
-            return None
-        if mp.get("deltas", {}) != mc.get("deltas", {}):
-            # a merge-on-read commit: its rows are updates/deletes, not
-            # inserts — never the append fast path
-            return None
-        prev, cur = mp["buckets"], mc["buckets"]
-        new: list[str] = []
-        for k, dirs in prev.items():
-            cd = cur.get(k, [])
-            if not set(dirs) <= set(cd):
-                return None  # a prior dir was dropped: not an append
-        for k, dirs in cur.items():
-            for d in dirs:
-                if d not in set(prev.get(k, [])):
-                    new.append(d)
-        if not new:
-            return None
-        return [os.path.join(self._dir(table), d) for d in new]
-
     def compact(self, table: str, max_dirs_per_bucket: int = 1) -> int | None:
         """Compact buckets whose manifest references more than
         ``max_dirs_per_bucket`` dirs (append stacking) OR that carry
@@ -1822,30 +1760,3 @@ class BucketedTableStore:
             return bool(self._manifest(table, v).get("compaction"))
         except FileNotFoundError:
             return False
-
-    def _vacuum(self, table: str, keep: int) -> None:
-        """Delete version dirs not referenced by any of the last
-        ``keep`` versions' manifests."""
-        v = self.current_version(table)
-        referenced: set[str] = set()
-        for recent in range(max(1, v - keep + 1), v + 1):
-            vdir = os.path.join(self._dir(table), f"v={recent}")
-            if os.path.isdir(vdir):
-                m = self._manifest(table, recent)
-                referenced.add(f"v={recent}")
-                for dirs in m["buckets"].values():
-                    for d in dirs:
-                        referenced.add(d.split("/", 1)[0])
-                for dirs in m.get("deltas", {}).values():
-                    for d in dirs:
-                        referenced.add(d.split("/", 1)[0])
-        for name in os.listdir(self._dir(table)):
-            if name.startswith("v=") and name not in referenced:
-                n = int(name.removeprefix("v="))
-                if n <= v - keep:
-                    shutil.rmtree(
-                        os.path.join(self._dir(table), name), ignore_errors=True
-                    )
-            elif name.startswith(".staging-"):
-                _sweep_stale_staging(os.path.join(self._dir(table), name))
-

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from etl_notifier_pipeline_spark.functions import decode_event_payload
 from etl_notifier_pipeline_spark.ledger import LEDGER_KEYS, Ledger
 from etl_notifier_pipeline_spark.sources.ingest import read_csv_all_string
-from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore, local_frame
+from etl_notifier_pipeline_spark.storage import BucketedTableStore, _VersionedStore, local_frame
 
 log = logging.getLogger(__name__)
 
@@ -157,7 +157,7 @@ class ApprovalPipeline:
     # with the keyed calls works (e.g. a plain full-rewrite TableStore);
     # a BucketedTableStore passed as ``store=`` must declare the same
     # keys.
-    store: TableStore | BucketedTableStore | None = None
+    store: _VersionedStore | None = None
     store_root: str | None = None
     # Driver-side staging iterates the micro-batch's approval events
     # (human-in-the-loop click rates — tens, not millions). Nothing

@@ -263,19 +263,26 @@ class TestChangeFeed:
         ok = change_feed(store, "t", ["k"], from_version=3, to_version=4)
         assert ok.count() == 2  # one delete + one insert
 
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
     def test_vacuum_physical_deletion_and_referenced_survival(
-        self, spark, tmp_path
+        self, spark, tmp_path, backend
     ):
         """The m22 contract, physically: versions past the horizon are
         DELETED from disk (the storage-cost bound), EXCEPT dirs a
         retained manifest still references — restore()'s metadata-only
         commits re-reference old dirs, and vacuuming those would break
-        the current head."""
+        the current head. One protocol for both manifest formats."""
         import os
 
-        from etl_notifier_pipeline_spark.storage import TableStore
+        from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
 
-        store = TableStore(spark, str(tmp_path / "vr"), retain_versions=2)
+        root = str(tmp_path / "vr")
+        store = (
+            TableStore(spark, root, retain_versions=2) if backend == "table_store"
+            else BucketedTableStore(
+                spark, root, keys={"t": ["k"]}, n_buckets=4, retain_versions=2
+            )
+        )
         for i in range(1, 4):  # v1, v2, v3
             store.overwrite("t", spark.createDataFrame([(i,)], "k long"))
         d = store._dir("t")
@@ -610,18 +617,27 @@ class TestRestore:
     manifest and zero data files, reads serve the restored version's
     exact contents, and undone versions stay time-travelable."""
 
-    def test_tablestore_restore(self, spark, tmp_path):
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
+    def test_restore(self, spark, tmp_path, backend):
         import os
 
-        from etl_notifier_pipeline_spark.storage import TableStore
+        from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore
 
-        store = TableStore(spark, str(tmp_path / "rst"), retain_versions=5)
-        a = spark.range(50).select(F.col("id").alias("k"),
-                                   (F.col("id") * 2).alias("v"))
-        b = spark.range(30).select(F.col("id").alias("k"),
-                                   (F.col("id") * 3).alias("v"))
-        store.overwrite("t", a)
-        store.overwrite("t", b)
+        root = str(tmp_path / backend)
+        store = (
+            TableStore(spark, root, retain_versions=5) if backend == "table_store"
+            else BucketedTableStore(
+                spark, root, keys={"t": ["k"]}, n_buckets=4, retain_versions=5,
+            )
+        )
+        keyed = lambda rows: spark.createDataFrame(rows, ["k", "v"]).withColumn(  # noqa: E731
+            "__o", F.monotonically_increasing_id()
+        )
+        store.overwrite("t", spark.range(40).select(
+            F.col("id").alias("k"), F.lit("ok").alias("v")))
+        bad = keyed([(i, "BAD") for i in range(10)])
+        store.apply_keyed_mutation("t", bad, ["k"], ["__o"], "update")
+        assert store.read("t").filter(F.col("v") == "BAD").count() == 10
         v3 = store.restore("t", 1)
         assert v3 == 3
         cur, v1 = store.read("t"), store.read("t", version=1)
@@ -629,50 +645,20 @@ class TestRestore:
         assert v1.exceptAll(cur).count() == 0
         # metadata-only: the restore commit wrote no data files
         vdir = os.path.join(store._dir("t"), "v=3")
-        assert not [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+        if backend == "table_store":
+            assert not [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+        else:
+            assert not os.path.isdir(os.path.join(vdir, "data"))
         # the undone version stays time-travelable until vacuumed
-        assert store.read("t", version=2).count() == 30
-        # history continues past the restore: append then re-read
-        store.append("t", a.filter(F.col("k") >= 100))
-        assert store.read("t").count() == 50
+        assert store.read("t", version=2).filter(F.col("v") == "BAD").count() == 10
+        # history continues past the restore: keyed mutations and
+        # appends work on the restored state
+        store.apply_keyed_mutation("t", keyed([(0, "fixed")]), ["k"], ["__o"], "update")
+        store.append("t", spark.createDataFrame([(100, "new")], ["k", "v"]))
+        got = {r["k"]: r["v"] for r in store.read("t").collect()}
+        assert (len(got), got[0], got[1], got[100]) == (41, "fixed", "ok", "new")
         with pytest.raises(FileNotFoundError):
             store.restore("t", 99)
-
-    def test_bucketed_restore(self, spark, tmp_path):
-        import os
-
-        from etl_notifier_pipeline_spark.storage import BucketedTableStore
-
-        store = BucketedTableStore(
-            spark, str(tmp_path / "brst"), keys={"t": ["k"]},
-            n_buckets=4, retain_versions=5,
-        )
-        base = spark.range(40).select(F.col("id").alias("k"),
-                                      F.lit("ok").alias("v"))
-        store.overwrite("t", base)
-        bad = spark.createDataFrame(
-            [(i, "BAD") for i in range(10)], ["k", "v"]
-        ).withColumn("__o", F.monotonically_increasing_id())
-        store.apply_keyed_mutation("t", bad, ["k"], ["__o"], "update")
-        assert (
-            store.read("t").filter(F.col("v") == "BAD").count() == 10
-        )
-        v3 = store.restore("t", 1)
-        assert v3 == 3
-        assert store.read("t").filter(F.col("v") == "BAD").count() == 0
-        assert store.read("t").count() == 40
-        vdir = os.path.join(store._dir("t"), "v=3")
-        data = os.path.join(vdir, "data")
-        assert not os.path.isdir(data)
-        # keyed mutations keep working on the restored state
-        fix = spark.createDataFrame([(0, "fixed")], ["k", "v"]).withColumn(
-            "__o", F.monotonically_increasing_id()
-        )
-        store.apply_keyed_mutation("t", fix, ["k"], ["__o"], "update")
-        got = dict(
-            (r["k"], r["v"]) for r in store.read("t").collect()
-        )
-        assert got[0] == "fixed" and got[1] == "ok"
 
 
 class TestCdcReplicationFold:
