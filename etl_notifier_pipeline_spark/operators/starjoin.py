@@ -204,6 +204,9 @@ def ensure_bucketed_layout(
         cols = spec.get("columns")
         name = bucketed_table_name(sf_dir, table, n_buckets, spec)
         if not spark.catalog.tableExists(name):
+            src = load_table(spark, sf_dir, table)
+            if cols:
+                src = src.select(*cols)
             # bucket METADATA lives in the session catalog (in-memory
             # here; Hive/Glue/Unity on a deployment) while the bucketed
             # FILES persist in the warehouse — a fresh session finding
@@ -219,7 +222,7 @@ def ensure_bucketed_layout(
             if os.path.exists(os.path.join(loc, "_SUCCESS")):
                 ddl = ", ".join(
                     f"{f.name} {f.dataType.simpleString()}"
-                    for f in spark.read.parquet(loc).schema.fields
+                    for f in src.schema.fields
                 )
                 spark.sql(
                     f"CREATE TABLE {name} ({ddl}) USING parquet "
@@ -228,9 +231,6 @@ def ensure_bucketed_layout(
                 )
             else:
                 t0 = time.time()
-                src = load_table(spark, sf_dir, table)
-                if cols:
-                    src = src.select(*cols)
                 (
                     # repartition on the bucket key first: bucketBy
                     # writes one file per (input partition x bucket),

@@ -463,7 +463,7 @@ def st13_streaming_summary_maintenance(
         agg_delta,
         merge_aggregates,
     )
-    from etl_notifier_pipeline_spark.storage import TableStore
+    from etl_notifier_pipeline_spark.storage import TableStore, _as_nullable
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -471,7 +471,7 @@ def st13_streaming_summary_maintenance(
     tmp = tempfile.mkdtemp(prefix="st13_")
     src = f"{tmp}/src"
     ev.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = _as_nullable(ev.schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -601,7 +601,7 @@ def st14_streaming_incremental_dedup(
     import tempfile
 
     from etl_notifier_pipeline_spark.extensions import dedup as D
-    from etl_notifier_pipeline_spark.storage import TableStore
+    from etl_notifier_pipeline_spark.storage import TableStore, _as_nullable
 
     docs = load_table(spark, sf_dir, "documents")
     tmp = tempfile.mkdtemp(prefix="st14_")
@@ -618,7 +618,7 @@ def st14_streaming_incremental_dedup(
             for fn in files:
                 _os.utime(_os.path.join(root, fn), (now + k, now + k))
         _os.utime(path, (now + k, now + k))
-    schema = spark.read.parquet(f"{src}/b0.parquet").schema
+    schema = _as_nullable(docs.schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -758,7 +758,7 @@ def st15_streaming_semantic_dedup(
     import tempfile
 
     from etl_notifier_pipeline_spark.extensions import similarity as S
-    from etl_notifier_pipeline_spark.storage import TableStore
+    from etl_notifier_pipeline_spark.storage import TableStore, _as_nullable
 
     emb = load_table(spark, sf_dir, "embeddings")
     tmp = tempfile.mkdtemp(prefix="st15_")
@@ -774,7 +774,7 @@ def st15_streaming_semantic_dedup(
             for fn in files:
                 _os.utime(_os.path.join(root, fn), (now + k, now + k))
         _os.utime(path, (now + k, now + k))
-    schema = spark.read.parquet(f"{src}/b0.parquet").schema
+    schema = _as_nullable(emb.schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1000,6 +1000,7 @@ def st17_streaming_vector_serve(
     import time as _time
 
     from etl_notifier_pipeline_spark.extensions import similarity as S
+    from etl_notifier_pipeline_spark.storage import _as_nullable
 
     emb = load_table(spark, sf_dir, "embeddings")
     index, params = S.ivf_build(emb, n_cells=4)
@@ -1016,7 +1017,7 @@ def st17_streaming_vector_serve(
             for fn in files:
                 _os.utime(_os.path.join(root, fn), (now + k, now + k))
         _os.utime(path, (now + k, now + k))
-    schema = spark.read.parquet(f"{src}/b1.parquet").schema
+    schema = _as_nullable(emb.select("vec_id").schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

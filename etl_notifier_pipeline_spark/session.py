@@ -148,8 +148,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # Parquet TIMESTAMP(NANOS) (the events fixture) has no Spark
-        # type; read as long and convert in catalog.load_table.
+        # Parquet TIMESTAMP(NANOS) has no Spark type: read such a
+        # column as long instead of failing the scan. No fixture has
+        # one; their timestamps are all MICROS (catalog.SCHEMAS).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # isAdjustedToUTC=false parquet timestamps otherwise surface as
         # TIMESTAMP_NTZ, which strict chrono builtins reject; with the

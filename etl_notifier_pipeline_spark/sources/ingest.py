@@ -11,9 +11,9 @@ strings on insert.
 
 Spark-first translation:
 
-- ``read_csv_all_string``: distributed CSV scan, header=True, no
-  inference — Spark's default CSV column type is already string, which
-  is exactly the reference's all-TEXT semantics. The whole file is never
+- ``read_csv_all_string``: the header line is parsed on the driver and
+  becomes an all-string schema (the reference's all-TEXT semantics);
+  the rows are a distributed CSV scan under that schema, never
   materialized on one node (unlike the reference's driver-memory list).
 - ``cast_to_template``: the "LIKE template" clone — cast the all-string
   frame to a template ``StructType`` column-by-column (Postgres-style
@@ -26,7 +26,9 @@ Spark-first translation:
 
 from __future__ import annotations
 
+import csv
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,19 +53,40 @@ def derive_table_name(file_name: str) -> str:
     return re.sub(r"[^a-zA-Z0-9_]", "_", base).lower()
 
 
+def _csv_header(path: str) -> list[str]:
+    """Column names from the first non-blank line of the CSV at ``path``,
+    named as Spark names a CSV header (case-insensitive analysis, its
+    default): an empty name becomes ``_c{i}``, and a name that repeats
+    in any case gets its position appended."""
+    with open(path, encoding="utf-8", errors="replace", newline="") as f:
+        line = next((ln for ln in f if ln.strip()), None)
+    if line is None:
+        return []
+    row = next(csv.reader([line]))
+    seen = Counter(c.lower() for c in row if c)
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if seen[c.lower()] > 1 else c
+        for i, c in enumerate(row)
+    ]
+
+
 def read_csv_all_string(spark: SparkSession, path: str) -> DataFrame:
     """Read CSV with header; every column StringType (reference all-TEXT).
 
+    ``path`` is one local file. Its header is read on the driver
+    (``_csv_header``), so building the frame launches no Spark job;
+    Spark then skips the header line.
     FAILFAST surfaces malformed rows as errors instead of silent nulls —
     the reference similarly aborts the file on parse problems. The scan
     is distributed: at 100 TB this is N parallel file splits, not one
     driver-side ``rows.append`` loop (contrast
     ``process-pipeline.py:339-340``).
     """
-    df = spark.read.options(header=True, mode="FAILFAST").csv(path)
-    if len(df.columns) == 0 or all(c.startswith("_c") for c in df.columns):
+    cols = _csv_header(path)
+    if not cols or all(c.startswith("_c") for c in cols):
         raise EmptyInputError(f"CSV file is empty or has no header: {path}")
-    return df
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
+    return spark.read.schema(schema).options(header=True, mode="FAILFAST").csv(path)
 
 
 def cast_to_template(df: DataFrame, template: T.StructType) -> DataFrame:

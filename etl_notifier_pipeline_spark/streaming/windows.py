@@ -3,8 +3,8 @@
 Batch and streaming share these plans: tumbling/sliding via
 ``F.window``, sessions via ``F.session_window``, stream-side dedup via
 ``dropDuplicates`` under a watermark. The streaming entry reads the
-events fixture through a real ``readStream`` file source (nanos ts
-read as long, converted like the batch catalog does).
+events fixture through a real ``readStream`` file source, with the
+catalog's declared events schema.
 """
 
 from __future__ import annotations
@@ -16,14 +16,15 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_notifier_pipeline_spark.catalog import table_path
+from etl_notifier_pipeline_spark.catalog import SCHEMAS, table_path
 
 VAL = "decimal(10,2)"
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events fixture as a streaming source (schema pinned from the
-    batch read — streaming file sources never infer).
+    """events fixture as a streaming source, its schema pinned to the
+    catalog's declared ``SCHEMAS["events"]`` (streaming file sources
+    never infer, and building the stream launches no job).
 
     The file source needs a *directory*; the single-file driver
     fixture is staged into a temp dir via symlink (no data copy). An
@@ -33,7 +34,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     finds zero files and silently streams nothing (caught by the r5
     sf10 run: st05 'finished' in 0.2s)."""
     path = table_path(sf_dir, "events")
-    raw_schema = spark.read.parquet(path).schema  # ts: long (nanos)
     if os.path.isdir(path):
         stage = path
     else:
@@ -44,15 +44,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = os.path.join(stage, "events.parquet")
         if not os.path.exists(link):
             os.symlink(path, link)
-    raw = spark.readStream.schema(raw_schema).parquet(stage)
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        # isAdjustedToUTC=false parquet under NTZ inference; session tz
-        # is pinned UTC so the cast is a wall-clock no-op (watermarks
-        # and F.window need TIMESTAMP on every runtime).
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return spark.readStream.schema(SCHEMAS["events"]).parquet(stage)
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:

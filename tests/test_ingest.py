@@ -36,6 +36,55 @@ def test_empty_csv_errors(spark, tmp_path):
         read_csv_all_string(spark, str(p))
 
 
+def test_blank_header_errors(spark, tmp_path):
+    for i, text in enumerate(["\n  \n\n", ",,\n1,2,3\n"]):
+        p = tmp_path / f"blank{i}.csv"
+        p.write_text(text)
+        with pytest.raises(EmptyInputError):
+            read_csv_all_string(spark, str(p))
+
+
+def test_header_only_keeps_columns(spark, tmp_path):
+    p = tmp_path / "header_only.csv"
+    p.write_text("id,name\n")
+    df = read_csv_all_string(spark, str(p))
+    assert df.columns == ["id", "name"]
+    assert df.count() == 0
+
+
+@pytest.mark.parametrize(
+    "text, names",
+    [
+        ("a,a,b\n1,2,3\n", ["a0", "a1", "b"]),
+        ("A,a,b\n1,2,3\n", ["A0", "a1", "b"]),
+        ("a,,b\n1,2,3\n", ["a", "_c1", "b"]),
+        ('"x,y",z\n"1,5",2\n', ["x,y", "z"]),
+        (" a , b\n1,2\n", [" a ", " b"]),
+        ("\n \nid,v\r\n1,2\r\n", ["id", "v"]),
+    ],
+    ids=["dup", "dup_case", "empty_name", "quoted_comma", "padded", "blank_lines_crlf"],
+)
+def test_header_names_follow_spark(spark, tmp_path, text, names):
+    """The driver-side header parse names columns as Spark's own CSV
+    header inference does, and the rows still parse under them."""
+    p = tmp_path / "h.csv"
+    p.write_text(text)
+    df = read_csv_all_string(spark, str(p))
+    inferred = spark.read.options(header=True, mode="FAILFAST").csv(str(p))
+    assert df.columns == names == inferred.columns
+    assert df.collect() == inferred.collect()
+
+
+def test_read_csv_launches_no_jobs(spark, csv):
+    from test_bucketed_store import _jobs
+
+    _, n = _jobs(spark, lambda: spark.range(10).count(), "csv-control")
+    assert n >= 1, "the job counter sees no jobs at all"
+    df, n = _jobs(spark, lambda: read_csv_all_string(spark, csv), "csv-read")
+    assert n == 0
+    assert df.count() == 2
+
+
 def test_template_cast(spark, csv):
     template = T.StructType(
         [

@@ -28,8 +28,10 @@ queries depend on:
 - **Per-key streaming state stays bounded**: user_id/event_id offsets
   mean R x more keys with the SAME per-key event count — state size
   per key is constant, matching how real traffic scales.
-- **ts round-trips as TIMESTAMP_NTZ** so the amplified events table
-  exercises the same nanosAsLong/NTZ path the driver fixtures do.
+- **ts is written as TIMESTAMP_NTZ**: parquet INT64
+  ``TIMESTAMP(MICROS, isAdjustedToUTC=false)``, the physical type the
+  driver fixtures' timestamps already have, which the catalog's
+  declared ``timestamp`` reads as the same wall clock.
 
 Usage: python tools/scale_up.py --factor 100 --out /root/repo/.scale/sf10
 """
