@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -76,12 +77,32 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _footer_columns(path: str) -> list[str]:
+    """Top-level column names in the parquet footer at ``path``; for a
+    Spark-written directory, in the footer of its first part file."""
+    if os.path.isdir(path):
+        parts = sorted(
+            f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if not parts:
+            raise FileNotFoundError(f"{path}: no parquet part file")
+        path = os.path.join(path, parts[0])
+    return pq.read_schema(path).names
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``name`` at ``sf_dir`` read with its declared schema: building the
-    frame lists one path on the driver and launches no Spark job. A file
-    whose column types conflict with ``SCHEMAS[name]`` fails its scan
+    frame reads one footer and lists one path on the driver, and launches
+    no Spark job. A file that lacks a declared column raises here
+    (Spark would read the column as all-null); one whose column types
+    conflict with ``SCHEMAS[name]`` fails its scan
     (``PARQUET_COLUMN_DATA_TYPE_MISMATCH``)."""
-    return spark.read.schema(SCHEMAS[name]).parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    present = set(_footer_columns(path))
+    missing = [c for c in SCHEMAS[name].names if c not in present]
+    if missing:
+        raise ValueError(f"{path} lacks declared columns {missing}")
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

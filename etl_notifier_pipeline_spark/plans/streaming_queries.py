@@ -17,6 +17,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_notifier_pipeline_spark.catalog import load_table
 from etl_notifier_pipeline_spark.functions.scalar import ts_micros
@@ -943,6 +944,17 @@ def st16_streaming_cdc_replication(
     return replica.read("r").select("event_id", "user_id", "event_type", "value")
 
 
+def read_batch_dirs(spark: SparkSession, root: str, schema: StructType) -> DataFrame:
+    """The ``b<batch_id>`` parquet directories a ``foreachBatch`` fold
+    wrote under ``root``, listed on the driver and read with ``schema``:
+    no glob for the sink-metadata probe to miss, no schema inference,
+    no Spark job."""
+    import os as _os
+
+    dirs = sorted(_os.path.join(root, d) for d in _os.listdir(root) if d.startswith("b"))
+    return spark.read.schema(schema).parquet(*dirs)
+
+
 @register(
     "st17_streaming_vector_serve",
     category="streaming",
@@ -1035,6 +1047,6 @@ def st17_streaming_vector_serve(
         .start()
     )
     q.awaitTermination()
-    tombs = spark.read.parquet(f"{tomb_dir}/b*")
+    tombs = read_batch_dirs(spark, tomb_dir, schema)
     queries = emb.filter(F.col("vec_id") < 8)
     return S.ivf_query(index, params, queries, k=5, n_probe=4, exclude=tombs)

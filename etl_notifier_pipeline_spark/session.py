@@ -164,6 +164,14 @@ def get_spark(
         # CPU with the listing job, 0.05 s / 0.08-0.16 s listed
         # serially. Catalog reads pass one file per table, under 32.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # Keep every generated class of a repeated plan compiled. The
+        # default cache holds 100 classes; one headline sweep generates
+        # about 280 and one approval micro-batch 220-257 (4-core host,
+        # local[2]), so each repeat recompiled them all (Janino on the
+        # driver, then the JIT). 1000 is about 3x the largest working
+        # set. Static and sized once per JVM by the first session: it
+        # cannot go through spark.conf.set on a running session.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", driver_mem)
         # Per-task DATA budget, both sides of the shuffle — the r11
         # spill diagnosis (docs/SCALE.md "The spill levers, measured"):

@@ -266,3 +266,16 @@ def test_scale_bench_metrics_read_the_status_store(spark):
     assert sum(s["shuffleWriteBytes"] for s in new.values()) > 0
     gc, peak = _gc_and_heap(spark, peak=False)
     assert isinstance(gc, int) and gc >= 0 and peak is None
+
+
+def test_scale_bench_counts_codegen_compiles(spark):
+    """``codegenCompiles`` is read from the JVM's CodegenMetrics: a plan
+    no earlier run generated (its literal is in the generated source)
+    compiles at least one class."""
+    from pyspark.sql import functions as F
+
+    from tools.scale_bench import _codegen_compiles
+
+    before = _codegen_compiles(spark)
+    spark.range(10).select((F.col("id") + F.lit(918_273_645)).alias("v")).collect()
+    assert _codegen_compiles(spark) - before > 0

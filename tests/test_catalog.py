@@ -61,6 +61,20 @@ def test_conflicting_column_type_fails_the_scan(spark, tmp_path):
         load_table(spark, str(tmp_path), "events").collect()
 
 
+@pytest.mark.parametrize("writer", ["pyarrow_file", "spark_dir"])
+def test_missing_declared_column_raises(spark, tmp_path, writer):
+    """A table file without a declared column fails the load, naming
+    the column, instead of reading it as all-null."""
+    region = load_table(spark, SF_DIR, "region").select("r_regionkey")
+    path = table_path(str(tmp_path), "region")
+    if writer == "pyarrow_file":
+        region.toPandas().to_parquet(path)
+    else:
+        region.write.parquet(path)
+    with pytest.raises(ValueError, match=r"lacks declared columns \['r_name'\]"):
+        load_table(spark, str(tmp_path), "region")
+
+
 def _reinferred_schemas(tree: ast.AST) -> list[int]:
     """Lines of ``<x>.read.parquet(...).schema`` expressions."""
     return [

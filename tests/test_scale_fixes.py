@@ -464,3 +464,24 @@ def test_session_split_conf_env_override_wins(monkeypatch):
         overridden["spark.sql.adaptive.advisoryPartitionSizeInBytes"]
         == "32m"
     )
+
+
+def test_repeated_plans_reuse_their_generated_classes(spark):
+    """The codegen cache holds a working set larger than Spark's default
+    100 entries: each plan inlines its own int literal into its
+    generated source, so 80 plans generate more than 100 distinct
+    classes, and running them again compiles none of them."""
+    from tools.scale_bench import _codegen_compiles
+
+    def round_():
+        for i in range(80):
+            spark.range(4, numPartitions=1).select(
+                (F.col("id") * 1_000_003 + F.lit(7_770_000 + i)).alias("v")
+            ).collect()
+
+    start = _codegen_compiles(spark)
+    round_()
+    first = _codegen_compiles(spark)
+    round_()
+    assert first - start > 100
+    assert _codegen_compiles(spark) - first == 0

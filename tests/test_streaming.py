@@ -481,3 +481,23 @@ def test_st14_streaming_dedup_arrival_order_semantics(spark):
                 r["best_match_id"] % ST14_N_BATCHES
                 < r["doc_id"] % ST14_N_BATCHES
             )
+
+
+def test_st17_tombstone_read_lists_batch_dirs_without_jobs(spark, tmp_path):
+    """st17 reads its fold's ``b<batch_id>`` directories by name with the
+    stream's schema: building the read launches no Spark job, and it
+    returns every batch's rows and nothing else under the root."""
+    from pyspark.sql import types as T
+
+    from etl_notifier_pipeline_spark.plans.streaming_queries import read_batch_dirs
+    from test_bucketed_store import _jobs
+
+    schema = T.StructType([T.StructField("vec_id", T.LongType())])
+    root = tmp_path / "tombs"
+    for b, ids in ((0, [1, 8]), (2, [3])):
+        spark.createDataFrame([(i,) for i in ids], schema).write.parquet(str(root / f"b{b}"))
+    (root / "_checkpoint").mkdir()
+    tombs, n = _jobs(spark, lambda: read_batch_dirs(spark, str(root), schema), "st17-tombs")
+    assert n == 0
+    assert tombs.schema == schema
+    assert sorted(r["vec_id"] for r in tombs.collect()) == [1, 3, 8]

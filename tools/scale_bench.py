@@ -4,10 +4,11 @@ Runs the same headline set as bench.py against an amplified fixture
 (tools/scale_up.py) and records, per query, what bench.py's wall-clock
 number cannot show: shuffle read/write bytes, memory/disk spill, and
 input bytes, read from the Spark JVM's status store by diffing the
-completed-stage set around each run. This is the r4 verdict's headline
-ask — the difference between "the plan SHAPE would survive 100 TB" and
-"we RAN it at a scale where shuffle and AQE actually engage, here are
-the bytes".
+completed-stage set around each run, plus the generated classes the run
+compiled (``codegenCompiles``, diffed from ``CodegenMetrics``). This is
+the r4 verdict's headline ask — the difference between "the plan SHAPE
+would survive 100 TB" and "we RAN it at a scale where shuffle and AQE
+actually engage, here are the bytes".
 
 DuckDB twins ride along exactly as in bench.py so the ratio story
 extends to scale (fixed JVM overhead amortizes; the interesting
@@ -100,12 +101,22 @@ def _gc_and_heap(spark, peak: bool = True) -> tuple[int, int | None]:
     return gc, max(peaks)
 
 
+def _codegen_compiles(spark) -> int:
+    """Generated classes compiled so far in this JVM (Janino compiles
+    counted by ``CodegenMetrics``). The count is JVM-wide and never
+    resets, so diff it around a run. Errors propagate."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def measured_run(spark, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
     before = _stages(spark)
     gc0 = _gc_and_heap(spark, peak=False)[0]
+    compiles0 = _codegen_compiles(spark)
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
+    compiles = _codegen_compiles(spark) - compiles0
     after = _stages(spark)
     gc1, peak = _gc_and_heap(spark)
     delta = {f: 0 for f in METRIC_FIELDS}
@@ -116,6 +127,7 @@ def measured_run(spark, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
             delta[f] += s[f]
     delta["jvmGcTimeMs"] = gc1 - gc0
     delta["peakJvmHeapBytes"] = peak
+    delta["codegenCompiles"] = compiles
     return wall, delta
 
 
@@ -194,7 +206,8 @@ def main() -> None:
             f"spillMem={best_m['memoryBytesSpilled']/1e6:.0f}MB "
             f"spillDisk={best_m['diskBytesSpilled']/1e6:.0f}MB "
             f"gc={best_m['jvmGcTimeMs']/1e3:.1f}s "
-            f"peakHeap={best_m['peakJvmHeapBytes']/1e9:.1f}GB"
+            f"peakHeap={best_m['peakJvmHeapBytes']/1e9:.1f}GB "
+            f"compiles={best_m['codegenCompiles']}"
             + (f" cluster={cluster}" if cluster else ""),
             flush=True,
         )
