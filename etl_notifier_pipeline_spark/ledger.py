@@ -64,6 +64,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_notifier_pipeline_spark.operators.mutations import filter_new_deletes
 from etl_notifier_pipeline_spark.storage import _VersionedStore, local_frame
 
 PROCESSED_FILES_SCHEMA = T.StructType(
@@ -254,11 +255,8 @@ class Ledger:
         ``requests`` columns: event_id, target_table, key_json.
         """
         dc = self.delete_control()
-        pending = dc.filter(~F.col("executed_flag")).select("target_table", "key_json")
-        fresh = requests.join(
-            F.broadcast(pending.dropDuplicates(["target_table", "key_json"])),
-            ["target_table", "key_json"],
-            "left_anti",
+        fresh = filter_new_deletes(
+            requests, dc.filter(~F.col("executed_flag")), ["target_table", "key_json"]
         )
         # Intra-batch dedup (the reference's per-row COUNT(*) check sees
         # its own same-transaction inserts, so duplicate keys within one

@@ -21,9 +21,7 @@ persistence (atomic overwrite) lives in ``storage.py``.
 
 Scale notes: the incoming batch is usually tiny relative to the target
 table, so the anti/semi joins broadcast the incoming side — the target
-is scanned once, never shuffled. ``broadcast_incoming=False`` opts out
-for batch-vs-batch merges of comparable size (AQE then picks the
-strategy).
+is scanned once, never shuffled.
 """
 
 from __future__ import annotations
@@ -67,10 +65,6 @@ def _pick_per_key(
     )
 
 
-def _maybe_broadcast(df: DataFrame, do_broadcast: bool) -> DataFrame:
-    return F.broadcast(df) if do_broadcast else df
-
-
 def insert_if_absent(
     target: DataFrame,
     incoming: DataFrame,
@@ -101,8 +95,6 @@ def upsert(
     incoming: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[Column | str],
-    *,
-    broadcast_incoming: bool = True,
 ) -> DataFrame:
     """J3 — ``ON CONFLICT DO UPDATE`` (MERGE) as a plan.
 
@@ -115,11 +107,7 @@ def upsert(
     _check_keys(target, keys, "target")
     _check_keys(incoming, keys, "incoming")
     last = _pick_per_key(incoming, keys, order_by, keep="last")
-    kept = target.join(
-        _maybe_broadcast(last.select(*keys), broadcast_incoming),
-        list(keys),
-        "left_anti",
-    )
+    kept = target.join(F.broadcast(last.select(*keys)), list(keys), "left_anti")
     return kept.unionByName(last.select(*target.columns))
 
 
@@ -127,8 +115,6 @@ def delete_by_keys(
     target: DataFrame,
     delete_keys: DataFrame,
     keys: Sequence[str],
-    *,
-    broadcast_incoming: bool = True,
 ) -> DataFrame:
     """J4 — keyed delete: surviving rows = target ANTI JOIN keys.
 
@@ -138,31 +124,25 @@ def delete_by_keys(
     _check_keys(target, keys, "target")
     _check_keys(delete_keys, keys, "delete_keys")
     ks = delete_keys.select(*keys).dropDuplicates(list(keys))
-    return target.join(_maybe_broadcast(ks, broadcast_incoming), list(keys), "left_anti")
+    return target.join(F.broadcast(ks), list(keys), "left_anti")
 
 
 def deleted_count(
     target: DataFrame,
     delete_keys: DataFrame,
     keys: Sequence[str],
-    *,
-    broadcast_incoming: bool = True,
 ) -> int:
     """The reference's accumulated ``cursor.rowcount``
     (``process-pipeline.py:223``) as one semi-join count."""
     _check_keys(target, keys, "target")
     ks = delete_keys.select(*keys).dropDuplicates(list(keys))
-    return target.join(
-        _maybe_broadcast(ks, broadcast_incoming), list(keys), "left_semi"
-    ).count()
+    return target.join(F.broadcast(ks), list(keys), "left_semi").count()
 
 
 def filter_new_deletes(
     new_deletes: DataFrame,
     pending: DataFrame,
     keys: Sequence[str],
-    *,
-    broadcast_pending: bool = True,
 ) -> DataFrame:
     """J5 — drop delete requests already pending.
 
@@ -172,9 +152,7 @@ def filter_new_deletes(
     _check_keys(new_deletes, keys, "new_deletes")
     _check_keys(pending, keys, "pending")
     p = pending.select(*keys).dropDuplicates(list(keys))
-    return new_deletes.join(
-        _maybe_broadcast(p, broadcast_pending), list(keys), "left_anti"
-    )
+    return new_deletes.join(F.broadcast(p), list(keys), "left_anti")
 
 
 def snapshot_diff(

@@ -42,7 +42,6 @@ def scd2_upsert(
     effective: str,
     *,
     order_by: Sequence[str] | None = None,
-    broadcast_incoming: bool = True,
 ) -> DataFrame:
     """Apply an SCD-2 upsert; returns the full new dimension table.
 
@@ -65,12 +64,11 @@ def scd2_upsert(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    binc = F.broadcast(inc) if broadcast_incoming else inc
     current = target.filter(F.col(VALID_TO).isNull())
     history = target.filter(F.col(VALID_TO).isNotNull())
 
     # changed = current rows whose incoming value tuple differs
-    joined = current.alias("t").join(binc.alias("i"), list(keys), "inner")
+    joined = current.alias("t").join(F.broadcast(inc).alias("i"), list(keys), "inner")
     diff = F.lit(False)
     for c in value_cols:
         # NULL-safe inequality per column

@@ -68,9 +68,9 @@ ASOF LEFT JOIN (
 def q23_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join (SURVEY §2.3 absent list): each event picks
     the latest order of the same customer at-or-before its timestamp.
-    Spark lacks a native ASOF; the engine composes join+window (see
-    operators/asof.py for the pandas merge_asof scale path). Oracle:
-    DuckDB's native ASOF JOIN. Order times are de-duplicated with a
+    Spark lacks a native ASOF; the engine composes one from a union
+    and a running window (operators/asof.py). Oracle: DuckDB's native
+    ASOF JOIN. Order times are de-duplicated with a
     deterministic second-offset so 'latest' is unambiguous on both
     engines."""
     ev = load_table(spark, sf_dir, "events")

@@ -1264,26 +1264,29 @@ class BucketedTableStore(_VersionedStore):
 
     # -- TableStore surface --------------------------------------------------
 
+    @staticmethod
+    def _data_schema(table: str, m: dict) -> T.StructType:
+        """The data columns manifest ``m`` records."""
+        if "data_schema" not in m:
+            raise ValueError(
+                f"{table!r}: its manifest records no data_schema (written "
+                f"by older code). Overwrite the table to re-bucket it."
+            )
+        return T.StructType.fromJson(m["data_schema"])
+
     def _scan(
         self, table: str, m: dict, bucket_ids: set[int] | None
     ) -> DataFrame:
         """Rows of manifest ``m``, restricted to ``bucket_ids`` (None =
         every bucket). Building the frame runs no Spark job: the schema
         comes from the manifest."""
-        if "data_schema" not in m:
-            raise ValueError(
-                f"{table!r}: its manifest records no data_schema (written "
-                f"by older code). Overwrite the table to re-bucket it."
-            )
         paths = [
             os.path.join(self._dir(table), d)
             for k, dirs in m["buckets"].items()
             if bucket_ids is None or int(k) in bucket_ids
             for d in dirs
         ]
-        base = self.spark.read.schema(
-            T.StructType.fromJson(m["data_schema"])
-        ).parquet(*paths)
+        base = self.spark.read.schema(self._data_schema(table, m)).parquet(*paths)
         delta_paths = [
             os.path.join(self._dir(table), d)
             for k, dirs in m.get("deltas", {}).items()
@@ -1392,7 +1395,7 @@ class BucketedTableStore(_VersionedStore):
             return self.overwrite(table, df)
         v = self.current_version(table)
         m = self._manifest(table, v)
-        existing = set(self._scan(table, m, None).columns)
+        existing = set(self._data_schema(table, m).names)
         if set(df.columns) != existing:
             raise ValueError(
                 f"append to {table!r}: columns {sorted(set(df.columns))} "
@@ -1418,7 +1421,7 @@ class BucketedTableStore(_VersionedStore):
                 for dirs in m["deltas"].values()
                 for d in dirs
             ]
-            if keys and delta_paths:
+            if delta_paths:
                 shadowing = (
                     self.spark.read.parquet(*delta_paths)
                     .select(*keys)
@@ -1649,7 +1652,7 @@ class BucketedTableStore(_VersionedStore):
             )
         # delta rows carry the BASE table's full column set (a delete
         # batch brings only keys — its tombstones get typed NULLs)
-        base_schema = self._scan(table, m, None).schema
+        base_schema = self._data_schema(table, m)
         data_cols = [f.name for f in base_schema.fields]
         v_next = v0 + 1
         if op == "update":
@@ -1700,7 +1703,7 @@ class BucketedTableStore(_VersionedStore):
             cdc_df = snapshot_diff(old_matched, new_matched, keys)
         return self._write_version(
             table,
-            self._scan(table, m, None).select(*data_cols).limit(0),
+            local_frame(self.spark, [], base_schema),
             carry=m["buckets"],
             affected=set(),
             cdc_df=cdc_df,

@@ -92,13 +92,13 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     assert full == exact
 
 
-def test_asof_all_strategies_agree(spark):
+def test_asof_latest_match_and_tie_break(spark):
     left = spark.createDataFrame(
         [(1, 10, "e1"), (1, 25, "e2"), (2, 5, "e3"), (3, 50, "e4")],
         ["k", "t", "ev"],
     )
-    # (1, 20, "zz") ties (1, 20, "b") on timestamp: EVERY strategy
-    # must make the same deterministic pick (smallest value tuple, "b")
+    # (1, 20, "zz") ties (1, 20, "b") on timestamp: the deterministic
+    # pick is the smallest value tuple, "b"
     right = spark.createDataFrame(
         [(1, 8, "a"), (1, 20, "b"), (1, 20, "zz"), (1, 30, "c"), (2, 7, "d")],
         ["k", "t", "val"],
@@ -107,31 +107,28 @@ def test_asof_all_strategies_agree(spark):
     # e3 (k=2,t=5): only right row is at t=7 > 5 -> no match;
     # e4: no k=3 rows at all -> no match
     expected = {("e1", "a"), ("e2", "b"), ("e3", None), ("e4", None)}
-    for strategy in ("union_sort", "window", "pandas"):
-        got = {
-            (r["ev"], r["val"])
-            for r in asof_join(
-                left,
-                right.withColumnRenamed("t", "rt"),
-                on=["k"],
-                left_time="t",
-                right_time="rt",
-                right_values=["val"],
-                strategy=strategy,
-            ).collect()
-        }
-        assert got == expected, strategy
+    got = {
+        (r["ev"], r["val"])
+        for r in asof_join(
+            left,
+            right.withColumnRenamed("t", "rt"),
+            on=["k"],
+            left_time="t",
+            right_time="rt",
+            right_values=["val"],
+        ).collect()
+    }
+    assert got == expected
 
 
 def test_asof_union_sort_preserves_duplicate_left_rows(spark):
-    """The union-sort strategy has no row-id mark; fully identical
-    left rows must still each produce an output row (the multiplicity
-    hazard the window strategy's id mark existed to prevent)."""
+    """The union-sort plan has no row-id mark; fully identical left
+    rows must still each produce an output row."""
     left = spark.createDataFrame([(1, 10), (1, 10), (1, 10)], ["k", "t"])
     right = spark.createDataFrame([(1, 5, "x")], ["k", "rt", "val"])
     out = asof_join(
         left, right, on=["k"], left_time="t", right_time="rt",
-        right_values=["val"], strategy="union_sort",
+        right_values=["val"],
     ).collect()
     assert len(out) == 3 and all(r["val"] == "x" for r in out)
 
@@ -139,7 +136,7 @@ def test_asof_union_sort_preserves_duplicate_left_rows(spark):
 def test_asof_union_sort_null_key_and_null_left_time(spark):
     """Join semantics under union_sort: a NULL key matches nothing on
     either side, and a NULL left_time sees no candidate — both keep
-    NULL right-values, exactly like the equi-join strategies."""
+    NULL right-values, like an equi-join with a range predicate."""
     left = spark.createDataFrame(
         [(None, 10, "lnull"), (1, None, "tnull"), (1, 10, "ok")],
         "k int, t int, ev string",
@@ -147,15 +144,14 @@ def test_asof_union_sort_null_key_and_null_left_time(spark):
     right = spark.createDataFrame(
         [(None, 5, "rnull"), (1, 5, "x")], "k int, rt int, val string"
     )
-    for strategy in ("union_sort", "window"):
-        got = {
-            (r["ev"], r["val"])
-            for r in asof_join(
-                left, right, on=["k"], left_time="t", right_time="rt",
-                right_values=["val"], strategy=strategy,
-            ).collect()
-        }
-        assert got == {("lnull", None), ("tnull", None), ("ok", "x")}, strategy
+    got = {
+        (r["ev"], r["val"])
+        for r in asof_join(
+            left, right, on=["k"], left_time="t", right_time="rt",
+            right_values=["val"],
+        ).collect()
+    }
+    assert got == {("lnull", None), ("tnull", None), ("ok", "x")}
 
 
 def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):

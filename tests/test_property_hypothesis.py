@@ -1,6 +1,7 @@
 """Hypothesis property tests (SURVEY §5 strategy): algebraic laws of
-the mutation operators and a union-find reference model for the
-connected-components operator, over randomized inputs.
+the mutation operators, a union-find reference model for the
+connected-components operator and DuckDB's ``ASOF LEFT JOIN`` as the
+reference for the as-of join, over randomized inputs.
 
 Spark jobs per example are real, so example counts are small and the
 hypothesis deadline is disabled — these are law checks, not fuzzing
@@ -18,6 +19,7 @@ from etl_notifier_pipeline_spark.operators import (
     insert_if_absent,
     upsert,
 )
+from etl_notifier_pipeline_spark.operators.asof import asof_join
 
 SETTINGS = dict(
     deadline=None,
@@ -218,3 +220,51 @@ def test_block_pack_spans_laws(spark, docs, block, group_size):
     # decomposition invariance
     ref = block_pack_spans(df, "doc_id", "n", block=block, group_size=10**6)
     assert sorted(map(tuple, rows)) == sorted(map(tuple, ref.collect()))
+
+
+asof_keys = st.one_of(st.none(), st.integers(0, 3))
+
+
+@settings(**{**SETTINGS, "max_examples": 10})
+@given(
+    left=st.lists(st.tuples(asof_keys, st.integers(0, 6)), max_size=12),
+    # dict keys make right times unique per key: "latest" is unambiguous
+    # on both engines
+    right=st.dictionaries(
+        st.tuples(asof_keys, st.integers(0, 6)), st.integers(0, 99), max_size=10
+    ),
+)
+def test_asof_join_matches_duckdb(spark, left, right):
+    """Differential test against DuckDB's native ASOF LEFT JOIN: NULL
+    keys on both sides, duplicate left rows, no NULL times (DuckDB
+    matches a NULL left time to a right row; SQL comparison does not).
+    NULL-time and tie-break behaviour are pinned by literal tests in
+    tests/test_advanced.py and tests/test_scale_fixes.py."""
+    import duckdb
+    import pyarrow as pa
+
+    r_rows = [(k, rt, v) for (k, rt), v in right.items()]
+    with duckdb.connect() as con:
+        con.register("l", pa.table({
+            "k": pa.array([k for k, _ in left], pa.int32()),
+            "t": pa.array([t for _, t in left], pa.int32()),
+        }))
+        con.register("r", pa.table({
+            "k": pa.array([k for k, _, _ in r_rows], pa.int32()),
+            "rt": pa.array([rt for _, rt, _ in r_rows], pa.int32()),
+            "val": pa.array([v for _, _, v in r_rows], pa.int32()),
+        }))
+        want = con.execute(
+            "SELECT l.k, l.t, r.val FROM l ASOF LEFT JOIN r "
+            "ON l.k = r.k AND r.rt <= l.t"
+        ).fetchall()
+    got = asof_join(
+        spark.createDataFrame(left, "k int, t int"),
+        spark.createDataFrame(r_rows, "k int, rt int, val int"),
+        on=["k"], left_time="t", right_time="rt", right_values=["val"],
+    ).collect()
+
+    def canon(rows):
+        return sorted((tuple(r) for r in rows), key=repr)
+
+    assert canon(got) == canon(want)
