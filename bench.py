@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_notifier_pipeline_spark import caching, plans  # noqa: E402
 from etl_notifier_pipeline_spark.session import get_spark  # noqa: E402
 from tools.benchproto import PROTOCOL_VERSION  # noqa: E402
+from tools.parity import _duck_path  # noqa: E402
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -409,14 +410,6 @@ def resolve(name: str, profile: str = "oracle"):
         )
     spec = plans.get(name)
     return spec.fn, (spec.oracle or TWIN_SQL.get(name))
-
-
-def _duck_path(p: str) -> str:
-    """DuckDB needs a glob for Spark-written parquet DIRECTORIES
-    (amplified fixtures); driver fixtures are single files."""
-    import os as _os
-
-    return p + "/*.parquet" if _os.path.isdir(p) else p
 
 
 def best_of(n: int, fn) -> float:

@@ -748,7 +748,6 @@ def dedup_clusters(
     b_col: str = "doc_b",
     *,
     max_iter: int = 25,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over near-dup pairs: every doc in a
     component gets ``cluster_id`` = the component's minimum doc id —
@@ -767,19 +766,12 @@ def dedup_clusters(
     every round and the optimizer itself OOMs long before the data
     does.
 
-    ``algorithm``: ``"label_prop"`` forces min-label propagation and
-    raises if ``max_iter`` rounds don't converge; ``"two_phase"``
-    forces :func:`two_phase_components` (O(log^2 n) rounds regardless
-    of diameter); ``"auto"`` (default) runs label propagation — the
-    cheaper plan for the shallow components near-dup graphs actually
-    produce — and falls back to the two-phase algorithm if the
-    component diameter exceeds ``max_iter`` (adversarial long chains:
-    crawl mirror cascades).
+    Label propagation is the cheaper plan for the shallow components
+    near-dup graphs actually produce; when the component diameter
+    exceeds ``max_iter`` (adversarial long chains: crawl mirror
+    cascades) it falls back to :func:`two_phase_components`, which
+    converges in O(log^2 n) rounds regardless of diameter.
     """
-    if algorithm not in ("auto", "label_prop", "two_phase"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    if algorithm == "two_phase":
-        return two_phase_components(pairs, a_col, b_col)
     edges = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     edges = (
         edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -826,17 +818,11 @@ def dedup_clusters(
         {"algorithm": "label_prop", "rounds": rounds, "fell_back": False}
     )
     if not converged:
-        if algorithm == "auto":
-            # A partially-propagated result would silently split one
-            # component into several cluster_ids — never return it.
-            # The diameter has outrun max_iter, which is exactly the
-            # graph shape the two-phase rewrite is built for.
-            out = two_phase_components(pairs, a_col, b_col)
-            LAST_CLUSTER_STATS["fell_back"] = True
-            return out
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or "
-            "use algorithm='two_phase'"
-        )
+        # A partially-propagated result would silently split one
+        # component into several cluster_ids — never return it. The
+        # diameter has outrun max_iter, which is exactly the graph
+        # shape the two-phase rewrite is built for.
+        out = two_phase_components(pairs, a_col, b_col)
+        LAST_CLUSTER_STATS["fell_back"] = True
+        return out
     return labels.select(F.col("u").alias("doc_id"), F.col("label").alias("cluster_id"))

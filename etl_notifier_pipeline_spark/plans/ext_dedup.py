@@ -294,7 +294,7 @@ def d12_two_phase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (long, long) groupBy+join passes over the pair set only."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_dedup(d, threshold=0.5)
-    return D.dedup_clusters(pairs, algorithm="two_phase")
+    return D.two_phase_components(pairs)
 
 
 N_SIMHASH_BANDS = 4

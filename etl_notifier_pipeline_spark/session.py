@@ -68,21 +68,6 @@ def derived_split_bytes(driver_mem: str, slots: int) -> tuple[int, int]:
     return split, max(2 << 20, split // 2)
 
 
-def split_conf(driver_mem: str, slots: int) -> dict[str, str]:
-    """The two split-size session confs, derived from the memory/slot
-    budget with explicit ``SPARK_GRAFT_*`` env overrides winning (the
-    bench A/B harness depends on the overrides)."""
-    split_bytes, advisory_bytes = derived_split_bytes(driver_mem, slots)
-    return {
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", str(split_bytes)
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-            "SPARK_GRAFT_ADVISORY_PARTITION", str(advisory_bytes)
-        ),
-    }
-
-
 def get_spark(
     app_name: str = "etl_notifier_pipeline_spark",
     *,
@@ -102,7 +87,9 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus or (os.cpu_count() or 8)
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    split_confs = split_conf(driver_mem, cpus or (os.cpu_count() or 8))
+    split_bytes, advisory_bytes = derived_split_bytes(
+        driver_mem, cpus or (os.cpu_count() or 8)
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -189,13 +176,9 @@ def get_spark(
         # deployment's tasks scale up with its per-task memory instead
         # of inheriting this host's constants and multiplying per-task
         # fixed costs ~7x on dense whole-corpus passes.
+        .config("spark.sql.files.maxPartitionBytes", str(split_bytes))
         .config(
-            "spark.sql.files.maxPartitionBytes",
-            split_confs["spark.sql.files.maxPartitionBytes"],
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            split_confs["spark.sql.adaptive.advisoryPartitionSizeInBytes"],
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory_bytes)
         )
     )
     for k, v in (extra_conf or {}).items():

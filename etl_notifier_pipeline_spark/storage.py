@@ -34,6 +34,7 @@ import os
 import shutil
 import tempfile
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -490,14 +491,8 @@ class TableStore(_VersionedStore):
             if d.startswith("#"):
                 continue  # manifest flag lines (#mergeSchema), not dirs
             dpath = target if d == f"v={v}" else os.path.join(self._dir(table), d)
-            spath = os.path.join(dpath, _STATS_NAME)
-            stats: dict = {}
-            if os.path.exists(spath):
-                with open(spath) as f:
-                    stats = json.load(f)
-            for name in sorted(os.listdir(dpath)):
-                if name.endswith(".parquet"):
-                    agg[f"{d}/{name}"] = stats.get(name)
+            for name, stats in _dir_file_stats(dpath):
+                agg[f"{d}/{name}"] = stats
         with open(os.path.join(target, _STATS_AGG_NAME), "w") as f:
             json.dump(agg, f)
 
@@ -510,27 +505,20 @@ class TableStore(_VersionedStore):
         ONE read; versions predating it fall back to per-dir sidecars
         (O(dirs) reads + listings), with identical results (pinned in
         tests)."""
-        apath = os.path.join(self._dir(table), f"v={v}", _STATS_AGG_NAME)
+        base = self._dir(table)
+        apath = os.path.join(base, f"v={v}", _STATS_AGG_NAME)
         if os.path.exists(apath):
             with open(apath) as f:
                 agg = json.load(f)
-            base = self._dir(table)
             return [
                 (os.path.join(base, rel), st)
                 for rel, st in sorted(agg.items())
             ]
-        out: list[tuple[str, dict | None]] = []
-        for d in self._refs(self._manifest(table, v)):
-            dpath = os.path.join(self._dir(table), d)
-            spath = os.path.join(dpath, _STATS_NAME)
-            stats: dict = {}
-            if os.path.exists(spath):
-                with open(spath) as f:
-                    stats = json.load(f)
-            for name in sorted(os.listdir(dpath)):
-                if name.endswith(".parquet"):
-                    out.append((os.path.join(dpath, name), stats.get(name)))
-        return out
+        return [
+            (os.path.join(base, d, name), st)
+            for d in self._refs(self._manifest(table, v))
+            for name, st in _dir_file_stats(os.path.join(base, d))
+        ]
 
     def pruned_files(
         self,
@@ -727,6 +715,22 @@ def _stat_dec(v):
         if t == "dec":
             return decimal.Decimal(v["v"])
     return v
+
+
+def _dir_file_stats(dpath: str) -> list[tuple[str, dict | None]]:
+    """``(name, zone-map stats)`` of every parquet file in version dir
+    ``dpath``, sorted by name; stats are None for a file the dir's
+    ``_stats.json`` sidecar does not cover (or when it has none)."""
+    spath = os.path.join(dpath, _STATS_NAME)
+    stats: dict = {}
+    if os.path.exists(spath):
+        with open(spath) as f:
+            stats = json.load(f)
+    return [
+        (name, stats.get(name))
+        for name in sorted(os.listdir(dpath))
+        if name.endswith(".parquet")
+    ]
 
 
 def _harvest_zone_maps(target: str) -> None:
@@ -1019,7 +1023,15 @@ class BucketedTableStore(_VersionedStore):
     full-rewrite path uses, and writes ONLY those buckets into the new
     version dir; the manifest carries unaffected buckets' entries
     forward. Upserting N rows into an M-row table reads+writes
-    O(M · min(N, B)/B) bytes, not O(M). The ``_CURRENT`` pointer swap
+    O(M · min(N, B)/B) bytes, not O(M).
+
+    Every write (overwrite, append, both mutation strategies, compact)
+    commits through ``_write_version``, which builds each per-bucket
+    list by one rule: the carried entries minus those of the affected
+    buckets, plus the dirs this commit staged. Overwrite affects every
+    bucket; append and merge-on-read affect none (their dirs stack); a
+    copy-on-write mutation and compact stage only affected buckets,
+    which replaces them. The ``_CURRENT`` pointer swap
     keeps the same all-or-nothing atomicity as ``TableStore``; on
     Delta/Iceberg this maps to MERGE with partition pruning.
 
@@ -1136,46 +1148,40 @@ class BucketedTableStore(_VersionedStore):
 
     def _write_version(
         self, table: str, df: DataFrame, carry: dict[str, list[str]] | None,
-        affected: set[int] | None, cdc_df: DataFrame | None = None,
+        affected: set[int] | None,
+        cdc: Callable[[DataFrame], DataFrame] | None = None,
         delta_df: DataFrame | None = None,
         carry_deltas: dict[str, list[str]] | None = None,
         manifest_extra: dict | None = None,
-        cdc_from_staged=None,
         base_version: int | None = None,
         bucketing: tuple[list[str], int] | None = None,
     ) -> int:
-        """Write ``df``'s rows bucket-partitioned into the next version
-        dir and commit a manifest that is ``carry`` (prior entries for
-        unaffected buckets) plus the freshly written buckets. ``affected
-        = None`` means a full rewrite (no carried entries). ``cdc_df``
-        (change rows for THIS commit) is staged alongside the data, so
-        the CDC sidecar commits atomically with the version it
-        describes — a version either has its complete change set or
-        none (readers fall back to snapshot_diff).
-        ``cdc_from_staged`` is the non-double-evaluation alternative:
-        a callback invoked AFTER ``df`` is staged, with a reader over
-        the staged parquet — the sidecar it returns diffs exactly the
-        bytes being committed, so data and feed cannot disagree even
-        when the mutation plan has order_by ties (r7 advice #4)
-        without pinning an O(affected-buckets) checkpoint in memory.
-        ``manifest_extra``
-        merges extra marker keys into the manifest (e.g. compact()'s
-        ``"compaction": true``, which lets change_feed skip the commit
-        as a zero-change layout rewrite).
+        """The one write path: stage ``df``'s rows bucket-partitioned
+        (and ``delta_df``'s under ``delta/``) into the next version dir
+        and commit its manifest. Every writer builds the manifest's
+        per-bucket lists by one rule: take the carried entries
+        (``carry``, ``carry_deltas``), drop those of the ``affected``
+        buckets, then add each staged dir to its bucket's list.
+        ``affected = None`` drops every carried entry (overwrite); an
+        empty set keeps them all (append, merge-on-read); a copy-on-write
+        mutation and ``compact`` stage only buckets inside ``affected``,
+        whose base and delta entries the rewrite replaces.
 
-        Merge-on-read extensions: ``delta_df`` (rows with the
-        ``__mor_deleted``/``__mor_seq`` helper columns) is staged
-        bucket-partitioned under ``delta/`` and its dirs appended to
-        the manifest's per-bucket delta lists; ``carry_deltas`` are the
-        prior version's delta entries, carried forward for buckets NOT
-        rewritten this commit (a base-rewriting commit reads the merged
-        view, so the affected buckets' deltas are folded in and their
-        entries dropped).
+        ``cdc`` builds the change rows of THIS commit: it is called
+        after staging with a reader over the staged data files and its
+        result is staged as the ``cdc/`` sidecar, so the sidecar commits
+        atomically with the version it describes (a version either has
+        its complete change set or none; readers fall back to
+        snapshot_diff) and a copy-on-write feed diffs exactly the bytes
+        being committed, even when the mutation plan has order_by ties,
+        without evaluating or pinning the plan twice. ``manifest_extra``
+        merges marker keys into the manifest (``compact``'s
+        ``"compaction": true`` lets change_feed skip a layout rewrite).
 
-        ``base_version`` is the version ``df`` and ``carry`` were read
-        from; the commit's CAS fails unless it is still current. Left
-        None, the base is whatever is current when staging starts.
-        ``bucketing`` (columns, n) must be the carried entries'
+        ``base_version`` is the version ``df`` and the carried entries
+        were read from; the commit's CAS fails unless it is still
+        current. Left None, the base is whatever is current when staging
+        starts. ``bucketing`` (columns, n) must be the carried entries'
         bucketing; a full rewrite defaults to the declared keys."""
         if base_version is None:
             base_version = self.current_version(table) or 0
@@ -1186,19 +1192,6 @@ class BucketedTableStore(_VersionedStore):
         staging = self._stage(
             table, df.withColumn("__bucket", self._bucket_col(bucketing))
         )
-        data_dir = os.path.join(staging, "data")
-        staged_buckets = [
-            n for n in os.listdir(data_dir) if n.startswith("__bucket=")
-        ]
-        if cdc_from_staged is not None:
-            staged = self.spark.read.schema(_as_nullable(df.schema)).parquet(
-                *[os.path.join(data_dir, n) for n in staged_buckets]
-            )
-            cdc_df = cdc_from_staged(staged)
-        if cdc_df is not None:
-            cdc_df.write.mode("overwrite").parquet(
-                os.path.join(staging, "cdc")
-            )
         if delta_df is not None:
             (
                 delta_df.withColumn("__bucket", self._bucket_col(bucketing))
@@ -1206,44 +1199,44 @@ class BucketedTableStore(_VersionedStore):
                 .mode("overwrite")
                 .parquet(os.path.join(staging, "delta"))
             )
-        buckets: dict[str, list[str]] = {}
-        for k, dirs in (carry or {}).items():
-            if affected is None or int(k) not in affected:
-                buckets[k] = dirs
-        for name in staged_buckets:
-            buckets[name.removeprefix("__bucket=")] = [f"{vrel}/data/{name}"]
-        deltas: dict[str, list[str]] = {}
-        for k, dirs in (carry_deltas or {}).items():
-            if affected is None or int(k) not in affected:
-                deltas[k] = list(dirs)
-        ddir = os.path.join(staging, "delta")
-        if os.path.isdir(ddir):
-            for name in os.listdir(ddir):
+
+        def kept(lists: dict[str, list[str]] | None) -> dict[str, list[str]]:
+            return {
+                k: list(dirs) for k, dirs in (lists or {}).items()
+                if affected is None or int(k) not in affected
+            }
+
+        buckets, deltas = kept(carry), kept(carry_deltas)
+        staged_data: list[str] = []
+        for part, lists in (("data", buckets), ("delta", deltas)):
+            part_dir = os.path.join(staging, part)
+            for name in os.listdir(part_dir) if os.path.isdir(part_dir) else ():
                 if name.startswith("__bucket="):
                     k = name.removeprefix("__bucket=")
-                    deltas.setdefault(k, []).append(f"{vrel}/delta/{name}")
-        manifest = self._new_manifest(vrel, df, bucketing, buckets)
+                    lists.setdefault(k, []).append(f"{vrel}/{part}/{name}")
+                    if part == "data":
+                        staged_data.append(os.path.join(part_dir, name))
+        if cdc is not None:
+            staged = self.spark.read.schema(_as_nullable(df.schema)).parquet(
+                *staged_data
+            )
+            cdc(staged).write.mode("overwrite").parquet(
+                os.path.join(staging, "cdc")
+            )
+        # Parquet reads every column back nullable, so the recorded
+        # schema is too.
+        manifest = {
+            "data_schema": _as_nullable(df.schema).jsonValue(),
+            "bucket_keys": list(bucketing[0]),
+            "n_buckets": bucketing[1],
+            "buckets": buckets,
+        }
         if deltas:
             manifest["deltas"] = deltas
         if manifest_extra:
             manifest.update(manifest_extra)
         self._commit(table, v, manifest, staging)
         return v
-
-    @staticmethod
-    def _new_manifest(
-        vrel: str, df: DataFrame, bucketing: tuple[list[str], int],
-        buckets: dict[str, list[str]],
-    ) -> dict:
-        """Manifest of a commit that staged ``df`` hashed by
-        ``bucketing``. Parquet reads every column back nullable, so the
-        recorded schema is too."""
-        return {
-            "data_schema": _as_nullable(df.schema).jsonValue(),
-            "bucket_keys": list(bucketing[0]),
-            "n_buckets": bucketing[1],
-            "buckets": buckets,
-        }
 
     def _stage(self, table: str, df: DataFrame) -> str:
         """Write bucket-partitioned data into a private staging dir
@@ -1274,25 +1267,29 @@ class BucketedTableStore(_VersionedStore):
             )
         return T.StructType.fromJson(m["data_schema"])
 
+    def _paths(
+        self, table: str, lists: dict[str, list[str]],
+        bucket_ids: set[int] | None = None,
+    ) -> list[str]:
+        """Absolute paths of the dirs in a manifest's per-bucket
+        ``lists``, restricted to ``bucket_ids`` (None = every bucket)."""
+        return [
+            os.path.join(self._dir(table), d)
+            for k, dirs in lists.items()
+            if bucket_ids is None or int(k) in bucket_ids
+            for d in dirs
+        ]
+
     def _scan(
         self, table: str, m: dict, bucket_ids: set[int] | None
     ) -> DataFrame:
         """Rows of manifest ``m``, restricted to ``bucket_ids`` (None =
         every bucket). Building the frame runs no Spark job: the schema
         comes from the manifest."""
-        paths = [
-            os.path.join(self._dir(table), d)
-            for k, dirs in m["buckets"].items()
-            if bucket_ids is None or int(k) in bucket_ids
-            for d in dirs
-        ]
-        base = self.spark.read.schema(self._data_schema(table, m)).parquet(*paths)
-        delta_paths = [
-            os.path.join(self._dir(table), d)
-            for k, dirs in m.get("deltas", {}).items()
-            if bucket_ids is None or int(k) in bucket_ids
-            for d in dirs
-        ]
+        base = self.spark.read.schema(self._data_schema(table, m)).parquet(
+            *self._paths(table, m["buckets"], bucket_ids)
+        )
+        delta_paths = self._paths(table, m.get("deltas", {}), bucket_ids)
         if not delta_paths:
             return base
         if not self.keys.get(table):
@@ -1416,11 +1413,7 @@ class BucketedTableStore(_VersionedStore):
                     f"— cannot verify appended keys don't collide with "
                     f"pending delta keys. Declare keys or compact() first."
                 )
-            delta_paths = [
-                os.path.join(self._dir(table), d)
-                for dirs in m["deltas"].values()
-                for d in dirs
-            ]
+            delta_paths = self._paths(table, m["deltas"])
             if delta_paths:
                 shadowing = (
                     self.spark.read.parquet(*delta_paths)
@@ -1441,29 +1434,14 @@ class BucketedTableStore(_VersionedStore):
                         f"apply_keyed_mutation(op='update') for "
                         f"existing keys, or compact() first."
                     )
-        new_v = (v or 0) + 1
-        vrel = f"v={new_v}"
-        # new rows hash the way the carried buckets were written
-        bucketing = self._bucketing(table, m, df)
-        staging = self._stage(
-            table, df.withColumn("__bucket", self._bucket_col(bucketing))
+        # enforced above: appended keys are disjoint from delta keys,
+        # so the carried deltas cannot shadow the new rows; new rows
+        # hash the way the carried buckets were written
+        return self._write_version(
+            table, df, carry=m["buckets"], affected=set(),
+            carry_deltas=m.get("deltas"), base_version=v,
+            bucketing=self._bucketing(table, m, df),
         )
-        buckets = {k: list(dirs) for k, dirs in m["buckets"].items()}
-        data_dir = os.path.join(staging, "data")
-        if os.path.isdir(data_dir):
-            for name in os.listdir(data_dir):
-                if name.startswith("__bucket="):
-                    k = name.removeprefix("__bucket=")
-                    buckets.setdefault(k, []).append(f"{vrel}/data/{name}")
-        manifest = self._new_manifest(vrel, df, bucketing, buckets)
-        if m.get("deltas"):
-            # enforced above: appended keys are disjoint from delta
-            # keys, so carried deltas cannot shadow the new rows
-            manifest["deltas"] = {
-                k: list(dirs) for k, dirs in m["deltas"].items()
-            }
-        self._commit(table, new_v, manifest, staging)
-        return new_v
 
     # -- the incremental path ------------------------------------------------
 
@@ -1504,10 +1482,23 @@ class BucketedTableStore(_VersionedStore):
           base, newest seq wins, tombstone deletes) until
           ``compact()`` folds the deltas into the base. Same winners
           as copy_on_write (pinned in tests/test_bucketed_store.py).
+
+        ``keys`` must be the declared bucket keys, as a set (joins are
+        order-insensitive) without duplicates: both strategies locate a
+        key's rows by the declared bucketing, and merge-on-read
+        reconciliation and ``append``'s shadow check match deltas by
+        the declared keys. Other keys would open the wrong buckets and
+        duplicate or drop rows.
         """
-        if self.keys.get(table) is None:
+        declared = self.keys.get(table)
+        if len(set(keys)) != len(list(keys)):
             raise ValueError(
-                f"apply_keyed_mutation needs declared bucket keys for {table!r}"
+                f"mutation keys {list(keys)} contain duplicate column names"
+            )
+        if declared is None or set(keys) != set(declared):
+            raise ValueError(
+                f"mutation keys {sorted(keys)} must equal the declared bucket "
+                f"keys {sorted(declared) if declared else None} for {table!r}"
             )
         if strategy not in ("copy_on_write", "merge_on_read"):
             raise ValueError(f"unknown strategy {strategy!r}")
@@ -1564,7 +1555,7 @@ class BucketedTableStore(_VersionedStore):
             return v
         current = self._scan(table, m, affected)
         result = _mutation_plan(current, incoming, keys, order_by, op)
-        cdc_fn = None
+        cdc = None
         if self.capture_cdc:
             # The staged data files and the CDC sidecar must describe
             # the SAME evaluation of `result`: with order_by ties, two
@@ -1585,7 +1576,7 @@ class BucketedTableStore(_VersionedStore):
             batch_keys = incoming.select(*keys).distinct()
             old_matched = current.join(batch_keys, list(keys), "left_semi")
 
-            def cdc_fn(staged: DataFrame) -> DataFrame:
+            def cdc(staged: DataFrame) -> DataFrame:
                 return snapshot_diff(
                     old_matched,
                     staged.join(batch_keys, list(keys), "left_semi"),
@@ -1597,7 +1588,7 @@ class BucketedTableStore(_VersionedStore):
         # base; other buckets' deltas carry forward
         return self._write_version(
             table, result, carry=m["buckets"], affected=affected,
-            cdc_from_staged=cdc_fn, carry_deltas=m.get("deltas"),
+            cdc=cdc, carry_deltas=m.get("deltas"),
             base_version=v0, bucketing=bucketing,
         )
 
@@ -1626,30 +1617,6 @@ class BucketedTableStore(_VersionedStore):
         key-matched old slice against the delta applied to it — the
         same slice semantics as copy_on_write, derived from the single
         checkpointed delta so data and feed cannot disagree."""
-        # Read-side reconciliation (_reconcile_deltas) shadows by the
-        # DECLARED bucket keys; a delta written under different key
-        # columns would be reconciled wrongly and append()'s shadow
-        # check would probe the wrong columns (r9 advice #3).
-        # Compare as SETS — joins are order-insensitive, so a caller
-        # passing the same columns in a different order was always
-        # valid — and use .get so an undeclared table raises the
-        # intended diagnostic, not a bare KeyError.
-        declared = self.keys.get(table)
-        if len(set(keys)) != len(list(keys)):
-            # set() comparison alone would let ['a','a','b'] pass for
-            # declared ['a','b'] and flow duplicated columns into the
-            # reconciliation joins.
-            raise ValueError(
-                f"merge_on_read mutation keys {list(keys)} contain duplicate "
-                f"column names"
-            )
-        if declared is None or set(keys) != set(declared):
-            raise ValueError(
-                f"merge_on_read mutation keys {sorted(keys)} must equal the "
-                f"declared bucket keys "
-                f"{sorted(declared) if declared else None} for "
-                f"{table!r} — reconciliation shadows by the declared keys"
-            )
         # delta rows carry the BASE table's full column set (a delete
         # batch brings only keys — its tombstones get typed NULLs)
         base_schema = self._data_schema(table, m)
@@ -1687,7 +1654,7 @@ class BucketedTableStore(_VersionedStore):
         delta = delta.withColumn(
             "__mor_seq", F.lit(v_next).cast("long")
         ).localCheckpoint(eager=True)
-        cdc_df = None
+        cdc = None
         if self.capture_cdc:
             batch_keys = incoming.select(*keys).distinct()
             old_matched = self._scan(table, m, affected).join(
@@ -1700,13 +1667,16 @@ class BucketedTableStore(_VersionedStore):
             ).unionByName(
                 delta.filter(~F.col("__mor_deleted")).select(*data_cols)
             )
-            cdc_df = snapshot_diff(old_matched, new_matched, keys)
+
+            def cdc(_staged: DataFrame) -> DataFrame:
+                # no base rows are staged: the change is the delta
+                return snapshot_diff(old_matched, new_matched, keys)
         return self._write_version(
             table,
             local_frame(self.spark, [], base_schema),
             carry=m["buckets"],
             affected=set(),
-            cdc_df=cdc_df,
+            cdc=cdc,
             delta_df=delta,
             carry_deltas=m.get("deltas"),
             base_version=v0,

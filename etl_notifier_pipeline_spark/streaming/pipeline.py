@@ -179,7 +179,6 @@ class ApprovalPipeline:
                 self.spark, root, keys={**self.keys, **LEDGER_KEYS}
             )
         self.ledger = Ledger(self.spark, self.store)
-        self.dead_letters: list[dict] = []
 
     # -- EP3 body -----------------------------------------------------------
 
@@ -295,10 +294,8 @@ class ApprovalPipeline:
         if not outcomes:
             return
         if batch_dead:
-            # Durable dead-letter queue: one append per batch (the
-            # in-memory list is a convenience view; the table is the
-            # record — a restart must not lose poison events).
-            self.dead_letters.extend(batch_dead)
+            # Durable dead-letter queue: one append per batch, so a
+            # restart does not lose poison events.
             self.store.append(
                 "dead_letters",
                 local_frame(

@@ -1775,6 +1775,25 @@ class TestBucketingRecorded:
         keyed.overwrite("t", keyed.read("t").localCheckpoint())
         assert [tuple(r) for r in keyed.read_keyed("t", probe).collect()] == [(5, "v5")]
 
+    @pytest.mark.parametrize("strategy", ["copy_on_write", "merge_on_read"])
+    def test_mutation_keys_must_be_the_declared_keys(self, spark, tmp_path, strategy):
+        """Rows live in the bucket of their declared key. A mutation
+        keyed on other columns would prune to the wrong buckets: an
+        update keyed on ``a`` would find no row for ``a="0"`` there and
+        add a second one. Both strategies refuse it."""
+        store = BucketedTableStore(
+            spark, str(tmp_path / "mk"), keys={"t": ["b"]}, n_buckets=64
+        )
+        rows = [(str(i), str(i % 7)) for i in range(40)]
+        store.overwrite("t", spark.createDataFrame(rows, ["a", "b"]))
+        with pytest.raises(ValueError, match="declared bucket keys"):
+            store.apply_keyed_mutation(
+                "t", spark.createDataFrame([("0", "x")], ["a", "b"]),
+                ["a"], [], "update", strategy=strategy,
+            )
+        assert sorted(tuple(r) for r in store.read("t").collect()) == sorted(rows)
+        assert store.current_version("t") == 1
+
     def test_recorded_bucket_count_wins(self, spark, tmp_path):
         """A store opened with another n_buckets hashes by the count the
         data was written with."""

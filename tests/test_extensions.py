@@ -675,27 +675,26 @@ def test_two_phase_components_matches_label_prop(spark):
     )
     lp = sorted(
         (r["doc_id"], r["cluster_id"])
-        for r in D.dedup_clusters(pairs, algorithm="label_prop").collect()
+        for r in D.dedup_clusters(pairs).collect()
     )
+    assert D.LAST_CLUSTER_STATS["fell_back"] is False
     tp = sorted(
         (r["doc_id"], r["cluster_id"])
-        for r in D.dedup_clusters(pairs, algorithm="two_phase").collect()
+        for r in D.two_phase_components(pairs).collect()
     )
     assert lp == tp
 
 
 def test_two_phase_beats_label_prop_on_adversarial_chain(spark):
     # diameter 80 chain: label propagation at max_iter=25 CANNOT
-    # converge; algorithm="auto" must detect that and fall back to the
+    # converge; dedup_clusters must detect that and fall back to the
     # two-phase rewrite rather than raising or mislabeling.
     n = 80
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["doc_a", "doc_b"]
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.dedup_clusters(pairs, algorithm="label_prop", max_iter=25)
     D.LAST_CLUSTER_STATS.clear()
-    got = D.dedup_clusters(pairs, max_iter=25).collect()  # auto
+    got = D.dedup_clusters(pairs, max_iter=25).collect()
     assert len(got) == n + 1
     assert all(r["cluster_id"] == 0 for r in got)
     # diagnostics recorded: fallback engaged, two-phase finished in
@@ -1831,7 +1830,8 @@ def test_label_prop_changed_count_no_second_join(spark):
     pairs = spark.createDataFrame(
         [(5, 6), (6, 7), (1, 9), (30, 31)], ["doc_a", "doc_b"]
     )
-    out = D.dedup_clusters(pairs, algorithm="label_prop")
+    out = D.dedup_clusters(pairs)
+    assert D.LAST_CLUSTER_STATS["fell_back"] is False
     assert out.columns == ["doc_id", "cluster_id"]
     got = {(r["doc_id"], r["cluster_id"]) for r in out.collect()}
     assert got == {(5, 5), (6, 5), (7, 5), (1, 1), (9, 1), (30, 30), (31, 30)}

@@ -219,10 +219,8 @@ class TestApprovalPipeline:
         led.record_arrivals(make_arrivals(spark, ("missing.csv", "e9", "b", "insert")))
         pipeline.run_batch(batch(spark, ev("e9", "approve", "missing.csv", "people", "insert")))
         # ST3: failure recorded, not raised; status=failed + notification
-        assert len(pipeline.dead_letters) == 1
         assert led.processed_files().collect()[0]["status"] == "failed"
         assert "failure" in pipeline.notifier.sent[-1][0].lower()
-        # the dead letter is durable, not just in-memory
         dl = pipeline.store.read("dead_letters").collect()
         assert len(dl) == 1 and dl[0]["event_id"] == "e9"
         assert dl[0]["error"]
@@ -233,7 +231,8 @@ class TestApprovalPipeline:
         pipeline.keys = {}
         pipeline.run_batch(batch(spark, ev("e4", "approve", "people_del.csv", "people", "delete")))
         assert led.processed_files().collect()[0]["status"] == "failed"
-        assert "no primary key" in pipeline.dead_letters[-1]["error"]
+        dl = pipeline.store.read("dead_letters").collect()
+        assert len(dl) == 1 and "no primary key" in dl[0]["error"]
 
 
 class TestLedgerParityAcrossStores:

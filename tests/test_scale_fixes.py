@@ -440,29 +440,18 @@ def test_derived_split_bytes_scales_with_memory_and_slots():
     assert derived_split_bytes("8192mb", 32) == (16 << 20, 8 << 20)
 
 
-def test_session_split_conf_env_override_wins(monkeypatch):
-    """Explicit SPARK_GRAFT_* env overrides must beat the derivation
-    (the bench A/B harness depends on them) — asserted against the
-    conf-resolution helper get_spark actually uses, not against
-    os.environ itself (the r12 review caught the original test
-    passing tautologically without touching the session code)."""
-    from etl_notifier_pipeline_spark.session import split_conf
+def test_session_split_sizes_are_derived(spark):
+    """get_spark sets both split-size confs from derived_split_bytes for
+    its driver memory and slot count (the test session runs 8 slots)."""
+    from etl_notifier_pipeline_spark.session import derived_split_bytes
 
-    monkeypatch.delenv("SPARK_GRAFT_MAX_PARTITION_BYTES", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_ADVISORY_PARTITION", raising=False)
-    derived = split_conf("8g", 32)
-    assert derived["spark.sql.files.maxPartitionBytes"] == str(16 << 20)
-    assert (
-        derived["spark.sql.adaptive.advisoryPartitionSizeInBytes"]
-        == str(8 << 20)
+    split, advisory = derived_split_bytes(
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"), 8
     )
-    monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "64m")
-    monkeypatch.setenv("SPARK_GRAFT_ADVISORY_PARTITION", "32m")
-    overridden = split_conf("8g", 32)
-    assert overridden["spark.sql.files.maxPartitionBytes"] == "64m"
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == str(split)
     assert (
-        overridden["spark.sql.adaptive.advisoryPartitionSizeInBytes"]
-        == "32m"
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        == str(advisory)
     )
 
 

@@ -14,13 +14,14 @@ n labeled nodes.
 Measurements per cell (fresh subprocess-free, single session — the
 graphs are synthetic ranges, no fixture I/O to contaminate):
 
-- label_prop on chains of diameter 1e2 / 1e3: converges, rounds ~
+- dedup_clusters (label propagation) on chains of diameter 1e2 / 3e2
+  with a budget above the diameter: converges, rounds ~
   diameter/2 (labels move one hop per round from BOTH ends' minima
   ... strictly: min label 0 travels one hop per round, so rounds =
   diameter; recorded, not assumed).
-- two_phase on the same chains AND on a 1M-node chain: rounds stay
-  ~log^2 n, wall seconds recorded.
-- auto on the 1M chain with default max_iter=25: label propagation
+- two_phase_components on the same chains AND on a 1M-node chain:
+  rounds stay ~log^2 n, wall seconds recorded.
+- dedup_clusters on the 1M chain with default max_iter=25: label propagation
   exhausts its budget, falls back (LAST_CLUSTER_STATS.fell_back), and
   the result is STILL exactly correct.
 
@@ -49,11 +50,11 @@ def chain_edges(spark, n: int):
     )
 
 
-def run_cell(spark, n: int, algorithm: str, max_iter: int) -> dict:
+def run_cell(spark, n: int, components, max_iter: int) -> dict:
     edges = chain_edges(spark, n)
     D.LAST_CLUSTER_STATS.clear()
     t0 = time.perf_counter()
-    labels = D.dedup_clusters(edges, max_iter=max_iter, algorithm=algorithm)
+    labels = components(edges, max_iter=max_iter)
     agg = labels.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("cluster_id").alias("n_clusters"),
@@ -66,7 +67,7 @@ def run_cell(spark, n: int, algorithm: str, max_iter: int) -> dict:
     )
     return {
         "nodes": n,
-        "algorithm_requested": algorithm,
+        "function": components.__name__,
         "algorithm_ran": stats.get("algorithm"),
         "rounds": stats.get("rounds"),
         "fell_back": stats.get("fell_back"),
@@ -88,13 +89,13 @@ def main() -> None:
     # DIAMETER, not data volume. (Kept to d <= 300: the point is the
     # slope, and 1000 rounds of driver-loop overhead adds nothing.)
     for n in (100, 300):
-        cells.append(run_cell(spark, n, "label_prop", max_iter=n + 2))
+        cells.append(run_cell(spark, n, D.dedup_clusters, max_iter=n + 2))
     # two_phase rounds stay ~log^2 n across 4 decades
     for n in (100, 1_000, 100_000, 1_000_000):
-        cells.append(run_cell(spark, n, "two_phase", max_iter=50))
-    # auto at the hopeless diameter: budget exhausts, fallback engages,
-    # result still exact
-    cells.append(run_cell(spark, 1_000_000, "auto", max_iter=25))
+        cells.append(run_cell(spark, n, D.two_phase_components, max_iter=50))
+    # dedup_clusters at the hopeless diameter: budget exhausts, the
+    # fallback engages, the result is still exact
+    cells.append(run_cell(spark, 1_000_000, D.dedup_clusters, max_iter=25))
     for c in cells:
         print(c, flush=True)
     doc = {"metric": "component_bench", "cells": cells}
