@@ -202,17 +202,13 @@ def _decode_impl(blob: bytes, modality: str, codec: str) -> list[float]:
 def extract_features(
     media: DataFrame,
     *,
-    deterministic_fake: bool = False,
-    codec: str | None = None,
+    codec: str = "real",
 ) -> DataFrame:
     """binary content -> fixed-dim feature vector via Arrow-batched
     ``mapInPandas`` (never row-at-a-time Python). Output keeps the id
     and modality plus the vector — the shape the similarity operators
     consume. ``codec`` selects the decode branch per
-    :func:`_decode_impl` (``deterministic_fake=True`` is the legacy
-    spelling of ``codec="fake"``); default is ``"real"``."""
-    if codec is None:
-        codec = "fake" if deterministic_fake else "real"
+    :func:`_decode_impl`."""
     if codec not in ("fake", "real", "auto"):
         raise ValueError(f"unknown codec mode {codec!r}")
     out_schema = T.StructType(

@@ -361,7 +361,6 @@ def substring_dup_stats(
     text_col: str = "text",
     width: int = 40,
     stride: int = 20,
-    plan: str = "single_agg",
 ) -> DataFrame:
     """Substring-level duplication audit (the RefinedWeb/SlimPajama
     measure exact dedup misses): stride-sampled character shingles of
@@ -377,48 +376,28 @@ def substring_dup_stats(
     and at 5 M docs that sort spilled 43 GB memory / 8 GB disk
     (measured, sf100 diagnosis run) — the only spilling stage in the
     whole growth ladder. Instead, use the complement identity
-    ``n_dup = n_shingles - sum(k over hashes this doc owns alone)``:
-    a hash whose doc-count is 1 belongs to exactly one doc, so one
-    groupBy(h) aggregation captures (n_docs, owner, k) and the
-    nd == 1 slice re-aggregates by owner. Two hash aggregations with
-    map-side partial combine, no sort anywhere; the join-back frame is
-    doc-sized, not shingle-sized. n^2 never appears — duplication is
-    detected by grouping, not pairing (cf. reference has no dedup at
-    all; capability mandated by BASELINE.json north star).
+    ``n_dup = n_shingles - sum(k over hashes this doc owns alone)``
+    with one shingle-sized aggregation: a hash h is solely owned iff
+    min(doc_id) == max(doc_id) over its POSITION rows, and its k is a
+    plain count, so groupBy(h).agg(count, min, max) finds every solely
+    owned hash and its k, which then re-aggregates by owner. The
+    per-doc totals aggregate runs from the persisted shingle frame
+    (doc-keyed, map-side combine collapses it to ~n_docs rows per
+    partition). No sort anywhere; the join-back frame is doc-sized,
+    not shingle-sized. n^2 never appears — duplication is detected by
+    grouping, not pairing (cf. reference has no dedup at all;
+    capability mandated by BASELINE.json north star).
 
-    ``plan`` (r12 verdict ask #4 — the residual-spill A/B):
-
-    - ``"two_agg"`` — the r8-r12 plan above: a persisted (h, doc_id, k)
-      pair-count frame feeds both the per-hash and per-doc rollups.
-      The pair key is near-unique (k ~= 1), so its partial aggregate
-      gets no reduction and its final hash aggregate holds ~a
-      partition of pairs in memory — the ONE stage in the sf100 sweep
-      with residual spill (5.5 GB mem / 0.9 GB disk measured; hash agg
-      sort-fallback, graceful by design).
-    - ``"single_agg"`` (default since r13) — algebraic identity: a
-      hash h is solely owned iff min(doc_id) == max(doc_id) over its
-      POSITION rows, and its k_total is a plain count. So ONE
-      shingle-sized groupBy(h).agg(count, min, max) replaces the
-      (h, doc_id) pair aggregate + the per-hash re-aggregate — one
-      fewer shingle-sized shuffle and the near-unique-pair hash map
-      gone; the per-doc totals aggregate runs from the persisted
-      shingle frame (doc-keyed, map-side combine collapses it to
-      ~n_docs rows per partition). Identical output by construction:
-      min==max over positions equals nd==1 over distinct docs, and
-      count-over-positions equals sum(k). Measured A/B at sf100
-      (X29_AB_sf100.json, r13): **46.6 -> 31.1 s (-33%)**, shuffle
-      write 5.46 -> 3.33 GB. The residual spill does NOT retire — it
-      moves into the shingle-sized groupBy(h) itself (6.2 GB mem /
-      1.2 GB disk vs two_agg's 5.5/0.9): near-unique hash keys give
-      the partial aggregate nothing to combine under EITHER plan, so
-      the final hash agg's sort-fallback is inherent to a
-      shingle-sized aggregate, and graceful. The win is the removed
-      pair-keyed shuffle + hash map, not the spill.
+    X29_AB_sf100.json measured this plan against the earlier one, which
+    aggregated (h, doc_id) pair counts first and rolled them up per
+    hash: 31.1 s against 46.6 s at sf100, shuffle write 3.33 against
+    5.46 GB. Both spill about the same (6.2/1.2 GB memory/disk here,
+    5.5/0.9 there): near-unique hash keys give the partial aggregate
+    nothing to combine, so the final hash aggregate's sort fallback is
+    inherent to a shingle-sized aggregate, and graceful.
     """
     from etl_notifier_pipeline_spark.caching import tracked_persist
 
-    if plan not in ("two_agg", "single_agg"):
-        raise ValueError(f"unknown plan {plan!r}")
     text = F.col(text_col)
     shingles = (
         df.filter(F.length(text) >= width)
@@ -436,42 +415,22 @@ def substring_dup_stats(
             token_hash(F.col("__t").substr(F.col("pos"), F.lit(width))).alias("h"),
         )
     )
-    if plan == "single_agg":
-        # persisted because BOTH rollups consume it and recomputing
-        # means re-hashing the corpus. Narrow: 16 B/row.
-        shingles = tracked_persist(shingles)
-        per_h = shingles.groupBy("h").agg(
-            F.count(F.lit(1)).alias("k_total"),  # positions with h
-            F.min("doc_id").alias("owner"),
-            F.max("doc_id").alias("mx"),
-        )
-        uniq = (
-            per_h.filter(F.col("owner") == F.col("mx"))  # solely owned
-            .groupBy(F.col("owner").alias("doc_id"))
-            .agg(F.sum("k_total").alias("n_uniq"))
-        )
-        totals = shingles.groupBy("doc_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles")
-        )
-    else:
-        # (h, doc_id, k): persisted because BOTH rollups below consume
-        # it and recomputing means re-hashing the corpus. 24 B/row.
-        counts = tracked_persist(
-            shingles.groupBy("h", "doc_id").agg(F.count(F.lit(1)).alias("k"))
-        )
-        per_h = counts.groupBy("h").agg(
-            F.count(F.lit(1)).alias("nd"),       # docs containing h
-            F.min("doc_id").alias("owner"),      # THE doc when nd == 1
-            F.sum("k").alias("k_total"),         # its k when nd == 1
-        )
-        uniq = (
-            per_h.filter(F.col("nd") == 1)
-            .groupBy(F.col("owner").alias("doc_id"))
-            .agg(F.sum("k_total").alias("n_uniq"))
-        )
-        totals = counts.groupBy("doc_id").agg(
-            F.sum("k").cast("long").alias("n_shingles")
-        )
+    # persisted because BOTH rollups consume it and recomputing
+    # means re-hashing the corpus. Narrow: 16 B/row.
+    shingles = tracked_persist(shingles)
+    per_h = shingles.groupBy("h").agg(
+        F.count(F.lit(1)).alias("k_total"),  # positions with h
+        F.min("doc_id").alias("owner"),
+        F.max("doc_id").alias("mx"),
+    )
+    uniq = (
+        per_h.filter(F.col("owner") == F.col("mx"))  # solely owned
+        .groupBy(F.col("owner").alias("doc_id"))
+        .agg(F.sum("k_total").alias("n_uniq"))
+    )
+    totals = shingles.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shingles")
+    )
     return (
         totals.join(uniq, "doc_id", "left")
         .select(

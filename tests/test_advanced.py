@@ -469,7 +469,7 @@ def test_media_near_dup_finds_duplicate_content(spark):
     rows = [(1, "image", b"same-bytes"), (2, "image", b"same-bytes"),
             (3, "audio", b"other-bytes"), (4, "audio", b"third")]
     media = spark.createDataFrame(rows, "media_id long, modality string, content binary")
-    feats = MM.extract_features(media, deterministic_fake=True)
+    feats = MM.extract_features(media, codec="fake")
     top = S.topk_cosine(feats, feats, k=1, id_col="media_id", vec_col="features")
     best = {r["query_id"]: (r["neighbor_id"], r["cos_sim"]) for r in top.collect()}
     assert best[1][0] == 2 and abs(best[1][1] - 1.0) < 1e-12

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from etl_notifier_pipeline_spark.metrics import measured
 from etl_notifier_pipeline_spark.storage import BucketedTableStore, TableStore, local_frame
 from etl_notifier_pipeline_spark.streaming import ApprovalPipeline, LogNotifier
 
@@ -1837,19 +1838,6 @@ class TestBucketingRecorded:
         assert not pipe.store.exists("people")
 
 
-def _jobs(spark, fn, group):
-    """``(fn(), jobs fn launched)``, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestReadsLaunchNoJobs:
     @staticmethod
     def _table(spark, root):
@@ -1867,18 +1855,21 @@ class TestReadsLaunchNoJobs:
         store = self._table(spark, str(tmp_path / "j"))
         assert len(store._manifest("t", store.current_version("t"))["buckets"]) == 64
 
-        _, n = _jobs(spark, lambda: spark.range(10).count(), "reads-control")
-        assert n >= 1, "the job counter sees no jobs at all"
-        df, n = _jobs(spark, lambda: store.read("t"), "reads-full")
-        assert n == 0
+        with measured(spark, "reads-control") as m:
+            spark.range(10).count()
+        assert m["jobs"] >= 1, "the job counter sees no jobs at all"
+        with measured(spark, "reads-full") as m:
+            df = store.read("t")
+        assert m["jobs"] == 0
         assert df.count() == 2000
 
         real_scan = store._scan
         scan_jobs = []
 
         def counted_scan(*args, **kwargs):
-            out, k = _jobs(spark, lambda: real_scan(*args, **kwargs), "reads-pruned")
-            scan_jobs.append(k)
+            with measured(spark, "reads-pruned") as m:
+                out = real_scan(*args, **kwargs)
+            scan_jobs.append(m["jobs"])
             return out
 
         monkeypatch.setattr(store, "_scan", counted_scan)
@@ -1897,8 +1888,9 @@ class TestReadsLaunchNoJobs:
         probe = local_frame(
             spark, [(5,), (1234,), (5,)], T.StructType([T.StructField("k", T.LongType())])
         )
-        got, n = _jobs(spark, lambda: store.read_keyed("t", probe), "reads-local-keys")
-        assert n == 0
+        with measured(spark, "reads-local-keys") as m:
+            got = store.read_keyed("t", probe)
+        assert m["jobs"] == 0
         assert sorted(tuple(r) for r in got.collect()) == [(5, "5"), (1234, "1234")]
 
     def test_local_frame_collect_launches_no_job(self, spark):
@@ -1912,12 +1904,9 @@ class TestReadsLaunchNoJobs:
         for rows in ([(i, f"v{i}") for i in range(10)], []):
             df = local_frame(spark, rows, schema)
             assert df.schema == schema
-            out, n = _jobs(
-                spark,
-                lambda: df.select((F.col("k") + 1).alias("k1"), F.upper("v")).collect(),
-                f"local-collect-{len(rows)}",
-            )
-            assert n == 0
+            with measured(spark, f"local-collect-{len(rows)}") as m:
+                out = df.select((F.col("k") + 1).alias("k1"), F.upper("v")).collect()
+            assert m["jobs"] == 0
             assert [r["k1"] for r in out] == [k + 1 for k, _ in rows]
 
 

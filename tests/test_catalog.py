@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from etl_notifier_pipeline_spark import catalog
 from etl_notifier_pipeline_spark.catalog import SCHEMAS, TABLES, load_table, table_path
+from etl_notifier_pipeline_spark.metrics import measured
 from conftest import SF_DIR
-from test_bucketed_store import _jobs
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TESTDATA = os.path.dirname(SF_DIR)
@@ -30,12 +30,12 @@ def test_declared_schemas_equal_inferred(spark, sf_dir):
 
 
 def test_register_views_launches_no_jobs(spark):
-    _, n = _jobs(spark, lambda: spark.range(10).count(), "catalog-control")
-    assert n >= 1, "the job counter sees no jobs at all"
-    dfs, n = _jobs(
-        spark, lambda: catalog.register_views(spark, os.path.join(TESTDATA, "sf0.01")), "catalog-views"
-    )
-    assert n == 0
+    with measured(spark, "catalog-control") as m:
+        spark.range(10).count()
+    assert m["jobs"] >= 1, "the job counter sees no jobs at all"
+    with measured(spark, "catalog-views") as m:
+        dfs = catalog.register_views(spark, os.path.join(TESTDATA, "sf0.01"))
+    assert m["jobs"] == 0
     assert sorted(dfs) == sorted(TABLES)
 
 

@@ -76,12 +76,14 @@ def test_header_names_follow_spark(spark, tmp_path, text, names):
 
 
 def test_read_csv_launches_no_jobs(spark, csv):
-    from test_bucketed_store import _jobs
+    from etl_notifier_pipeline_spark.metrics import measured
 
-    _, n = _jobs(spark, lambda: spark.range(10).count(), "csv-control")
-    assert n >= 1, "the job counter sees no jobs at all"
-    df, n = _jobs(spark, lambda: read_csv_all_string(spark, csv), "csv-read")
-    assert n == 0
+    with measured(spark, "csv-control") as m:
+        spark.range(10).count()
+    assert m["jobs"] >= 1, "the job counter sees no jobs at all"
+    with measured(spark, "csv-read") as m:
+        df = read_csv_all_string(spark, csv)
+    assert m["jobs"] == 0
     assert df.count() == 2
 
 

@@ -378,9 +378,14 @@ class TestControlPlaneJobBudget:
     # update commit (four jobs); the plain store adds a schema-inference
     # job to each of its three reads.
     BUDGET = {"table_store": 9, "bucketed": 6}
+    # run_batch plus drain_deletes on the bucketed store launched 41
+    # jobs when this budget was set; work that cuts jobs lowers it.
+    BATCH_BUDGET = 41
 
-    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
-    def test_control_plane_job_budget(self, spark, tmp_path, backend, monkeypatch):
+    @staticmethod
+    def _batch(spark, tmp_path, backend):
+        """A pipeline whose ledger holds five arrivals, and the local
+        frame that approves, rejects or fails them."""
         from etl_notifier_pipeline_spark.storage import TableStore, local_frame
         from etl_notifier_pipeline_spark.streaming.pipeline import approval_event_schema
 
@@ -410,33 +415,41 @@ class TestControlPlaneJobBudget:
         approvals = local_frame(
             spark, [tuple(e[f] for f in schema.names) for e in events], schema
         )
+        return pipe, approvals
 
-        sc = spark.sparkContext
-        control, data = f"budget-control-{backend}", f"budget-data-{backend}"
+    @pytest.mark.parametrize("backend", ["table_store", "bucketed"])
+    def test_control_plane_job_budget(self, spark, tmp_path, backend, monkeypatch):
+        from etl_notifier_pipeline_spark.metrics import measured
+
+        pipe, approvals = self._batch(spark, tmp_path, backend)
+        data_jobs = []
 
         def in_data(fn):
             def run(*args, **kwargs):
-                outer = sc.getLocalProperty("spark.jobGroup.id")
-                sc.setJobGroup(data, data)
-                try:
-                    return fn(*args, **kwargs)
-                finally:
-                    sc.setJobGroup(outer, outer)
+                with measured(spark, f"budget-data-{backend}") as m:
+                    out = fn(*args, **kwargs)
+                data_jobs.append(m["jobs"])
+                return out
             return run
 
         for name in ("_stage_event", "_apply_run"):
             monkeypatch.setattr(pipe, name, in_data(getattr(pipe, name)))
         monkeypatch.setattr(pipe.store, "append", in_data(pipe.store.append))
-        sc.setJobGroup(control, control)
-        try:
+        with measured(spark, f"budget-control-{backend}") as control:
             pipe.run_batch(approvals, 0)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-
-        def jobs(group):
-            return len(sc.statusTracker().getJobIdsForGroup(group))
 
         assert len(pipe.notifier.sent) == 5
-        assert jobs(data) > 0, "the job counter sees no data-plane jobs"
-        assert jobs(control) <= self.BUDGET[backend]
+        assert sum(data_jobs) > 0, "the job counter sees no data-plane jobs"
+        assert control["jobs"] <= self.BUDGET[backend]
+
+    def test_whole_batch_job_budget(self, spark, tmp_path):
+        """The whole batch — control plane, data plane and the delete
+        drain — stays within the job count it had when first measured."""
+        from etl_notifier_pipeline_spark.metrics import measured
+
+        pipe, approvals = self._batch(spark, tmp_path, "bucketed")
+        with measured(spark, "budget-batch") as m:
+            pipe.run_batch(approvals, 0)
+            assert pipe.drain_deletes() == 1
+        assert len(pipe.notifier.sent) == 5
+        assert m["jobs"] <= self.BATCH_BUDGET

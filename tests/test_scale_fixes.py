@@ -460,7 +460,7 @@ def test_repeated_plans_reuse_their_generated_classes(spark):
     100 entries: each plan inlines its own int literal into its
     generated source, so 80 plans generate more than 100 distinct
     classes, and running them again compiles none of them."""
-    from tools.scale_bench import _codegen_compiles
+    from etl_notifier_pipeline_spark.metrics import measured
 
     def round_():
         for i in range(80):
@@ -468,9 +468,9 @@ def test_repeated_plans_reuse_their_generated_classes(spark):
                 (F.col("id") * 1_000_003 + F.lit(7_770_000 + i)).alias("v")
             ).collect()
 
-    start = _codegen_compiles(spark)
-    round_()
-    first = _codegen_compiles(spark)
-    round_()
-    assert first - start > 100
-    assert _codegen_compiles(spark) - first == 0
+    with measured(spark, "codegen-cache-first") as first:
+        round_()
+    with measured(spark, "codegen-cache-again") as again:
+        round_()
+    assert first["codegenCompiles"] > 100
+    assert again["codegenCompiles"] == 0

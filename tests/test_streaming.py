@@ -489,15 +489,16 @@ def test_st17_tombstone_read_lists_batch_dirs_without_jobs(spark, tmp_path):
     returns every batch's rows and nothing else under the root."""
     from pyspark.sql import types as T
 
+    from etl_notifier_pipeline_spark.metrics import measured
     from etl_notifier_pipeline_spark.plans.streaming_queries import read_batch_dirs
-    from test_bucketed_store import _jobs
 
     schema = T.StructType([T.StructField("vec_id", T.LongType())])
     root = tmp_path / "tombs"
     for b, ids in ((0, [1, 8]), (2, [3])):
         spark.createDataFrame([(i,) for i in ids], schema).write.parquet(str(root / f"b{b}"))
     (root / "_checkpoint").mkdir()
-    tombs, n = _jobs(spark, lambda: read_batch_dirs(spark, str(root), schema), "st17-tombs")
-    assert n == 0
+    with measured(spark, "st17-tombs") as m:
+        tombs = read_batch_dirs(spark, str(root), schema)
+    assert m["jobs"] == 0
     assert tombs.schema == schema
     assert sorted(r["vec_id"] for r in tombs.collect()) == [1, 3, 8]

@@ -27,8 +27,8 @@ Claims under test, each measured per-measurement-canary-stamped
 Per-commit measurements ride tools/benchproto.stamped_runs (n_runs=1
 one-shots still carry their own canary bracket, so host drift between
 commits stays attributable); steady-state reads use n_runs=3 with
-dispersion. Stage metrics come from the JVM status store exactly as
-tools/scale_bench.py does. Usage:
+dispersion. Stage metrics come from ``metrics.measured``, as in
+tools/scale_bench.py. Usage:
 
     python tools/lakehouse_bench.py [--rows 60000000] [--commits 10] \
         [--json LAKEHOUSE_BENCH.json]
@@ -47,6 +47,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from etl_notifier_pipeline_spark.metrics import measured  # noqa: E402
 from etl_notifier_pipeline_spark.operators import change_feed  # noqa: E402
 from etl_notifier_pipeline_spark.operators.incremental import (  # noqa: E402
     agg_delta,
@@ -70,21 +71,11 @@ KINDS = {"d_count": "count", "d_sum": "sum", "d_nn": "count"}
 
 
 def _measure(spark, df) -> tuple[float, dict]:
-    """(wall seconds, stage-metric delta) for materializing df."""
-    from tools.scale_bench import _stages
-
-    before = _stages(spark)
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    after = _stages(spark)
-    delta = {"inputBytes": 0, "shuffleWriteBytes": 0}
-    for key, s in after.items():
-        if key in before:
-            continue
-        for f in delta:
-            delta[f] += int(s.get(f, 0))
-    return wall, delta
+    """(wall seconds, the other ``metrics.measured`` counters) for
+    materializing df."""
+    with measured(spark, "lakehouse-bench") as m:
+        df.write.format("noop").mode("overwrite").save()
+    return m.pop("sec"), m
 
 
 def _timed(fn) -> float:
@@ -204,7 +195,6 @@ def run_rung(spark, root: str, n_rows: int, n_commits: int, strategy: str):
             "n_changes": n_changes,
             "feed_cdc": {
                 "sec": feed_cdc["sec"],
-                "input_mb": round(feed_cdc["inputBytes"] / 1e6, 1),
                 "canary_ms": feed_cdc["canary_ms"],
             },
         }
@@ -222,7 +212,6 @@ def run_rung(spark, root: str, n_rows: int, n_commits: int, strategy: str):
             fd = stamped_runs(lambda: _measure(spark, diff), n_runs=1)
             row["feed_diff"] = {
                 "sec": fd["sec"],
-                "input_mb": round(fd["inputBytes"] / 1e6, 1),
                 "canary_ms": fd["canary_ms"],
             }
 
@@ -310,12 +299,10 @@ def append_rung(spark, store, view, n_rows: int):
         "n_changes": n_app_changes,
         "feed_fastpath": {
             "sec": fp["sec"],
-            "input_mb": round(fp["inputBytes"] / 1e6, 1),
             "canary_ms": fp["canary_ms"],
         },
         "feed_diff": {
             "sec": fd["sec"],
-            "input_mb": round(fd["inputBytes"] / 1e6, 1),
             "canary_ms": fd["canary_ms"],
         },
         "ivm": ivm,

@@ -2,11 +2,10 @@
 
 Runs the same headline set as bench.py against an amplified fixture
 (tools/scale_up.py) and records, per query, what bench.py's wall-clock
-number cannot show: shuffle read/write bytes, memory/disk spill, and
-input bytes, read from the Spark JVM's status store by diffing the
-completed-stage set around each run, plus the generated classes the run
-compiled (``codegenCompiles``, diffed from ``CodegenMetrics``). This is
-the r4 verdict's headline ask — the difference between "the plan SHAPE
+number cannot show: shuffle read/write bytes, memory/disk spill,
+executor run time, GC time and the generated classes the run compiled, as
+``etl_notifier_pipeline_spark.metrics.measured`` reads them for the run's
+job group, plus the JVM's peak heap. This is the r4 verdict's headline ask — the difference between "the plan SHAPE
 would survive 100 TB" and "we RAN it at a scale where shuffle and AQE
 actually engage, here are the bytes".
 
@@ -23,11 +22,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_notifier_pipeline_spark import caching, plans  # noqa: E402
+from etl_notifier_pipeline_spark.metrics import measured, peak_heap  # noqa: E402
 from etl_notifier_pipeline_spark.session import get_spark  # noqa: E402
 from tools.benchproto import (  # noqa: E402
     configure_io_canary,
@@ -35,100 +34,6 @@ from tools.benchproto import (  # noqa: E402
     artifact_vs_prev,
     stamped_runs,
 )
-
-METRIC_FIELDS = (
-    "inputBytes",
-    "shuffleReadBytes",
-    "shuffleWriteBytes",
-    "memoryBytesSpilled",
-    "diskBytesSpilled",
-    "executorRunTime",
-)
-
-
-def _status_store(spark):
-    """The JVM ``AppStatusStore``: the data behind the UI's REST API,
-    kept with the UI disabled too (``perfbench/tracing.py`` reads it
-    the same way)."""
-    return spark.sparkContext._jsc.sc().statusStore()
-
-
-def _seq(scala_seq) -> list:
-    return [scala_seq.apply(i) for i in range(scala_seq.size())]
-
-
-def _stages(spark) -> dict[tuple[int, int], dict[str, int]]:
-    """Completed stages by ``(stageId, attemptId)``, each with its
-    ``METRIC_FIELDS``. Errors propagate: a failed read aborts the run
-    instead of recording zeros."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    complete = jvm.java.util.Collections.singletonList(
-        jvm.org.apache.spark.status.api.v1.StageStatus.COMPLETE
-    )
-    stages = _status_store(spark).stageList(
-        complete, False, False, sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    return {
-        (s.stageId(), s.attemptId()): {f: int(getattr(s, f)()) for f in METRIC_FIELDS}
-        for s in _seq(stages)
-    }
-
-
-def _gc_and_heap(spark, peak: bool = True) -> tuple[int, int | None]:
-    """(total JVM GC ms across executors, peak JVM heap bytes).
-
-    GC time is cumulative per executor — diff it around a run. Peak
-    heap is a high-water mark, not diffable, but still tells whether a
-    run operated near the heap ceiling (the GC-thrash regime). Executors
-    report it with their heartbeats, so ``peak=False`` skips it (None)
-    for a read taken before any work ran.
-
-    Errors propagate: a failed metrics read aborts the run instead of
-    recording zeros."""
-    execs = _seq(_status_store(spark).executorList(False))
-    gc = sum(int(e.totalGCTime()) for e in execs)
-    if not peak:
-        return gc, None
-    peaks = [
-        int(e.peakMemoryMetrics().get().getMetricValue("JVMHeapMemory"))
-        for e in execs
-        if e.peakMemoryMetrics().isDefined()
-    ]
-    if not peaks:
-        raise RuntimeError("no executor reports peakMemoryMetrics")
-    return gc, max(peaks)
-
-
-def _codegen_compiles(spark) -> int:
-    """Generated classes compiled so far in this JVM (Janino compiles
-    counted by ``CodegenMetrics``). The count is JVM-wide and never
-    resets, so diff it around a run. Errors propagate."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return int(metrics.METRIC_COMPILATION_TIME().getCount())
-
-
-def measured_run(spark, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
-    before = _stages(spark)
-    gc0 = _gc_and_heap(spark, peak=False)[0]
-    compiles0 = _codegen_compiles(spark)
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    compiles = _codegen_compiles(spark) - compiles0
-    after = _stages(spark)
-    gc1, peak = _gc_and_heap(spark)
-    delta = {f: 0 for f in METRIC_FIELDS}
-    for key, s in after.items():
-        if key in before:
-            continue
-        for f in METRIC_FIELDS:
-            delta[f] += s[f]
-    delta["jvmGcTimeMs"] = gc1 - gc0
-    delta["peakJvmHeapBytes"] = peak
-    delta["codegenCompiles"] = compiles
-    return wall, delta
 
 
 def main() -> None:
@@ -184,13 +89,16 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             caching.release_all()
 
-        def run_once(fn=fn):
+        def run_once(fn=fn, name=name):
             _dedup.LAST_CLUSTER_STATS.clear()
-            wall, m = measured_run(spark, fn, sf_dir)
+            with measured(spark, f"scale-bench/{name}") as m:
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            del m["jobs"]  # the artifact's per-query keys stay the stage counters
+            m["peakJvmHeapBytes"] = peak_heap(spark)
             if _dedup.LAST_CLUSTER_STATS:
-                m = {**m, "cluster": dict(_dedup.LAST_CLUSTER_STATS)}
+                m["cluster"] = dict(_dedup.LAST_CLUSTER_STATS)
             caching.release_all()
-            return wall, m
+            return m.pop("sec"), m
 
         out[name] = stamped_runs(run_once, n_runs=n_runs)
         best_wall, best_m = out[name]["sec"], out[name]
@@ -200,7 +108,6 @@ def main() -> None:
         cluster = best_m.get("cluster")
         print(
             f"{name}: {best_wall:.2f}s  "
-            f"input={best_m['inputBytes']/1e6:.0f}MB "
             f"shufW={best_m['shuffleWriteBytes']/1e6:.0f}MB "
             f"shufR={best_m['shuffleReadBytes']/1e6:.0f}MB "
             f"spillMem={best_m['memoryBytesSpilled']/1e6:.0f}MB "

@@ -5,9 +5,9 @@ TableStore, OPTIMIZE-clusters it on l_shipdate into 64 files, then runs
 the same one-year revenue aggregate two ways — ``read()`` + filter
 (full scan; parquet row-group stats still apply WITHIN files) and
 ``read_where`` (file-level zone-map pruning BEFORE any file opens) —
-with the scale-bench stage-metric capture, warm best-of-2. The claim
-under test is the 100 TB one: file skipping should cut inputBytes
-roughly in proportion to files kept, with identical results.
+with ``metrics.measured``'s stage counters, warm best-of-2. The claim
+under test is the 100 TB one: file skipping should cut the files a
+scan opens, and the executor time they cost, with identical results.
 
     python tools/zonemap_bench.py [scale_dir] [--json ZONEMAP_BENCH.json]
 """
@@ -21,13 +21,12 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from etl_notifier_pipeline_spark.metrics import measured, peak_heap  # noqa: E402
 from etl_notifier_pipeline_spark.session import get_spark  # noqa: E402
 from etl_notifier_pipeline_spark.storage import TableStore  # noqa: E402
-from scale_bench import measured_run  # noqa: E402
 from tools.benchproto import (  # noqa: E402
     PROTOCOL_VERSION,
     configure_io_canary,
@@ -139,9 +138,14 @@ def main() -> None:
             ("pruned_scan", pruned_scan),
         ):
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cell[name] = stamped_runs(
-                lambda fn=fn: measured_run(spark, fn, sf_dir), n_runs=2
-            )
+
+            def run_once(fn=fn, name=name):
+                with measured(spark, f"zonemap-bench/{name}") as m:
+                    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                m["peakJvmHeapBytes"] = peak_heap(spark)
+                return m.pop("sec"), m
+
+            cell[name] = stamped_runs(run_once, n_runs=2)
 
         full = {tuple(r) for r in full_scan(spark, sf_dir).collect()}
         pruned = {tuple(r) for r in pruned_scan(spark, sf_dir).collect()}
@@ -220,7 +224,7 @@ def main() -> None:
         "On this warm single box that constant is visible at 64 files "
         "(speedup ~1.5x) and amortized away at 512 tiny files by "
         "coalesced file partitions + page cache (wall-neutral; "
-        "executorRunTime and inputBytes still drop). On object "
+        "executorRunTime still drops). On object "
         "storage each footer open is a network round trip and "
         "listings are O(files), which is the regime manifest-level "
         "stats exist for -- the artifact records the mechanism, not "
