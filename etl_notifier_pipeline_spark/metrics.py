@@ -21,6 +21,8 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
+
 # Summed over the group's stages. Spark's inputBytes is left out:
 # parquet's vectored reads run off the task thread, where its counter
 # cannot see them (a full scan of sf0.1 lineitem, 10.8 MB, counted
@@ -56,9 +58,26 @@ def _gc_ms(store) -> int:
 
 
 def _stages(store, job_ids) -> list:
-    """The last attempt of every stage of the jobs (skipped ones count 0)."""
-    ids = {sid for jid in job_ids for sid in _seq(store.job(jid).stageIds())}
-    return [store.lastStageAttempt(sid) for sid in sorted(ids)]
+    """The last attempt of every stage of the jobs that the store holds.
+    A store past ``spark.ui.retainedStages`` evicts skipped stages first
+    (they sort as never completed), even ones the running block just
+    skipped; they would count 0. Raises when more stages are missing
+    than the jobs skipped."""
+    jobs = [store.job(j) for j in job_ids]
+    ids = sorted({sid for j in jobs for sid in _seq(j.stageIds())})
+    stages = []
+    for sid in ids:
+        try:
+            stages.append(store.lastStageAttempt(sid))
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+                raise
+    missing = len(ids) - len(stages)
+    if missing > sum(j.numSkippedStages() for j in jobs):
+        raise MeasurementError(
+            f"the status store has lost {missing} stages of jobs {job_ids}, more than they skipped"
+        )
+    return stages
 
 
 def peak_heap(spark) -> int:
@@ -79,7 +98,8 @@ def peak_heap(spark) -> int:
 def _codegen_compiles(jvm) -> int:
     """Generated classes Janino has compiled in this JVM, across every
     session in it."""
-    return int(jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(codegen.METRIC_COMPILATION_TIME().getCount())
 
 
 @contextmanager
