@@ -29,6 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_notifier_pipeline_spark import caching, plans  # noqa: E402
+from etl_notifier_pipeline_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from etl_notifier_pipeline_spark.session import get_spark  # noqa: E402
 from tools.benchproto import PROTOCOL_VERSION  # noqa: E402
 from tools.parity import _duck_path  # noqa: E402
@@ -61,6 +62,12 @@ HEADLINE = [
 ]
 
 N_RUNS = 3
+
+# The registry's bit-exact decimal contract: every headline query runs
+# its registry plan. Stamped into every artifact, because committed
+# artifacts from before the deployment profile's deletion carry
+# "deployment" and must not be compared with this one.
+NUMERIC_PROFILE = "oracle"
 
 
 def host_canary_ms(reps: int = 3) -> float:
@@ -111,7 +118,7 @@ def io_canary_ms(
     import glob as _glob
 
     if sf_dir is None:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        sf_dir = DEFAULT_SF_DIR
     # The whole probe is best-effort: a file deleted between glob and
     # open, a permission hole, or a stray directory named *.parquet
     # must degrade to None, not abort a multi-hour artifact run at a
@@ -189,178 +196,8 @@ FROM events GROUP BY user_id
 }
 
 
-# --- numeric_profile="deployment" twins (r5 verdict ask #5) ---------
-# The oracle contract forces q01/q05 to sum decimal128 so the value
-# hash is bit-exact across engines — measured 5x the cost of double
-# sums (docs/SCALE.md). A deployment without the cross-engine hash
-# gate sums doubles; `--profile deployment` benches that numeric
-# policy on BOTH engines (Spark fns below, matching native-type DuckDB
-# SQL). Bench-only: these are NOT registry queries — double summation
-# is order-dependent, so a cross-engine value hash over them would be
-# flaky by construction. Oracle parity mode is untouched.
-
-
-def _q01_deployment(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from etl_notifier_pipeline_spark.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
-    )
-    qty = F.col("l_quantity").cast("double")
-    ep = F.col("l_extendedprice").cast("double")
-    disc = F.col("l_discount").cast("double")
-    tax = F.col("l_tax").cast("double")
-    disc_price = ep * (F.lit(1.0) - disc)
-    charge = disc_price * (F.lit(1.0) + tax)
-    n = F.count(F.lit(1))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(qty).alias("sum_qty"),
-        F.sum(ep).alias("sum_base_price"),
-        F.sum(disc_price).alias("sum_disc_price"),
-        F.sum(charge).alias("sum_charge"),
-        (F.sum(qty) / n).alias("avg_qty"),
-        (F.sum(ep) / n).alias("avg_price"),
-        (F.sum(disc) / n).alias("avg_disc"),
-        n.alias("count_order"),
-    )
-
-
-def _q05_deployment(spark, sf_dir: str):
-    # Storage-partitioned star join (operators/starjoin.py): the fact
-    # is read from its ingest-time bucket layout (bucketBy l_orderkey),
-    # so the scan IS the join partitioning — zero exchange, zero sort,
-    # zero driver-side build. r6 measured the alternatives at sf100
-    # (600 M lineitem, 30 M qualifying orders): driver-serial broadcast
-    # build 17.9 s (~13 s serial on the driver, impossible at another
-    # 100x dim growth); AQE sort-merge 31.5 s (25 GB sort spill). The
-    # bucketed plan's one-time layout build is ingest cost, reported
-    # separately in the bench artifact (starjoin.LAST_BUILD_SECS) —
-    # never hidden in the per-query number.
-    from etl_notifier_pipeline_spark.operators.starjoin import (
-        q05_plan_bucketed,
-    )
-
-    return q05_plan_bucketed(spark, sf_dir)
-
-
-def _q50_deployment(spark, sf_dir: str):
-    # The second storage-partitioned star (operators/starjoin.py
-    # LAYOUTS["orderkey_star"], r8 ask #5): lineitem and orders are
-    # BOTH table-sized, so their join can never broadcast — here both
-    # are read from co-bucketed covering projections (zero exchange,
-    # zero sort on the fact-fact join); part/supplier join as
-    # executor-built shuffle-hash, only the 25-row nation map
-    # broadcasts.
-    from etl_notifier_pipeline_spark.operators.starjoin import (
-        q50_plan_bucketed,
-    )
-
-    return q50_plan_bucketed(spark, sf_dir)
-
-
-def _q56_deployment(spark, sf_dir: str):
-    # The third star shape through the layout REGISTRY (r9 ask #7) —
-    # and the proof the layouts are shared capital: q56 reuses q50's
-    # orderkey_star (union covering projection), and its whole
-    # scan -> colocated join -> per-(order,supplier) agg -> per-order
-    # window chain runs with ZERO exchange because every downstream
-    # clustering key contains the bucket key. No decimal sums in the
-    # query (counts only), so the deployment twin differs from the
-    # registry entry only by the storage layout.
-    from etl_notifier_pipeline_spark.operators.starjoin import (
-        q56_plan_bucketed,
-    )
-
-    return q56_plan_bucketed(spark, sf_dir)
-
-
-def _q49_deployment(spark, sf_dir: str):
-    # The THIRD layout axis (r10 ask #7): partkey_star. q49 has no
-    # fact-fact join, yet the layout removes its only fact-sized
-    # exchange — the (l_partkey, l_suppkey) aggregate and min-per-part
-    # window both cluster on a superset of the bucket key. Decimal
-    # sums as in the registry entry (the min-equality tie semantics
-    # are only exact on decimals), so the twin differs from the
-    # registry only by storage layout and runs against its oracle.
-    from etl_notifier_pipeline_spark.operators.starjoin import (
-        q49_plan_bucketed,
-    )
-
-    return q49_plan_bucketed(spark, sf_dir)
-
-
-def _q84_deployment(spark, sf_dir: str):
-    # partkey_star's fact-fact shape: the TPC-H Q17 aggregate ->
-    # join-back SELF-join, storage-partitioned on both legs (zero
-    # exchange in the WHOLE plan — colocated brand-filter join,
-    # per-part avg, join-back, final aggregate all ride the bucket
-    # partitioning). Registry twin keeps the single-scan window form.
-    from etl_notifier_pipeline_spark.operators.starjoin import (
-        q84_plan_bucketed,
-    )
-
-    return q84_plan_bucketed(spark, sf_dir)
-
-
-DEPLOYMENT_SPARK = {
-    "q01_pricing_summary": _q01_deployment,
-    "q05_revenue_by_nation": _q05_deployment,
-    "q49_min_cost_supplier": _q49_deployment,
-    "q50_product_profit": _q50_deployment,
-    "q56_late_sole_suppliers": _q56_deployment,
-    "q84_brand_small_qty_revenue": _q84_deployment,
-}
-
-DEPLOYMENT_SQL = {
-    "q01_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-  SUM(l_quantity::DOUBLE) AS sum_qty,
-  SUM(l_extendedprice::DOUBLE) AS sum_base_price,
-  SUM(l_extendedprice::DOUBLE * (1 - l_discount::DOUBLE)) AS sum_disc_price,
-  SUM(l_extendedprice::DOUBLE * (1 - l_discount::DOUBLE)
-      * (1 + l_tax::DOUBLE)) AS sum_charge,
-  SUM(l_quantity::DOUBLE) / COUNT(*) AS avg_qty,
-  SUM(l_extendedprice::DOUBLE) / COUNT(*) AS avg_price,
-  SUM(l_discount::DOUBLE) / COUNT(*) AS avg_disc,
-  COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "q05_revenue_by_nation": """
-SELECT n.n_name AS nation,
-       SUM(l.l_extendedprice::DOUBLE * (1 - l.l_discount::DOUBLE)) AS revenue,
-       COUNT(*) AS n_lineitems
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name IN ('AMERICA', 'ASIA') AND o.o_orderstatus = 'F'
-GROUP BY n.n_name
-""",
-    "q50_product_profit": """
-SELECT n.n_name AS nation,
-       EXTRACT(YEAR FROM o.o_orderdate) AS o_year,
-       SUM(l.l_extendedprice::DOUBLE * (1 - l.l_discount::DOUBLE)
-           - l.l_quantity::DOUBLE * p.p_retailprice::DOUBLE * 0.2) AS profit,
-       COUNT(*) AS n_lineitems
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE p.p_name LIKE '%widget%'
-GROUP BY n.n_name, EXTRACT(YEAR FROM o.o_orderdate)
-""",
-}
-
-
 def _probe_cpu_scaling(spark, sf_dir: str):
-    """Bench-only CPU-scaling probe (NOT a registry query, like the
-    deployment twins): a deterministic xxhash64 chain over an exploded
+    """Bench-only CPU-scaling probe (NOT a registry query): a deterministic xxhash64 chain over an exploded
     lineitem projection. Shape: one tiny keyless repartition of the
     600 k-row key column (so the compute stage has 4x`defaultParallelism`
     partitions regardless of the fixture's file count — lineitem at
@@ -394,20 +231,11 @@ def _probe_cpu_scaling(spark, sf_dir: str):
     )
 
 
-def resolve(name: str, profile: str = "oracle"):
-    """(spark_fn, duckdb_sql) for a headline query under the given
-    numeric profile. "oracle" = the registry's bit-exact contract;
-    "deployment" = double-sum twins for the scan-aggs that have one."""
+def resolve(name: str):
+    """(spark_fn, duckdb_sql) for a headline query: the registry plan
+    and its oracle, else the TWIN_SQL comparable."""
     if name == "probe_cpu_scaling":
         return _probe_cpu_scaling, None
-    if profile == "deployment" and name in DEPLOYMENT_SPARK:
-        # a deployment twin without its own SQL (q56: counts only, no
-        # decimal-vs-double divergence) runs against the registry
-        # oracle — the twin differs only by storage layout
-        return (
-            DEPLOYMENT_SPARK[name],
-            DEPLOYMENT_SQL.get(name) or plans.get(name).oracle,
-        )
     spec = plans.get(name)
     return spec.fn, (spec.oracle or TWIN_SQL.get(name))
 
@@ -426,7 +254,6 @@ def duckdb_twin_times(
     names: list[str],
     n_runs: int = N_RUNS,
     warm: bool = True,
-    profile: str = "oracle",
     stamped: bool = False,
 ) -> dict[str, float | dict | None]:
     """Best-of-N DuckDB wall time per headline query (registry oracle,
@@ -457,7 +284,7 @@ def duckdb_twin_times(
         )
     out: dict[str, float | dict | None] = {}
     for name in names:
-        _, oracle = resolve(name, profile)
+        _, oracle = resolve(name)
         if not oracle:
             out[name] = None
             continue
@@ -513,10 +340,8 @@ def _prev_round_artifact(root: str | None = None) -> tuple[int, dict] | None:
         # reconstruct the prev doc from it. A failed reconstruction
         # must still return (n, {}) — returning None here would reset
         # main()'s round counter to 1 and clobber round-1 stamps. The
-        # untagged stamps file is the ORACLE profile's by the naming
-        # contract below; carry the profile so vs_prev_section can
-        # refuse a cross-profile comparison instead of splicing
-        # oracle walls into a deployment run's table.
+        # profile is carried so vs_prev_section can refuse an artifact
+        # of the retired deployment profile.
         sp = os.path.join(root, f"BENCH_STAMPS_r{n:02d}.json")
         try:
             with open(sp) as f:
@@ -528,7 +353,7 @@ def _prev_round_artifact(root: str | None = None) -> tuple[int, dict] | None:
                 },
                 "host_canary_ms_pre": stamps.get("host_canary_ms_pre"),
                 "host_canary_ms_post": stamps.get("host_canary_ms_post"),
-                "numeric_profile": stamps.get("numeric_profile", "oracle"),
+                "numeric_profile": stamps.get("numeric_profile", NUMERIC_PROFILE),
             }
         except (OSError, json.JSONDecodeError, KeyError, TypeError):
             doc = {}
@@ -539,7 +364,6 @@ def vs_prev_section(
     timings: dict[str, float],
     canary_pre: float,
     canary_post: float,
-    profile: str = "oracle",
 ) -> dict | None:
     """Canary-normalized round-over-round table (r6 verdict ask #2):
     this round's seconds are rescaled to the PREVIOUS artifact's host
@@ -552,15 +376,16 @@ def vs_prev_section(
     if prev is None:
         return None
     n, pdoc = prev
-    prev_profile = pdoc.get("numeric_profile", "oracle")
-    if prev_profile != profile:
-        # oracle (decimal) and deployment (double) walls run different
-        # plans — comparing them reports phantom regressions
+    prev_profile = pdoc.get("numeric_profile", NUMERIC_PROFILE)
+    if prev_profile != NUMERIC_PROFILE:
+        # artifacts of the deleted deployment profile (double sums,
+        # bucketed layouts) ran different plans — comparing them
+        # reports phantom regressions
         return {
             "round": n,
             "note": (
                 f"prev round's stamps are {prev_profile}-profile, this "
-                f"run is {profile}: not comparable, no deltas"
+                f"run is {NUMERIC_PROFILE}: not comparable, no deltas"
             ),
             "queries": {},
         }
@@ -615,9 +440,7 @@ def vs_prev_section(
     return out
 
 
-def run_sweep(
-    spark, sf_dir: str, profile: str
-) -> tuple[dict[str, float], dict[str, dict]]:
+def run_sweep(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, dict]]:
     """One full warm+stamped pass over the headline set. Factored out
     so --aa can run the IDENTICAL sweep twice back-to-back in one
     session (r12 verdict ask #1: an A/A double settles whether a
@@ -628,7 +451,7 @@ def run_sweep(
     timings: dict[str, float] = {}
     stamps: dict[str, dict] = {}
     for name in HEADLINE:
-        fn, _ = resolve(name, profile)
+        fn, _ = resolve(name)
 
         def run() -> float:
             t0 = time.perf_counter()
@@ -646,14 +469,8 @@ def run_sweep(
 
 
 def main() -> None:
-    profile = "oracle"
-    if "--profile" in sys.argv:
-        i = sys.argv.index("--profile")
-        profile = sys.argv[i + 1]
-        if profile not in ("oracle", "deployment"):
-            raise SystemExit(f"unknown numeric profile {profile!r}")
     aa_mode = "--aa" in sys.argv
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     canary = host_canary_ms()
     io_canary_pre = io_canary_ms(sf_dir=sf_dir)
@@ -664,14 +481,14 @@ def main() -> None:
     # load-bearing setting at 100 TB — bench what you'd deploy.
     spark = get_spark("bench")
 
-    timings, stamps = run_sweep(spark, sf_dir, profile)
+    timings, stamps = run_sweep(spark, sf_dir)
     aa_section = None
     if aa_mode:
         # Pass B: the identical sweep again, same session, same JVM.
         # A-vs-B deltas bound the within-session measurement noise on
         # THIS host right now — a cross-round residual smaller than
         # the A/A spread is weather by construction.
-        timings_b, stamps_b = run_sweep(spark, sf_dir, profile)
+        timings_b, stamps_b = run_sweep(spark, sf_dir)
         rows = {}
         for name, a_sec in timings.items():
             b_sec = timings_b[name]
@@ -711,7 +528,7 @@ def main() -> None:
             if timings_b[name] < timings[name]:
                 timings[name] = timings_b[name]
                 stamps[name] = dict(stamps_b[name], aa_pass="B")
-    duck = duckdb_twin_times(sf_dir, HEADLINE, profile=profile)
+    duck = duckdb_twin_times(sf_dir, HEADLINE)
     spark_paired = sum(t for n, t in timings.items() if duck.get(n) is not None)
     duck_total = sum(t for t in duck.values() if t is not None)
     post = host_canary_ms()
@@ -739,7 +556,7 @@ def main() -> None:
                 "ratio_vs_duckdb": (
                     round(spark_paired / duck_total, 4) if duck_total else None
                 ),
-                "numeric_profile": profile,
+                "numeric_profile": NUMERIC_PROFILE,
                 "sf": float(sf),
                 # effective parallelism, echoed so a low-core rerun is
                 # self-describing ($SPARK_GRAFT_CPUS is honored via
@@ -770,7 +587,7 @@ def main() -> None:
     stamps_doc = {
         "round": this_round,
         "protocol": PROTOCOL_VERSION,
-        "numeric_profile": profile,
+        "numeric_profile": NUMERIC_PROFILE,
         "sf": float(sf),
         "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
@@ -787,16 +604,11 @@ def main() -> None:
         # (r14, VERDICT r13 ask #2: the line must survive tail capture;
         # this table is redundancy for the driver's own delta pass and
         # belongs with the rest of the bulky protocol evidence)
-        "vs_prev": vs_prev_section(timings, canary, post, profile=profile),
+        "vs_prev": vs_prev_section(timings, canary, post),
     }
-    # non-default profiles get their own file: an oracle run and a
-    # deployment run in the same round must not clobber each other's
-    # stamps (the filename, not just the doc field, carries the
-    # profile so neither overwrite wins silently)
-    tag = "" if profile == "oracle" else f"_{profile}"
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_STAMPS_r{this_round:02d}{tag}.json",
+        f"BENCH_STAMPS_r{this_round:02d}.json",
     )
     with open(path, "w") as f:
         json.dump(stamps_doc, f, indent=1, sort_keys=True)

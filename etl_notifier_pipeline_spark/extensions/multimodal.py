@@ -419,12 +419,14 @@ def frame_schedule(
 
 
 def sample_frames(
-    media: DataFrame, every_ms: int = 1000, *, deterministic_fake: bool = False
+    media: DataFrame, every_ms: int = 1000, *, codec: str = "real"
 ) -> DataFrame:
     """Video frame sampling: one output row per sampled frame offset
     (``frame_schedule``, carrying the bytes alongside), decoder invoked
-    per sampled frame only, never per video."""
-    codec = "fake" if deterministic_fake else "real"
+    per sampled frame only, never per video. ``codec`` selects the
+    decode branch as in :func:`extract_features`."""
+    if codec not in ("fake", "real", "auto"):
+        raise ValueError(f"unknown codec mode {codec!r}")
     frames = frame_schedule(media, every_ms, carry_cols=("content",))
     out_schema = T.StructType(
         [

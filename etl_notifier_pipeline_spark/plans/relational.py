@@ -313,16 +313,16 @@ def q05_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     - customer below ``BROADCAST_DIM_LIMIT`` on disk (every driver
       fixture): nation/region/customer broadcast, the lineitem⨝orders
       orderkey join is the only shuffle — the low-SF optimum.
-    - customer above the limit (deployment regime — at 100 TB the dim
-      side outgrows any driver): zero driver-side builds. Customer
-      maps through the broadcast 25-row nation dim, joins orders via
-      executor-built ShuffledHashJoin on custkey, the fact joins the
-      (orderkey, nationkey) map via SHJ, and the 600 M-row aggregate
-      groups on the 4-byte nationkey with names joined after — the
-      same plan DEPLOY_BENCH_sf100 measures at 5.3 s (vs 17.8 s
-      broadcast), see operators/starjoin.py for the measured
-      alternatives. Both strategies produce the identical
-      decimal-exact oracle answer (pinned in tests)."""
+    - customer above the limit (at 100 TB the dim side outgrows any
+      driver): zero driver-side builds. Customer maps through the
+      broadcast 25-row nation dim, joins orders via executor-built
+      ShuffledHashJoin on custkey, the fact joins the (orderkey,
+      nationkey) map via SHJ, and the 600 M-row aggregate groups on
+      the 4-byte nationkey with names joined after. At sf100 on a
+      32-core host the broadcast star spent about 13 s of its 17.8 s
+      building the customer side serially on the driver (docs/SCALE.md).
+      Both strategies produce the identical decimal-exact oracle
+      answer (``test_registry_q05_adaptive_strategies_agree``)."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     c = load_table(spark, sf_dir, "customer")

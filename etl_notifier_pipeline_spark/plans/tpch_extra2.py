@@ -1991,6 +1991,10 @@ def q81_hll_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the part brands q84 keeps; its oracle SQL spells the same list
+Q84_BRANDS = ("Brand#3", "Brand#7")
+
+
 @register(
     "q84_brand_small_qty_revenue",
     category="join",
@@ -2024,18 +2028,10 @@ def q84_brand_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part average is unchanged by filtering first (every lineitem
     of a qualifying part survives the join). Decorrelated into a
     per-part WINDOW over the single brand-filtered scan; the filter
-    rides a broadcast of the ~8%-selective part projection.
-
-    This is the registered portable plan (best on an arbitrary
-    layout). The deployment twin — ``operators/starjoin.
-    q84_plan_bucketed`` — runs the classic aggregate -> join-back
-    SELF-join form over the ``partkey_star`` bucket layout, where
-    both legs inherit the storage partitioning and the whole plan is
-    exchange-free (the r10 ask-#7 third layout axis); value-pinned
-    equal to this entry in tests/test_bucketing.py."""
+    rides a broadcast of the ~8%-selective part projection. One scan
+    of lineitem and no self-join: the aggregate -> join-back form of
+    Q17 reads the fact twice."""
     from pyspark.sql.window import Window
-
-    from etl_notifier_pipeline_spark.operators.starjoin import Q84_BRANDS
 
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(

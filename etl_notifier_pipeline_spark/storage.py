@@ -398,7 +398,10 @@ class TableStore(_VersionedStore):
 
     def overwrite(self, table: str, df: DataFrame) -> int:
         """Write a complete new version, then atomically swap the
-        pointer. Readers either see the old version or the new one."""
+        pointer. Readers either see the old version or the new one.
+        A blind write: the CAS is on the version current when staging
+        starts, so a commit landing after the caller read the table is
+        replaced silently. Read-modify-writes use apply_keyed_mutation."""
         v = (self.current_version(table) or 0) + 1
         staging = self._stage(table, df)
         self._commit(table, v, [f"v={v}"], staging)
@@ -1368,6 +1371,8 @@ class BucketedTableStore(_VersionedStore):
         )
 
     def overwrite(self, table: str, df: DataFrame) -> int:
+        """Replace the table with ``df``: a blind write, as
+        ``TableStore.overwrite`` (read-modify-writes: apply_keyed_mutation)."""
         return self._write_version(table, df, carry=None, affected=None)
 
     def append(self, table: str, df: DataFrame) -> int:

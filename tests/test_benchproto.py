@@ -76,9 +76,9 @@ def test_artifact_vs_prev_decomposes_cpu_weather():
     # host got 2x slower (canary 50 -> 100 ms); spark wall doubled with
     # it (pure weather); the duck twin halved AGAINST the slower host
     # (real movement, e.g. page cache)
-    prev = _mk_doc("/x/sf100", "deployment", 50.0,
+    prev = _mk_doc("/x/sf100", "oracle", 50.0,
                    {"q1": 5.0}, {"q1": 4.0}, ratio=1.25)
-    this = _mk_doc("/x/sf100", "deployment", 100.0,
+    this = _mk_doc("/x/sf100", "oracle", 100.0,
                    {"q1": 10.0}, {"q1": 2.0}, ratio=5.0)
     got = artifact_vs_prev(prev, this)
     assert got["canary_scale"] == 0.5
@@ -92,11 +92,14 @@ def test_artifact_vs_prev_decomposes_cpu_weather():
 def test_artifact_vs_prev_refuses_mismatched_rungs():
     from tools.benchproto import artifact_vs_prev
 
-    prev = _mk_doc("/x/sf10", "deployment", 50.0, {"q1": 1.0}, {})
-    this = _mk_doc("/x/sf100", "deployment", 50.0, {"q1": 1.0}, {})
+    prev = _mk_doc("/x/sf10", "oracle", 50.0, {"q1": 1.0}, {})
+    this = _mk_doc("/x/sf100", "oracle", 50.0, {"q1": 1.0}, {})
     got = artifact_vs_prev(prev, this)
     assert set(got) == {"note"} and "not comparable" in got["note"]
     assert artifact_vs_prev(None, this) is None
+    # artifacts of the deleted deployment profile stay incomparable
+    dep = _mk_doc("/x/sf100", "deployment", 50.0, {"q1": 1.0}, {})
+    assert "not comparable" in artifact_vs_prev(dep, this)["note"]
 
 
 def test_artifact_vs_prev_handles_bare_float_and_missing_canary():
@@ -117,9 +120,9 @@ def test_artifact_vs_prev_flags_differing_query_sets():
     be disclosed next to the ratio pair."""
     from tools.benchproto import artifact_vs_prev
 
-    prev = _mk_doc("/x/sf10", "deployment", 50.0,
+    prev = _mk_doc("/x/sf10", "oracle", 50.0,
                    {"q1": 1.0}, {"q1": 1.0}, ratio=1.0)
-    this = _mk_doc("/x/sf10", "deployment", 50.0,
+    this = _mk_doc("/x/sf10", "oracle", 50.0,
                    {"q1": 1.0, "q2": 2.0}, {"q1": 1.0, "q2": 1.0},
                    ratio=1.5)
     got = artifact_vs_prev(prev, this)
@@ -127,7 +130,7 @@ def test_artifact_vs_prev_flags_differing_query_sets():
     assert "added ['q2']" in got["ratio_vs_duckdb"]["caveat"]
     # identical sets: no caveat
     same = artifact_vs_prev(prev, _mk_doc(
-        "/x/sf10", "deployment", 50.0, {"q1": 2.0}, {"q1": 1.0}, ratio=2.0))
+        "/x/sf10", "oracle", 50.0, {"q1": 2.0}, {"q1": 1.0}, ratio=2.0))
     assert "caveat" not in same["ratio_vs_duckdb"]
 
 
@@ -201,29 +204,68 @@ def test_configure_io_canary_dir_and_disable(tmp_path):
         benchproto.configure_io_canary(None, enabled=True)
 
 
+def _function_scope_imports(tree):
+    """(lineno, module, from-names or None) for every ``import`` /
+    ``from ... import`` inside a function body, at any depth."""
+    import ast
+
+    found = []
+
+    def visit(node, in_fn):
+        if in_fn and isinstance(node, ast.Import):
+            found.extend((node.lineno, a.name, None) for a in node.names)
+        elif in_fn and isinstance(node, ast.ImportFrom):
+            found.append(
+                (node.lineno, node.module, [a.name for a in node.names])
+            )
+        in_fn = in_fn or isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for child in ast.iter_child_nodes(node):
+            visit(child, in_fn)
+
+    visit(tree, False)
+    return found
+
+
 def test_tools_reference_only_names_they_import():
-    """Every GLOBAL name a tools/ harness references from inside a
-    function must resolve on the imported module — the r13 ADVICE high:
-    lakehouse_bench.main() called configure_io_canary without importing
-    it, so the harness crashed with NameError on EVERY invocation and
-    no test executed that path. symtable gives real scoping (closures,
-    comprehensions, nested defs), so: collect every identifier any
-    function scope resolves as GLOBAL, import the module (cheap — no
-    tool builds a session at import), and require each to be a module
-    attribute, a builtin, or a module dunder."""
+    """Every name ``bench.py`` or a tools/ harness reaches from inside a
+    function must resolve — the r13 ADVICE high: lakehouse_bench.main()
+    called configure_io_canary without importing it, so the harness
+    crashed with NameError on EVERY invocation and no test executed
+    that path. Two checks per file:
+
+    - every identifier a function scope resolves as GLOBAL (symtable
+      gives real scoping: closures, comprehensions, nested defs) is a
+      module attribute, a builtin, or a module dunder;
+    - every function-scope ``import m`` finds ``m``
+      (``importlib.util.find_spec``), and every ``from m import n``
+      finds ``m`` and ``n`` on it (or a submodule ``m.n``) — a lazy
+      import of a deleted module fails only when its line runs.
+
+    Importing the modules is cheap: none builds a session at import."""
+    import ast
     import builtins
     import glob
     import importlib
+    import importlib.util
     import os
     import symtable
 
-    tools_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(root, "bench.py")] + sorted(
+        glob.glob(os.path.join(root, "tools", "*.py"))
     )
     builtin_names = set(dir(builtins)) | {"__file__", "__name__", "__doc__"}
+
+    def spec_of(name):
+        try:
+            return importlib.util.find_spec(name)
+        except ModuleNotFoundError:  # a missing parent package
+            return None
+
     problems = []
-    for path in sorted(glob.glob(os.path.join(tools_dir, "*.py"))):
-        modname = "tools." + os.path.splitext(os.path.basename(path))[0]
+    for path in paths:
+        rel = os.path.relpath(path, root)
+        modname = os.path.splitext(rel)[0].replace(os.sep, ".")
         with open(path) as f:
             src = f.read()
         mod = importlib.import_module(modname)
@@ -242,10 +284,76 @@ def test_tools_reference_only_names_they_import():
             if name in builtin_names or hasattr(mod, name):
                 continue
             problems.append(
-                f"{os.path.basename(path)}: function-scope global "
+                f"{rel}: function-scope global "
                 f"{name!r} does not resolve on the imported module"
             )
+        for line, module, names in _function_scope_imports(ast.parse(src, path)):
+            if spec_of(module) is None:
+                problems.append(f"{rel}:{line}: no module {module!r}")
+                continue
+            for name in names or ():
+                if not (
+                    hasattr(importlib.import_module(module), name)
+                    or spec_of(f"{module}.{name}") is not None
+                ):
+                    problems.append(
+                        f"{rel}:{line}: {module!r} has no {name!r}"
+                    )
     assert not problems, "\n".join(problems)
+
+
+def test_prev_round_artifact_survives_truncated_tail(tmp_path):
+    """r12 review finding: a truncated BENCH_r{N}.json (parsed=null)
+    with no recoverable stamps file must still return the round NUMBER
+    — returning None resets main()'s round counter to 1 and clobbers
+    round-1 stamps. With a stamps file present, the per-query seconds,
+    canaries, and numeric_profile are reconstructed from it."""
+    import json
+
+    import bench
+
+    # truncated wrapper, no stamps: round number survives, doc is empty
+    (tmp_path / "BENCH_r07.json").write_text(
+        json.dumps({"n": 7, "rc": 0, "tail": "...", "parsed": None})
+    )
+    n, doc = bench._prev_round_artifact(str(tmp_path))
+    assert n == 7 and doc == {}
+
+    # stamps present: queries + canaries + profile reconstructed
+    (tmp_path / "BENCH_STAMPS_r07.json").write_text(json.dumps({
+        "query_stamps": {"q01": {"sec": 1.5}},
+        "host_canary_ms_pre": 70.0, "host_canary_ms_post": 72.0,
+        "numeric_profile": "oracle",
+    }))
+    n, doc = bench._prev_round_artifact(str(tmp_path))
+    assert n == 7
+    assert doc["queries"] == {"q01": 1.5}
+    assert doc["numeric_profile"] == "oracle"
+
+    # an untruncated parsed doc passes through unchanged
+    (tmp_path / "BENCH_r08.json").write_text(json.dumps(
+        {"n": 8, "parsed": {"queries": {"q01": 2.0}}}
+    ))
+    n, doc = bench._prev_round_artifact(str(tmp_path))
+    assert n == 8 and doc == {"queries": {"q01": 2.0}}
+
+
+def test_vs_prev_section_refuses_retired_profile(monkeypatch):
+    """bench.py runs only the oracle profile, but committed artifacts
+    of the deleted deployment profile (double sums, bucketed layouts)
+    remain: vs_prev refuses them, and still compares against an oracle
+    artifact or one that predates the profile field."""
+    import bench
+
+    prev = {"queries": {"q01": 2.0},
+            "host_canary_ms_pre": 50.0, "host_canary_ms_post": 50.0}
+    monkeypatch.setattr(bench, "_prev_round_artifact",
+                        lambda: (8, dict(prev, numeric_profile="deployment")))
+    got = bench.vs_prev_section({"q01": 1.0}, 50.0, 50.0)
+    assert got["queries"] == {} and "not comparable" in got["note"]
+    monkeypatch.setattr(bench, "_prev_round_artifact", lambda: (8, prev))
+    got = bench.vs_prev_section({"q01": 1.0}, 50.0, 50.0)
+    assert got["queries"]["q01"]["norm_delta_pct"] == -50.0
 
 
 def test_scale_bench_metrics_read_the_status_store(spark):

@@ -73,81 +73,6 @@ def test_bucketed_matches_plain_join(bucketed):
     assert sorted(r[0] for r in a.collect()) == sorted(r[0] for r in b.collect())
 
 
-class TestStarJoinNoDriverBuild:
-    """q05's scale-safe plan (operators/starjoin.py): with broadcast
-    forced off (the regime where the dim side outgrew any driver),
-    the bucketed storage-partitioned plan must run the fact-side join
-    with ZERO exchange and ZERO sort on the fact, build hash tables
-    only on executors (ShuffledHashJoin), and still produce exactly
-    the registry q05 answer."""
-
-    @pytest.fixture(scope="class")
-    def no_broadcast(self, spark):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_aqe = spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        yield spark
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-
-    def test_bucketed_plan_shape(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            bucketed_table_name,
-            q05_plan_bucketed,
-        )
-
-        spark = no_broadcast
-        df = q05_plan_bucketed(spark, SF_DIR, n_buckets=8)
-        df.collect()  # finalize AQE so the executed plan is real
-        # AQE's toString appends the pre-adaptive "Initial Plan" —
-        # assert on the final (executed) section only
-        plan = (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        li_table = bucketed_table_name(SF_DIR, "lineitem", n_buckets=8)
-        # fact side: scan feeds the join with no exchange and no sort
-        # in between — split the plan at the lineitem scan and check
-        # everything above it on the fact leg
-        assert li_table in plan
-        assert "SortMergeJoin" not in plan  # nothing sorts the fact
-        assert plan.count("ShuffledHashJoin") == 2  # custkey + orderkey
-        # the only broadcast is the 25-row nation/region map: every
-        # BroadcastExchange in the plan must sit on the nation leg
-        for chunk in plan.split("BroadcastExchange")[1:]:
-            scan = chunk.split("FileScan", 1)[1][:200] if "FileScan" in chunk else ""
-            assert "customer" not in scan and "orders" not in scan
-        # exchanges: one for the onk->fact alignment, one for the
-        # final 25-group aggregate; the custkey join is co-bucketed
-        # (zero exchange) and the fact never moves
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        assert n_exchanges <= 2, plan
-
-    def test_bucketed_matches_registry_q05(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            q05_plan_bucketed,
-            q05_plan_shuffle_hash,
-        )
-        from etl_notifier_pipeline_spark.plans import get
-
-        spark = no_broadcast
-        want = {
-            r["nation"]: (round(float(r["revenue"]), 2), r["n_lineitems"])
-            for r in get("q05_revenue_by_nation").fn(spark, SF_DIR).collect()
-        }
-        for fn in (q05_plan_bucketed, q05_plan_shuffle_hash):
-            got = {
-                r["nation"]: (round(float(r["revenue"]), 2), r["n_lineitems"])
-                for r in fn(spark, SF_DIR).collect()
-            }
-            assert got == want, fn.__name__
-
-
 def test_registry_q05_adaptive_strategies_agree(spark, monkeypatch):
     """The registry q05 picks its join strategy by dim size; both
     strategies must produce the identical decimal-exact oracle answer
@@ -165,375 +90,3 @@ def test_registry_q05_adaptive_strategies_agree(spark, monkeypatch):
     monkeypatch.setattr(R, "BROADCAST_DIM_LIMIT", -1)  # force scale path
     big = run()
     assert small == big and len(small) > 0
-
-
-class TestQ50OrderkeyStar:
-    """The second storage-partitioned star (r8 ask #5): q50's
-    fact-fact join (lineitem ⨝ orders, both table-sized — broadcast
-    can never work) reads both sides from co-bucketed covering
-    projections with zero exchange and zero sort between the scans;
-    part/supplier join as executor-built shuffle-hash; only the
-    25-row nation map broadcasts."""
-
-    @pytest.fixture()
-    def no_broadcast(self, spark):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        yield spark
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-
-    def _executed_plan(self, df):
-        df.collect()  # finalize AQE so the executed plan is real
-        return (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-
-    def test_q50_bucketed_plan_shape_auto(self, no_broadcast):
-        """Default path: the auto dims measure under the broadcast
-        budget at this sf, so the only ShuffledHashJoin left is the
-        zero-exchange colocated fact-fact join (built on the
-        semi-filtered FACT side) — no hash exchange anywhere but the
-        final aggregate."""
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            LAST_STAR_DECISIONS,
-            LAYOUTS,
-            bucketed_table_name,
-            q50_plan_bucketed,
-        )
-
-        spark = no_broadcast
-        df = q50_plan_bucketed(spark, SF_DIR, n_buckets=2)
-        plan = self._executed_plan(df)
-        li = bucketed_table_name(
-            SF_DIR, "lineitem", 2, LAYOUTS["orderkey_star"]["lineitem"]
-        )
-        o = bucketed_table_name(
-            SF_DIR, "orders", 2, LAYOUTS["orderkey_star"]["orders"]
-        )
-        assert li in plan and o in plan
-        assert "SortMergeJoin" not in plan
-        # the semi filter sits on the fact scan leg BEFORE the
-        # colocated join: qualifying rows only, partitioning intact
-        assert "LeftSemi" in plan
-        # colocated fact-fact join is the only executor hash build;
-        # it is built from the fact leg ("build": "fact") — BuildLeft
-        assert plan.count("ShuffledHashJoin") == 1
-        assert "ShuffledHashJoin [l_orderkey" in plan and "BuildLeft" in plan
-        # auto decisions recorded: both dims measured under budget
-        assert {
-            k: v["chose"] for k, v in LAST_STAR_DECISIONS.items()
-        } == {"p_partkey": "broadcast", "s_suppkey": "broadcast"}
-        # the fact table itself never broadcasts
-        for chunk in plan.split("BroadcastExchange")[1:]:
-            scan = chunk.split("FileScan", 1)[1][:200] if "FileScan" in chunk else ""
-            assert "lineitem" not in scan and "orders" not in scan
-        # only the final aggregate exchanges
-        assert plan.count("Exchange hashpartitioning") <= 1, plan
-
-    def test_q50_bucketed_plan_shape_degraded(self, no_broadcast):
-        """budget=0 forces the 100 TB regime: every auto dim degrades
-        to an executor-built shuffle-hash join — the shape the first
-        sf100 measurement pinned (19.3 s / 4.6 GB moved)."""
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            LAST_STAR_DECISIONS,
-            LAYOUTS,
-            bucketed_table_name,
-            q50_plan_bucketed,
-        )
-
-        spark = no_broadcast
-        df = q50_plan_bucketed(
-            spark, SF_DIR, n_buckets=2, broadcast_budget_bytes=0
-        )
-        plan = self._executed_plan(df)
-        li = bucketed_table_name(
-            SF_DIR, "lineitem", 2, LAYOUTS["orderkey_star"]["lineitem"]
-        )
-        assert "SortMergeJoin" not in plan
-        # colocated + part + supplier-map joins are executor builds
-        assert plan.count("ShuffledHashJoin") == 3
-        assert {
-            k: v["chose"] for k, v in LAST_STAR_DECISIONS.items()
-        } == {"p_partkey": "shuffle_hash", "s_suppkey": "shuffle_hash"}
-        # no dim PAYLOAD broadcasts (the keys-only semi set and the
-        # 25-row nation fold inside smap are the only broadcasts)
-        for chunk in plan.split("BroadcastExchange")[1:]:
-            scan = chunk.split("FileScan", 1)[1][:200] if "FileScan" in chunk else ""
-            assert "lineitem" not in scan and "orders" not in scan
-            assert "supplier" not in scan
-            if "part" in scan:
-                assert "p_retailprice" not in scan, scan
-        # exchanges: part join (2 sides) + supplier join (2 sides) +
-        # final agg — the lineitem⨝orders join contributes ZERO
-        assert plan.count("Exchange hashpartitioning") <= 5, plan
-        # and the bucketed fact scan never feeds through an exchange
-        fact_leg = plan.split(li)[0]
-        last_join = fact_leg.rfind("ShuffledHashJoin")
-        assert "Exchange" not in fact_leg[last_join:]
-
-    def test_q50_bucketed_matches_registry(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            q50_plan_bucketed,
-        )
-        from etl_notifier_pipeline_spark.plans import get
-
-        spark = no_broadcast
-        want = {
-            (r["nation"], r["o_year"]): (
-                round(float(r["profit"]), 4),
-                r["n_lineitems"],
-            )
-            for r in get("q50_product_profit").fn(spark, SF_DIR).collect()
-        }
-        got = {
-            (r["nation"], r["o_year"]): (
-                round(float(r["profit"]), 4),
-                r["n_lineitems"],
-            )
-            for r in q50_plan_bucketed(spark, SF_DIR, n_buckets=2).collect()
-        }
-        assert got == want and len(got) > 0
-
-
-def test_bucketed_table_name_value_equality_reuses_legacy_name():
-    """r9 advice #4: the legacy (pre-multi-layout) name suppression
-    compared specs by IDENTITY, so an equal-but-copied spec (caller
-    dict literal, deepcopy of LAYOUTS) silently produced a DIFFERENT
-    catalog name and rebuilt the whole bucketed layout. Equal specs
-    must map to the same name."""
-    import copy
-
-    from etl_notifier_pipeline_spark.operators.starjoin import (
-        LAYOUTS,
-        STAR_BUCKETS,
-        bucketed_table_name,
-    )
-
-    canonical = bucketed_table_name("/x/sf", "orders", 256)
-    copied = bucketed_table_name(
-        "/x/sf", "orders", 256, copy.deepcopy(STAR_BUCKETS["orders"])
-    )
-    literal = bucketed_table_name(
-        "/x/sf", "orders", 256, dict(STAR_BUCKETS["orders"])
-    )
-    assert canonical == copied == literal
-    # a genuinely different layout spec still gets its own name
-    other = bucketed_table_name(
-        "/x/sf", "orders", 256, LAYOUTS["orderkey_star"]["orders"]
-    )
-    assert other != canonical
-
-
-class TestQ56StarRegistry:
-    """r9 ask #7: a THIRD star shape (q56, TPC-H Q21) routed through
-    star_plan — over the SAME orderkey_star layout q50 uses, proving
-    the registry's layouts are shared capital across queries rather
-    than one-offs. This shape composes further than q50: the
-    per-(order,supplier) aggregate AND the per-order windows after the
-    colocated join are clustered by a superset of the bucket key, so
-    the whole chain scan -> join -> agg -> window runs with zero
-    exchange."""
-
-    @pytest.fixture(scope="class")
-    def no_broadcast(self, spark):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_aqe = spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        yield spark
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-
-    def test_q56_bucketed_plan_shape(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            LAYOUTS,
-            bucketed_table_name,
-            q56_plan_bucketed,
-        )
-
-        spark = no_broadcast
-        df = q56_plan_bucketed(spark, SF_DIR, n_buckets=2)
-        df.collect()  # finalize AQE so the executed plan is real
-        plan = (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        li = bucketed_table_name(
-            SF_DIR, "lineitem", 2, LAYOUTS["orderkey_star"]["lineitem"]
-        )
-        o = bucketed_table_name(
-            SF_DIR, "orders", 2, LAYOUTS["orderkey_star"]["orders"]
-        )
-        assert li in plan and o in plan
-        # the fact-fact join and the supplier join are executor builds
-        assert plan.count("ShuffledHashJoin") == 2
-        # zero-exchange chain: the colocated join, the (l_orderkey,
-        # l_suppkey) aggregate (clustered by a SUPERSET of the bucket
-        # key), and the per-order window all reuse the bucket
-        # partitioning — the only hash exchanges allowed are the two
-        # sides of the supplier join and the final 20-row s_name
-        # aggregate, all on post-filter row counts, never the fact
-        assert plan.count("Exchange hashpartitioning") <= 3, plan
-        # nothing between the bucketed fact scan and the first join
-        fact_leg = plan.split(li)[0]
-        last_join = fact_leg.rfind("ShuffledHashJoin")
-        assert "Exchange" not in fact_leg[last_join:]
-        # the orders-side status filter reached the bucketed scan's
-        # leg (transform hook), not a post-join filter
-        assert "o_orderstatus" in plan
-
-    def test_q56_bucketed_matches_registry(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            q56_plan_bucketed,
-        )
-        from etl_notifier_pipeline_spark.plans import get
-
-        spark = no_broadcast
-        want = [
-            (r["s_name"], r["numwait"])
-            for r in get("q56_late_sole_suppliers").fn(spark, SF_DIR).collect()
-        ]
-        got = [
-            (r["s_name"], r["numwait"])
-            for r in q56_plan_bucketed(spark, SF_DIR, n_buckets=2).collect()
-        ]
-        assert got == want and len(got) > 0
-
-
-class TestPartkeyStarRegistry:
-    """r10 ask #7: a THIRD layout AXIS (partkey_star — lineitem
-    bucketed by l_partkey, part co-bucketed at the SAME count). The
-    other two layouts prove fact-dim and fact-fact joins; this axis
-    proves the taxonomy generalizes to per-part ANALYTICS: q49's
-    aggregate+window chain needs no join at all yet runs
-    exchange-free, and q84's classic Q17 aggregate -> join-back
-    SELF-join is storage-partitioned on both legs."""
-
-    @pytest.fixture(scope="class")
-    def no_broadcast(self, spark):
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_aqe = spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        yield spark
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
-
-    def test_q84_bucketed_plan_shape(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            LAYOUTS,
-            bucketed_table_name,
-            q84_plan_bucketed,
-        )
-
-        spark = no_broadcast
-        df = q84_plan_bucketed(spark, SF_DIR, n_buckets=2)
-        df.collect()  # finalize AQE so the executed plan is real
-        plan = (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        li = bucketed_table_name(
-            SF_DIR, "lineitem", 2, LAYOUTS["partkey_star"]["lineitem"]
-        )
-        p = bucketed_table_name(
-            SF_DIR, "part", 2, LAYOUTS["partkey_star"]["part"]
-        )
-        assert li in plan and p in plan
-        # executor hash builds only, nothing sorts: the colocated part
-        # join appears on BOTH self-join legs (the avg leg re-derives
-        # the brand-filtered frame — two narrow colocated scans, still
-        # zero exchange) plus the avg join-back itself
-        assert plan.count("ShuffledHashJoin") == 3
-        assert "SortMergeJoin" not in plan
-        # the whole plan — colocated filter join, per-part aggregate,
-        # storage-partitioned self-join, final (brand, part) aggregate
-        # — rides the bucket partitioning: ZERO hash exchanges
-        assert "Exchange hashpartitioning" not in plan, plan
-        # the brand filter reached the bucketed part scan's leg
-        assert "p_brand" in plan
-
-    def test_q84_bucketed_matches_registry(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            q84_plan_bucketed,
-        )
-        from etl_notifier_pipeline_spark.plans import get
-
-        spark = no_broadcast
-        want = {
-            (r["p_brand"], r["l_partkey"]):
-                (r["n_small"], round(float(r["small_revenue"]), 2))
-            for r in get("q84_brand_small_qty_revenue")
-            .fn(spark, SF_DIR).collect()
-        }
-        got = {
-            (r["p_brand"], r["l_partkey"]):
-                (r["n_small"], round(float(r["small_revenue"]), 2))
-            for r in q84_plan_bucketed(spark, SF_DIR, n_buckets=2).collect()
-        }
-        assert got == want and len(got) > 0
-
-    def test_q49_bucketed_plan_shape(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            LAYOUTS,
-            bucketed_table_name,
-            q49_plan_bucketed,
-        )
-
-        spark = no_broadcast
-        df = q49_plan_bucketed(spark, SF_DIR, n_buckets=2)
-        df.collect()
-        plan = (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        li = bucketed_table_name(
-            SF_DIR, "lineitem", 2, LAYOUTS["partkey_star"]["lineitem"]
-        )
-        assert li in plan
-        # no join touches the fact: the (l_partkey, l_suppkey)
-        # aggregate (superset of the bucket key) and the min-per-part
-        # window both reuse the bucket partitioning — the only hash
-        # exchanges allowed are the two sides of the post-aggregate
-        # supplier join (on the ~|part x supp| frame, never the fact)
-        fact_leg = plan.split(li)[0]
-        agg_above_scan = fact_leg[fact_leg.rfind("HashAggregate"):]
-        assert "Exchange" not in agg_above_scan
-        assert plan.count("Exchange hashpartitioning") <= 2, plan
-        assert plan.count("ShuffledHashJoin") == 1  # supplier
-        assert "SortMergeJoin" not in plan
-
-    def test_q49_bucketed_matches_registry(self, no_broadcast):
-        from etl_notifier_pipeline_spark.operators.starjoin import (
-            q49_plan_bucketed,
-        )
-        from etl_notifier_pipeline_spark.plans import get
-
-        spark = no_broadcast
-        want = sorted(
-            (r["l_partkey"], r["s_name"], r["n_name"],
-             round(float(r["supp_cost"]), 2))
-            for r in get("q49_min_cost_supplier").fn(spark, SF_DIR).collect()
-        )
-        got = sorted(
-            (r["l_partkey"], r["s_name"], r["n_name"],
-             round(float(r["supp_cost"]), 2))
-            for r in q49_plan_bucketed(spark, SF_DIR, n_buckets=2).collect()
-        )
-        assert got == want and len(got) > 0

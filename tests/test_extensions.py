@@ -627,9 +627,16 @@ class TestMultimodal:
         ) <= 1
 
     def test_frame_sampling_explodes_by_duration(self, spark, media):
-        frames = M.sample_frames(media, every_ms=1000, deterministic_fake=True).collect()
+        frames = M.sample_frames(media, every_ms=1000, codec="fake").collect()
         # 3500ms video sampled at 1000ms -> frames at 0,1000,2000,3000
         assert sorted(r["frame_ms"] for r in frames) == [0, 1000, 2000, 3000]
+        # "auto" is reachable: no video codec here, so it falls back to fake
+        auto = M.sample_frames(media, every_ms=1000, codec="auto").collect()
+        assert sorted(r["features"] for r in auto) == sorted(
+            r["features"] for r in frames
+        )
+        with pytest.raises(ValueError, match="unknown codec mode"):
+            M.sample_frames(media, codec="bogus")
 
     def test_partition_sizing(self, spark, media):
         out = M.size_partitions(media, target_partition_mb=1)

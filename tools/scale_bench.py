@@ -59,11 +59,6 @@ def main() -> None:
     with_rows = "--rows" in args
     if with_rows:
         args.remove("--rows")
-    profile = "oracle"
-    if "--profile" in args:
-        i = args.index("--profile")
-        profile = args[i + 1]
-        del args[i : i + 2]
     sf_dir = args[0] if args and "/" in args[0] else "/root/repo/.scale/sf10"
     # stamp IO-canary brackets must probe the directory this run
     # actually measures (r13 review fix)
@@ -79,7 +74,7 @@ def main() -> None:
     from etl_notifier_pipeline_spark.extensions import dedup as _dedup
 
     for name in names:
-        fn, _ = bench.resolve(name, profile)
+        fn, _ = bench.resolve(name)
         # Warm once (bench.py protocol): with --runs 1 the single
         # measured run otherwise pays first-touch parquet footer reads
         # and JIT, which at sfN swamped real differences (q01 cold
@@ -124,8 +119,7 @@ def main() -> None:
         {}
         if no_duck
         else bench.duckdb_twin_times(
-            sf_dir, names, n_runs=n_runs, warm=not no_warm, profile=profile,
-            stamped=True,
+            sf_dir, names, n_runs=n_runs, warm=not no_warm, stamped=True,
         )
     )
     spark_total = sum(v["sec"] for v in out.values())
@@ -133,8 +127,6 @@ def main() -> None:
         v["sec"] for n, v in out.items() if duck.get(n) is not None
     )
     duck_total = sum(t["sec"] for t in duck.values() if t is not None)
-    from etl_notifier_pipeline_spark.operators import starjoin
-
     doc = {
         "metric": "scale_headline_total",
         "value": round(spark_total, 3),
@@ -144,19 +136,11 @@ def main() -> None:
             "canary": PROTOCOL_VERSION,
             "warm": not no_warm,
             "symmetric": True,  # DuckDB twins use the same warm+runs
-            "numeric_profile": profile,
+            "numeric_profile": bench.NUMERIC_PROFILE,
             # the single local JVM's heap: per-task execution memory
             # is heap/32 slots, the binding constraint for map-side
             # partial-aggregation spill on amplifying plans (r11)
             "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-            # one-time ingest-layout builds (bucketed star tables)
-            # paid during this process, reported so the steady-state
-            # per-query numbers never hide them
-            **(
-                {"ingest_build_secs": dict(starjoin.LAST_BUILD_SECS)}
-                if starjoin.LAST_BUILD_SECS
-                else {}
-            ),
         },
         "sf_dir": sf_dir,
         "queries": out,
