@@ -140,12 +140,12 @@ def test_io_canary_fixed_budget_and_graceful_degradation():
     None — never raise — when the fixture dir is absent (canaries must
     not fail a bench run), and (c) ride along in stamped_runs brackets
     when available."""
-    import bench
+    from tools.benchproto import io_canary_ms
 
-    ms = bench.io_canary_ms(reps=1, budget_bytes=1 << 22,
-                            sf_dir="/root/testdata/sf0.001")
+    ms = io_canary_ms(reps=1, budget_bytes=1 << 22,
+                      sf_dir="/root/testdata/sf0.001")
     assert ms is not None and ms > 0
-    assert bench.io_canary_ms(sf_dir="/nonexistent/dir") is None
+    assert io_canary_ms(sf_dir="/nonexistent/dir") is None
     stamp = stamped_runs(lambda: 0.1, n_runs=1)
     assert "io_canary_ms" in stamp
     assert len(stamp["io_canary_ms"]) == 1
@@ -174,10 +174,10 @@ def test_io_canary_per_file_errors_degrade_to_none(tmp_path):
     canary to None, not raise out of a stamp boundary mid-artifact
     (r13 review: the empty-dir guard alone did not honor the
     'canaries never fail a bench run' contract)."""
-    import bench
+    from tools.benchproto import io_canary_ms
 
     (tmp_path / "ghost.parquet").symlink_to(tmp_path / "gone")
-    assert bench.io_canary_ms(sf_dir=str(tmp_path)) is None
+    assert io_canary_ms(sf_dir=str(tmp_path)) is None
 
 
 def test_configure_io_canary_dir_and_disable(tmp_path):
@@ -239,7 +239,11 @@ def test_tools_reference_only_names_they_import():
     - every function-scope ``import m`` finds ``m``
       (``importlib.util.find_spec``), and every ``from m import n``
       finds ``m`` and ``n`` on it (or a submodule ``m.n``) — a lazy
-      import of a deleted module fails only when its line runs.
+      import of a deleted module fails only when its line runs;
+    - every whole string literal ending in ``.py`` names a file under
+      the repo root or ``tools/`` — a subprocess path such as
+      ``os.path.join(TOOLS_DIR, "x.py")`` is no import, and a deleted
+      script fails only when the subprocess starts.
 
     Importing the modules is cheap: none builds a session at import."""
     import ast
@@ -299,65 +303,23 @@ def test_tools_reference_only_names_they_import():
                     problems.append(
                         f"{rel}:{line}: {module!r} has no {name!r}"
                     )
+        for node in ast.walk(ast.parse(src, path)):
+            lit = getattr(node, "value", None)
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(lit, str)
+                and lit.endswith(".py")
+                and not any(
+                    os.path.isfile(os.path.join(root, d, lit))
+                    for d in ("", "tools")
+                )
+            ):
+                problems.append(f"{rel}:{node.lineno}: no file {lit!r}")
     assert not problems, "\n".join(problems)
 
 
-def test_prev_round_artifact_survives_truncated_tail(tmp_path):
-    """r12 review finding: a truncated BENCH_r{N}.json (parsed=null)
-    with no recoverable stamps file must still return the round NUMBER
-    — returning None resets main()'s round counter to 1 and clobbers
-    round-1 stamps. With a stamps file present, the per-query seconds,
-    canaries, and numeric_profile are reconstructed from it."""
-    import json
-
-    import bench
-
-    # truncated wrapper, no stamps: round number survives, doc is empty
-    (tmp_path / "BENCH_r07.json").write_text(
-        json.dumps({"n": 7, "rc": 0, "tail": "...", "parsed": None})
-    )
-    n, doc = bench._prev_round_artifact(str(tmp_path))
-    assert n == 7 and doc == {}
-
-    # stamps present: queries + canaries + profile reconstructed
-    (tmp_path / "BENCH_STAMPS_r07.json").write_text(json.dumps({
-        "query_stamps": {"q01": {"sec": 1.5}},
-        "host_canary_ms_pre": 70.0, "host_canary_ms_post": 72.0,
-        "numeric_profile": "oracle",
-    }))
-    n, doc = bench._prev_round_artifact(str(tmp_path))
-    assert n == 7
-    assert doc["queries"] == {"q01": 1.5}
-    assert doc["numeric_profile"] == "oracle"
-
-    # an untruncated parsed doc passes through unchanged
-    (tmp_path / "BENCH_r08.json").write_text(json.dumps(
-        {"n": 8, "parsed": {"queries": {"q01": 2.0}}}
-    ))
-    n, doc = bench._prev_round_artifact(str(tmp_path))
-    assert n == 8 and doc == {"queries": {"q01": 2.0}}
-
-
-def test_vs_prev_section_refuses_retired_profile(monkeypatch):
-    """bench.py runs only the oracle profile, but committed artifacts
-    of the deleted deployment profile (double sums, bucketed layouts)
-    remain: vs_prev refuses them, and still compares against an oracle
-    artifact or one that predates the profile field."""
-    import bench
-
-    prev = {"queries": {"q01": 2.0},
-            "host_canary_ms_pre": 50.0, "host_canary_ms_post": 50.0}
-    monkeypatch.setattr(bench, "_prev_round_artifact",
-                        lambda: (8, dict(prev, numeric_profile="deployment")))
-    got = bench.vs_prev_section({"q01": 1.0}, 50.0, 50.0)
-    assert got["queries"] == {} and "not comparable" in got["note"]
-    monkeypatch.setattr(bench, "_prev_round_artifact", lambda: (8, prev))
-    got = bench.vs_prev_section({"q01": 1.0}, 50.0, 50.0)
-    assert got["queries"]["q01"]["norm_delta_pct"] == -50.0
-
-
-def test_scale_bench_metrics_read_the_status_store(spark):
-    """tools/scale_bench.py records ``metrics.measured``, which reads
+def test_bench_metrics_read_the_status_store(spark):
+    """bench.py records ``metrics.measured``, which reads
     stage metrics and GC time from the JVM status store that the engine
     session keeps with its UI disabled: a run's stages show up with
     their counters, and the GC read returns a number, not a REST error."""
@@ -374,7 +336,7 @@ def test_scale_bench_metrics_read_the_status_store(spark):
     assert isinstance(m["jvmGcTimeMs"], int) and m["jvmGcTimeMs"] >= 0
 
 
-def test_scale_bench_counts_codegen_compiles(spark):
+def test_bench_counts_codegen_compiles(spark):
     """``codegenCompiles`` counts the JVM's Janino compilations: a plan
     no earlier run generated (its literal is in the generated source)
     compiles at least one class."""
@@ -385,3 +347,83 @@ def test_scale_bench_counts_codegen_compiles(spark):
     with measured(spark, "codegen-compiles") as m:
         spark.range(10).select((F.col("id") + F.lit(918_273_645)).alias("v")).collect()
     assert m["codegenCompiles"] > 0
+
+
+def test_stamps_paths_number_from_the_newest_stamps(tmp_path):
+    """bench.py writes the round after the newest ``BENCH_STAMPS_r*.json``
+    and compares against that one, so a run never overwrites a
+    committed round. The driver's ``BENCH_r*.json`` records play no
+    part: the newest of them may lag the stamps by rounds."""
+    import bench
+
+    assert bench.stamps_paths(str(tmp_path)) == (
+        str(tmp_path / "BENCH_STAMPS_r01.json"), None,
+    )
+    for name in ("BENCH_STAMPS_r07.json", "BENCH_STAMPS_r03.json",
+                 "BENCH_r14.json", "BENCH_STAMPS_r07.json.bak"):
+        (tmp_path / name).write_text("{}")
+    assert bench.stamps_paths(str(tmp_path)) == (
+        str(tmp_path / "BENCH_STAMPS_r08.json"),
+        str(tmp_path / "BENCH_STAMPS_r07.json"),
+    )
+
+
+def test_bench_doc_vs_prev_same_schema_and_old_stamps():
+    """``vs_prev`` of the one bench artifact (bench.main's protocol
+    block, CPU and IO canaries, ``cpus``/``master``): against a prev of
+    the same schema every shared query gets a canary-normalized delta;
+    the committed stamps of the two-harness era
+    (``BENCH_STAMPS_r15.json``: bare protocol string, no ``sf_dir``) are
+    refused with a note."""
+    import json
+
+    import bench
+    from tools.benchproto import artifact_vs_prev, protocol_header
+
+    def doc(canary, spark):
+        return dict(
+            _mk_doc("/x/sf0.1", None, canary, spark,
+                    {k: v / 10 for k, v in spark.items()}),
+            protocol=protocol_header(
+                1, warm=False, symmetric=True,
+                numeric_profile=bench.NUMERIC_PROFILE, driver_mem="8g",
+            ),
+            cpus=4, master="local[4]",
+            io_canary_ms_pre=50.0, io_canary_ms_post=50.0,
+        )
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    this = doc(100.0, {"q01": 2.0, "q05": 3.0})
+    got = artifact_vs_prev(doc(50.0, {"q01": 1.0, "q05": 2.0}), this)
+    assert got["spark"]["q01"]["norm_delta_pct"] == 0.0
+    assert got["spark"]["q05"]["norm_delta_pct"] == -25.0
+    assert got["duckdb"]["q01"]["norm_delta_pct"] == 0.0
+    with open(os.path.join(root, "BENCH_STAMPS_r15.json")) as f:
+        old = json.load(f)
+    got = artifact_vs_prev(old, this)
+    assert set(got) == {"note"} and "not comparable" in got["note"]
+
+
+def test_growth_cell_runs_on_a_small_fixture(tmp_path):
+    """scale_growth's cell command, in a fresh process, on a fixture so
+    small that the single cold run ends within a second: the harness
+    sets a 1 s executor heartbeat, so ``metrics.peak_heap`` has a
+    sample (at Spark's default 10 s it raised ``MeasurementError``)."""
+    import json
+    import subprocess
+
+    from tools.scale_growth import cell_command
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "cell.json"
+    cmd = cell_command(
+        os.path.join(root, "perfbench", "fixture", "sf0.01"),
+        "q01_pricing_summary", str(out),
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="2g")
+    proc = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    with open(out) as f:
+        q = json.load(f)["queries"]["q01_pricing_summary"]
+    assert q["rows"] > 0
+    assert q["peakJvmHeapBytes"] > 0

@@ -7,7 +7,7 @@ like q01 3.0 s -> 4.1 s across artifacts on an unchanged plan was
 unattributable — shared-VM CPU speed here measurably varies 3.5x
 within a day (docs/SCALE.md). The fix is mechanical and shared: every
 MEASUREMENT (not artifact) is bracketed by its own host-speed canary
-(bench.host_canary_ms — a fixed numpy sort+cumsum kernel, ~50 ms), and
+(host_canary_ms — a fixed numpy sort+cumsum kernel, ~50 ms), and
 every stamped dict carries run count, per-run seconds, per-run canary
 brackets, and dispersion. A reviewer separates noise from regression
 by comparing sec x (canary_ref / canary_this) per run, and the
@@ -29,10 +29,102 @@ from __future__ import annotations
 import os
 import statistics
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PROTOCOL_VERSION = "canary-per-measurement-v2-io"
+
+
+def host_canary_ms(reps: int = 3) -> float:
+    """Pinned single-thread compute kernel bracketing every measurement.
+    This is a shared VM whose effective CPU speed was measured varying
+    3.5x within one day (docs/SCALE.md) — without a canary, a
+    round-over-round wall-clock delta on identical plans is
+    unadjudicable noise (r6: q01 +42% with zero hot-path changes).
+    Best-of-``reps`` of a fixed numpy sort+cumsum over 4M floats
+    (deterministic input, BLAS-free so thread-count config can't skew
+    it). Compare artifacts as sec * (canary_ref / canary_this)."""
+    import numpy as np
+
+    x0 = np.random.default_rng(42).random(1 << 22)
+    best = float("inf")
+    for _ in range(reps):
+        x = x0.copy()
+        t0 = time.perf_counter()
+        np.sort(x)
+        np.cumsum(x)
+        best = min(best, time.perf_counter() - t0)
+    return round(best * 1000, 2)
+
+
+IO_CANARY_BUDGET = 1 << 28  # 256 MB — fixed, so ms compares across rounds
+
+
+def io_canary_ms(
+    reps: int = 3,
+    budget_bytes: int = IO_CANARY_BUDGET,
+    sf_dir: str | None = None,
+) -> float | None:
+    """IO/page-cache canary (r12 verdict ask #1): the CPU canary is a
+    cache-resident single-thread kernel, blind to the storage/VFS axis
+    — r12's +14.8% CPU-normalized sf0.1 residual was unattributable
+    because nothing measured whether the bench INPUTS were page-cache
+    warm and how fast the buffered-read path ran that session. This
+    probe sequentially re-reads the parquet fixtures under ``sf_dir``
+    (default ``catalog.DEFAULT_SF_DIR``), cycling through them until a
+    FIXED ``budget_bytes``, so the byte count — and therefore the ms —
+    is comparable across rounds at the same sf_dir, through unbuffered
+    1 MB ``read()`` calls. Warm page cache lands ~30-60 ms; a cold
+    cache or IO-contended host shows up as a multiple. Compare next to
+    ``host_canary_ms``: a wall regression with a flat CPU canary but an
+    elevated IO canary is host IO weather, not an engine change.
+    Returns None when the fixture dir has no readable files (canaries
+    must never fail a bench run)."""
+    import glob
+
+    if sf_dir is None:
+        from etl_notifier_pipeline_spark.catalog import DEFAULT_SF_DIR
+
+        sf_dir = DEFAULT_SF_DIR
+    # The whole probe is best-effort: a file deleted between glob and
+    # open, a permission hole, or a stray directory named *.parquet
+    # must degrade to None, not abort a multi-hour artifact run at a
+    # stamp boundary (the "never fail a bench run" contract above —
+    # the empty-dir guard alone did not honor it, r13 review fix).
+    try:
+        paths: list[str] = []
+        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+            if os.path.isdir(p):
+                paths.extend(sorted(glob.glob(os.path.join(p, "*.parquet"))))
+            else:
+                paths.append(p)
+        paths = [
+            p
+            for p in paths
+            if os.path.isfile(p) and os.path.getsize(p) > 0
+        ]
+        if not paths:
+            return None
+        chunk = 1 << 20
+        best = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            remaining = budget_bytes
+            i = 0
+            while remaining > 0:
+                with open(paths[i % len(paths)], "rb", buffering=0) as f:
+                    while remaining > 0:
+                        b = f.read(min(chunk, remaining))
+                        if not b:
+                            break
+                        remaining -= len(b)
+                i += 1
+            best = min(best, time.perf_counter() - t0)
+        return round(best * 1000, 2)
+    except OSError:
+        return None
+
 
 # Where stamp IO-canary brackets read from, set ONCE per harness via
 # configure_io_canary(). The r13 review caught two defects in the v2
@@ -45,7 +137,7 @@ PROTOCOL_VERSION = "canary-per-measurement-v2-io"
 # canary exists to observe. Harness mains now point the probe at
 # their own sf_dir, or disable it where the stamps are denser than
 # the probe is informative.
-_IO_CANARY_DIR: str | None = None  # None = bench.io_canary_ms default
+_IO_CANARY_DIR: str | None = None  # None = io_canary_ms's default
 _IO_CANARY_ENABLED = True
 
 
@@ -61,9 +153,7 @@ def configure_io_canary(sf_dir: str | None, *, enabled: bool = True) -> None:
 def _io_canary() -> float | None:
     if not _IO_CANARY_ENABLED:
         return None
-    import bench
-
-    return bench.io_canary_ms(reps=1, sf_dir=_IO_CANARY_DIR)
+    return io_canary_ms(reps=1, sf_dir=_IO_CANARY_DIR)
 
 
 def stamped_runs(run_once, n_runs: int = 3) -> dict:
@@ -77,7 +167,7 @@ def stamped_runs(run_once, n_runs: int = 3) -> dict:
                          share the boundary canary — n_runs+1 kernels
                          total, so the bracket cost stays ~50 ms/run)
     - ``io_canary_ms``   [pre, post] IO/page-cache canary per run
-                         (bench.io_canary_ms, 1-rep brackets): the
+                         (io_canary_ms, 1-rep brackets): the
                          axis the CPU kernel cannot see — r12's
                          unattributable +14.8% CPU-normalized sf0.1
                          residual. Omitted when the probe has no
@@ -89,18 +179,16 @@ def stamped_runs(run_once, n_runs: int = 3) -> dict:
                          literal 0.0 would read as a convergence CLAIM
                          (r9 verdict, what's-wrong #2)
     """
-    import bench
-
     runs: list[float] = []
     canaries: list[list[float]] = []
     io_canaries: list[list[float | None]] = []
     extras: list[dict | None] = []
-    c_prev = bench.host_canary_ms()
+    c_prev = host_canary_ms()
     io_prev = _io_canary()
     for _ in range(n_runs):
         r = run_once()
         sec, extra = r if isinstance(r, tuple) else (r, None)
-        c_next = bench.host_canary_ms()
+        c_next = host_canary_ms()
         io_next = _io_canary()
         runs.append(round(float(sec), 3))
         canaries.append([c_prev, c_next])
@@ -170,9 +258,17 @@ def _canary_avg(doc: dict) -> float | None:
     return sum(vals) / len(vals) if vals else None
 
 
+def _profile(doc: dict) -> str | None:
+    """An artifact's numeric profile. Stamps of the two-harness era
+    (``BENCH_STAMPS_r15.json`` and before) carry the protocol version
+    as a bare string and no profile there."""
+    protocol = doc.get("protocol")
+    return protocol.get("numeric_profile") if isinstance(protocol, dict) else None
+
+
 def artifact_vs_prev(prev: dict | None, this_doc: dict) -> dict | None:
-    """Canary-normalized comparison of a scale artifact against the
-    version it is about to overwrite (r11 verdict gap #1: the deploy
+    """Canary-normalized comparison of a bench artifact against the
+    previous one (r11 verdict gap #1: the deploy
     rung's DuckDB twin moved 2.5x on host weather alone and the raw
     stamps couldn't decompose the ratio swing mechanically).
 
@@ -189,8 +285,8 @@ def artifact_vs_prev(prev: dict | None, this_doc: dict) -> dict | None:
     if prev is None:
         return None
     this_sf = this_doc.get("sf_dir")
-    this_profile = (this_doc.get("protocol") or {}).get("numeric_profile")
-    prev_profile = (prev.get("protocol") or {}).get("numeric_profile")
+    this_profile = _profile(this_doc)
+    prev_profile = _profile(prev)
     if prev.get("sf_dir") != this_sf or prev_profile != this_profile:
         return {
             "note": (

@@ -28,7 +28,7 @@ Per-commit measurements ride tools/benchproto.stamped_runs (n_runs=1
 one-shots still carry their own canary bracket, so host drift between
 commits stays attributable); steady-state reads use n_runs=3 with
 dispersion. Stage metrics come from ``metrics.measured``, as in
-tools/scale_bench.py. Usage:
+bench.py. Usage:
 
     python tools/lakehouse_bench.py [--rows 60000000] [--commits 10] \
         [--json LAKEHOUSE_BENCH.json]

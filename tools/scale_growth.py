@@ -8,14 +8,14 @@ the banded designs must grow them ~R x, because tools/scale_up.py salts
 near-dup structure per-replica).
 
 Isolation protocol (r6): every (fixture, query) cell runs in its OWN
-subprocess (tools/scale_bench.py --runs 1 --no-warm --rows). The r5
-ladder ran all 30 cells in one long-lived JVM and the accumulated
-session state (never-released localCheckpoint blocks, shuffle-dir
+subprocess (``cell_command``: bench.py --runs 1 --no-warm --no-duck
+--rows). The r5 ladder ran all 30 cells in one long-lived JVM and the
+accumulated session state (never-released localCheckpoint blocks, shuffle-dir
 writeback from prior cells, heap fragmentation) inflated the last
 rung's walls up to 5x: d06 recorded 312 s at sf100 where an isolated
 run at the same commit measures ~62 s with identical output rows and
 3 label-prop rounds. One process per cell makes each number a
-reproducible cold-start measurement — and carries scale_bench's stage
+reproducible cold-start measurement — and carries bench.py's stage
 metrics (shuffle/spill bytes, GC ms, peak heap, cluster rounds), so a
 future superlinear step arrives with its diagnosis attached.
 
@@ -38,7 +38,7 @@ import subprocess
 import sys
 import tempfile
 
-TOOLS_DIR = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")
 
 GROWTH_QUERIES = [
     "d04_minhash_lsh_pairs",   # banded MinHash candidate pairs
@@ -50,18 +50,21 @@ GROWTH_QUERIES = [
 ]
 
 
+def cell_command(sf_dir: str, query: str, json_out: str) -> list[str]:
+    """The bench.py command line of one (fixture, query) cell."""
+    return [
+        sys.executable, BENCH, sf_dir, "--runs", "1", "--no-warm",
+        "--no-duck", "--rows", "--json", json_out, query,
+    ]
+
+
 def run_cell(sf_dir: str, query: str) -> dict:
     """One (fixture, query) measurement in a fresh subprocess JVM."""
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     with tempfile.NamedTemporaryFile(suffix=".json") as tmp:
         proc = subprocess.run(
-            [
-                sys.executable,
-                os.path.join(TOOLS_DIR, "scale_bench.py"),
-                sf_dir, "--runs", "1", "--no-warm", "--no-duck",
-                "--rows", "--json", tmp.name, query,
-            ],
+            cell_command(sf_dir, query, tmp.name),
             env=env,
             stdout=subprocess.PIPE,
             stderr=subprocess.DEVNULL,
