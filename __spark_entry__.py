@@ -43,32 +43,12 @@ def oracle_sql() -> dict[str, str]:
 
 
 def _ensure_session_conf(spark: SparkSession) -> None:
-    """Apply the engine's session-level determinism/read settings to a
-    driver-provided SparkSession (it may not have been built by
-    ``etl_notifier_pipeline_spark.session.get_spark``)."""
-    import os
+    """Apply the engine's runtime SQL confs (``session.runtime_conf``,
+    the ones ``get_spark`` builds with) to a driver-provided session."""
+    from etl_notifier_pipeline_spark.session import runtime_conf
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # isAdjustedToUTC=false parquet otherwise reads TIMESTAMP_NTZ,
-        # which strict chrono builtins (unix_micros) reject.
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        # AQE must be allowed to coalesce inside cached plans, or every
-        # persisted frame that caps a shuffle materializes at the full
-        # initial partition count (see session.py).
-        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
-        # The fixture scales are small; a 200-partition default shuffle
-        # is pure scheduling overhead. Sized to cores like session.py.
-        ("spark.sql.shuffle.partitions", cpus),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+    for k, v in runtime_conf().items():
+        spark.conf.set(k, v)
 
 
 def _with_conf(fn):

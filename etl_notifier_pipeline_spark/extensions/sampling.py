@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_notifier_pipeline_spark.extensions.text import token_hash
+from etl_notifier_pipeline_spark.operators.prefix import prefix_sum
 
 
 def split_bucket(key: Column, n_buckets: int = 100) -> Column:
@@ -163,22 +164,14 @@ def block_pack_spans(
     and nothing is truncated — a document contributes spans to every
     block it overlaps, so token conservation is exact.
 
-    Scale shape: the global prefix sum is computed WITHOUT a global
-    single-partition window (the classic scalability trap). Keys are
-    grouped into contiguous ranges (``group = key // group_size``);
-    per-group token totals aggregate map-side into a groups frame
-    |keys|/group_size rows long, the cross-group running offset is a
-    window over THAT tiny frame, and it broadcasts back; the per-row
-    running sum then runs as a parallel window PARTITIONED by group.
-    (At 100 B docs with group_size 64 Ki the groups frame is ~1.5 M
-    narrow rows; the same two-phase step nests recursively if that
-    ever became large.) Span explosion is a JVM-side sequence/slice
-    generator — no Python, and the only shuffles are the per-group
-    aggregate and the per-group window sort. Zero-token documents
-    contribute no span, matching concatenation semantics.
+    Scale shape: the global prefix sum is ``operators.prefix.prefix_sum``
+    over contiguous key ranges (``group = key // group_size``), so no
+    window sorts the corpus in one partition; the groups frame is
+    |keys|/group_size rows long (~1.5 M narrow rows at 100 B docs with
+    group_size 64 Ki). Span explosion is a JVM-side sequence/slice
+    generator — no Python. Zero-token documents contribute no span,
+    matching concatenation semantics.
     """
-    from pyspark.sql import Window as W
-
     if block <= 0 or group_size <= 0:
         raise ValueError("block and group_size must be positive")
     key, n = F.col(key_col), F.col(n_tokens_col).cast("long")
@@ -186,32 +179,9 @@ def block_pack_spans(
         F.col("__n") > 0
     )
     grouped = base.withColumn("__g", F.expr(f"__key div {group_size}"))
-    totals = grouped.groupBy("__g").agg(F.sum("__n").alias("__gt"))
-    offsets = totals.select(
-        "__g",
-        (
-            F.sum("__gt").over(
-                W.orderBy("__g").rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            - F.col("__gt")
-        ).alias("__goff"),
-    )
-    started = (
-        grouped.join(F.broadcast(offsets), "__g")
-        .withColumn(
-            "__cum",
-            F.sum("__n").over(
-                W.partitionBy("__g")
-                .orderBy("__key")
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
-        .select(
-            "__key",
-            "__n",
-            (F.col("__goff") + F.col("__cum") - F.col("__n")).alias("__start"),
-        )
-    )
+    started = prefix_sum(
+        grouped, "__g", F.col("__n"), ["__key"], alias="__cum"
+    ).select("__key", "__n", (F.col("__cum") - F.col("__n")).alias("__start"))
     # Non-negative starts: integer-division truncation == floor on both
     # engines (DuckDB `//` truncates toward zero; values here are >= 0).
     # `div` keeps the arithmetic in exact int64 — a double division
@@ -244,28 +214,16 @@ def ordered_prefix_sum(
     alias: str = "cum",
     n_buckets: int = 64,
 ) -> DataFrame:
-    """Exact running sum over a TOTAL order with NO single-partition
-    window — the value-ordered sibling of ``block_pack_spans``'s
-    integer-keyed two-phase prefix sum (that one needs contiguous
-    integer keys; this one takes any total order, e.g. q80's
-    ``revenue DESC, partkey``).
-
-    Phase 1: range-partition by the order (``repartitionByRange``
-    samples split points, so buckets respect the global order and are
-    size-balanced even under value skew), stamp the bucket id, and
-    aggregate per-bucket totals — a frame ``n_buckets`` rows long.
-    Phase 2: the cross-bucket running offset is a window over THAT tiny
-    frame; it broadcasts back and the per-row running sum executes as a
-    parallel window PARTITIONED by bucket. Decimal sums stay exact —
-    the result is bit-identical to the single-partition window at any
-    bucket count.
+    """Exact running sum over a TOTAL order (e.g. q80's ``revenue DESC,
+    partkey``) with no single-partition window: ``repartitionByRange``
+    samples split points, so its partitions are contiguous, size-
+    balanced ranges of the order even under value skew; the partition
+    id is the part of ``operators.prefix.prefix_sum``.
 
     The bucketed frame is persisted (tracked): its bucket ids come from
     sampled range boundaries, and the totals leg and the output leg
     must observe the SAME assignment.
     """
-    from pyspark.sql import Window as W
-
     from etl_notifier_pipeline_spark.caching import tracked_persist
 
     if n_buckets <= 0:
@@ -275,29 +233,8 @@ def ordered_prefix_sum(
             "__b", F.spark_partition_id()
         )
     )
-    totals = bucketed.groupBy("__b").agg(F.sum(sum_col).alias("__bt"))
-    offsets = totals.select(
-        "__b",
-        (
-            F.sum("__bt").over(
-                W.orderBy("__b").rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            - F.col("__bt")
-        ).alias("__boff"),
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), "__b")
-        .withColumn(
-            alias,
-            F.col("__boff")
-            + F.sum(sum_col).over(
-                W.partitionBy("__b")
-                .orderBy(*order_exprs)
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
-        .drop("__b", "__boff")
-    )
+    cum = prefix_sum(bucketed, "__b", F.col(sum_col), order_exprs, alias=alias)
+    return cum.drop("__b")
 
 
 def per_source_cap(

@@ -332,6 +332,63 @@ def _dense_pass(df: DataFrame) -> DataFrame:
     return df.coalesce(max(1, target))
 
 
+def _sq_dist(X, C):
+    """``|c|² − 2x·c`` for every (row of X, row of C) pair: it ranks the
+    centroids exactly as ``|x − c|²`` does (``|x|²`` is constant per
+    row), as one batch x centroids matmul instead of the batch x
+    centroids x dim difference tensor (GBs per Arrow batch at
+    corpus-scaled centroid counts)."""
+    return (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
+
+
+def _lloyd(corpus: DataFrame, vec_col: str, books, *, normalize: bool = False):
+    """One distributed Lloyd step of ``m`` k-means quantizers: ``books``
+    (m, k, d_sub) quantize the m contiguous subvectors of ``vec_col``
+    (m = 1 is the IVF coarse quantizer, m > 1 PQ codebooks). Returns
+    the new books; a centroid no subvector chose keeps its value.
+
+    One Arrow-batched pass: numpy assigns each subvector to its nearest
+    centroid (ties -> lowest index) and emits per-partition PARTIAL
+    sums, micro-quantized to int64 before the shuffle (the s06
+    determinism trick) — the shuffle carries m x k x d_sub scalar rows
+    per partition, never vectors, and the sums cannot vary with
+    partition order."""
+    import numpy as np
+    import pandas as pd
+
+    m, k, d_sub = books.shape
+
+    def partial_sums(batches):
+        for pdf in batches:
+            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            if normalize:
+                X /= np.linalg.norm(X, axis=1, keepdims=True)
+            rows = []
+            for s in range(m):
+                Xs = X[:, s * d_sub : (s + 1) * d_sub]
+                cell = _sq_dist(Xs, books[s]).argmin(axis=1)
+                for j in range(k):
+                    mask = cell == j
+                    n = int(mask.sum())
+                    if not n:
+                        continue
+                    qs = np.round(Xs[mask] * 1_000_000).astype(np.int64).sum(axis=0)
+                    rows.extend((s, j, p, int(qs[p]), n) for p in range(d_sub))
+            yield pd.DataFrame(rows, columns=["sub", "cell", "pos", "qsum", "n"])
+
+    sums = (
+        _dense_pass(corpus.select(vec_col))
+        .mapInPandas(partial_sums, "sub int, cell int, pos int, qsum long, n long")
+        .groupBy("sub", "cell", "pos")
+        .agg(F.sum("qsum").alias("qsum"), F.sum("n").alias("n"))
+        .collect()
+    )
+    out = books.copy()
+    for r in sums:
+        out[r["sub"], r["cell"], r["pos"]] = r["qsum"] / 1_000_000 / r["n"]
+    return out
+
+
 def ivf_assign_frame(
     df: DataFrame,
     centroids: list[list[float]],
@@ -355,7 +412,6 @@ def ivf_assign_frame(
     from pyspark.sql import types as T
 
     C = np.array(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.IntegerType())]
     )
@@ -363,9 +419,7 @@ def ivf_assign_frame(
     def assign(batches):
         for pdf in batches:
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            pdf[out_col] = (
-                (c_sq[None, :] - 2.0 * (X @ C.T)).argmin(axis=1).astype("int32")
-            )
+            pdf[out_col] = _sq_dist(X, C).argmin(axis=1).astype("int32")
             yield pdf
 
     return _dense_pass(df).mapInPandas(assign, schema)
@@ -381,68 +435,21 @@ def ivf_centroids(
 ) -> list[list[float]]:
     """Coarse-quantizer centroids: deterministic seeds (the ``n_cells``
     lowest-id corpus vectors) refined by ``n_iter`` distributed Lloyd
-    steps — assignment is a narrow JVM pass; the element-wise mean is a
-    (cell, pos) shuffle of scalars, never of whole vectors. The
-    centroid table itself is tiny (n_cells × dim) and lives driver-side
-    like any broadcast dimension."""
+    steps (``_lloyd`` with one subspace). The centroid table itself is
+    tiny (n_cells × dim) and lives driver-side like any broadcast
+    dimension."""
     import numpy as np
-    import pandas as pd
 
     seeds = (
         corpus.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
     )
-    cents = [list(map(float, r[vec_col])) for r in seeds]
-    if not cents:
+    if not seeds:
         raise ValueError("ivf_centroids: corpus is empty")
     # A corpus smaller than n_cells degrades to one cell per vector.
-    n_cells = len(cents)
-    dim = len(cents[0])
+    books = np.array([[list(map(float, r[vec_col])) for r in seeds]], dtype=np.float64)
     for _ in range(n_iter):
-        # One Arrow-batched pass: numpy assigns each vector to its
-        # nearest centroid and emits per-partition PARTIAL sums
-        # (micro-quantized to int64 pre-shuffle — the s06 determinism
-        # trick), so the shuffle carries n_cells x dim scalar rows per
-        # partition, never vectors, and the result cannot vary with
-        # partition order (the posexplode+avg double sum could).
-        C = np.array(cents, dtype=np.float64)
-
-        def partial_sums(batches):
-            # argmin of |x-c|^2 == argmin of |c|^2 - 2 x.c (|x|^2 is
-            # constant per row): one batch x cells matmul, never the
-            # batch x cells x dim difference tensor — at corpus-scaled
-            # cell counts that tensor is GBs per Arrow batch.
-            c_sq = (C * C).sum(axis=1)
-            for pdf in batches:
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                d2 = c_sq[None, :] - 2.0 * (X @ C.T)
-                cell = d2.argmin(axis=1)  # ties -> lowest cell
-                rows = []
-                for j in range(len(C)):
-                    mask = cell == j
-                    n = int(mask.sum())
-                    if not n:
-                        continue
-                    qs = np.round(X[mask] * 1_000_000).astype(np.int64).sum(axis=0)
-                    rows.extend((j, p, int(qs[p]), n) for p in range(X.shape[1]))
-                yield pd.DataFrame(rows, columns=["cell", "pos", "qsum", "n"])
-
-        means = (
-            _dense_pass(corpus.select(vec_col))
-            .mapInPandas(partial_sums, "cell int, pos int, qsum long, n long")
-            .groupBy("cell", "pos")
-            .agg(F.sum("qsum").alias("qsum"), F.sum("n").alias("n"))
-            .collect()
-        )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(r["cell"], {})[r["pos"]] = (
-                r["qsum"] / 1_000_000 / r["n"]
-            )
-        cents = [
-            [by_cell[i][p] for p in range(dim)] if i in by_cell else cents[i]
-            for i in range(n_cells)
-        ]
-    return cents
+        books = _lloyd(corpus, vec_col, books)
+    return books[0].tolist()
 
 
 def ivf_build(
@@ -484,15 +491,9 @@ def _ivf_assign_pass(
 
     C = np.array(cents, dtype=np.float64)
 
-    c_sq = (C * C).sum(axis=1)
-
     def assign(batches):
         for pdf in batches:
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            # argmin of |x-c|^2 == argmin of |c|^2 - 2 x.c: a batch x
-            # cells matmul instead of the batch x cells x dim
-            # difference tensor (GBs per batch at corpus-scaled cells)
-            d2 = c_sq[None, :] - 2.0 * (X @ C.T)
             # cumsum = the same sequential left-fold the JVM norm()
             # runs, so c_norm is bit-identical to the brute-force path
             nrm = np.sqrt((X * X).cumsum(axis=1)[:, -1])
@@ -501,7 +502,7 @@ def _ivf_assign_pass(
                     "neighbor_id": pdf[id_col],
                     "c_vec": pdf[vec_col],
                     "c_norm": nrm,
-                    "cell": d2.argmin(axis=1).astype("int32"),
+                    "cell": _sq_dist(X, C).argmin(axis=1).astype("int32"),
                 }
             )
 
@@ -751,14 +752,9 @@ def pq_codebooks(
     centroids (Jegou et al., "Product Quantization for Nearest
     Neighbor Search", TPAMI 2011).
 
-    Scale shape: each Lloyd step is ONE Arrow-batched corpus pass —
-    numpy assigns every subvector to its nearest centroid and emits
-    per-partition PARTIAL sums, so the shuffle carries
-    m x n_codes x d_sub scalar rows per partition, never vectors; the
-    driver only ever holds the m x n_codes x d_sub codebook (KB-sized,
-    like the IVF centroid table). Partials are micro-quantized to
-    int64 BEFORE the cross-partition sum (the s06 determinism trick) —
-    identical codebooks regardless of partition order.
+    Scale shape: each Lloyd step is ONE Arrow-batched corpus pass
+    (``_lloyd``); the driver only ever holds the m x n_codes x d_sub
+    codebook (KB-sized, like the IVF centroid table).
 
     Seeding is deterministic AND corpus-spread: the ``n_codes``
     lowest xxhash64(id) vectors — a reproducible uniform sample that
@@ -774,7 +770,6 @@ def pq_codebooks(
     RESIDUALS), which restores resolution.
     """
     import numpy as np
-    import pandas as pd
 
     seeds = (
         corpus.select(id_col, vec_col)
@@ -797,44 +792,7 @@ def pq_codebooks(
     )  # (m, n_codes, d_sub)
 
     for _ in range(n_iter):
-        C = books.copy()
-
-        def partial_sums(batches):
-            for pdf in batches:
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                if normalize:
-                    X /= np.linalg.norm(X, axis=1, keepdims=True)
-                rows = []
-                for s in range(m):
-                    Xs = X[:, s * d_sub : (s + 1) * d_sub]
-                    d2 = ((Xs[:, None, :] - C[s][None, :, :]) ** 2).sum(-1)
-                    cell = d2.argmin(axis=1)  # ties -> lowest index
-                    for j in range(C.shape[1]):
-                        mask = cell == j
-                        n = int(mask.sum())
-                        if not n:
-                            continue
-                        qs = (
-                            np.round(Xs[mask] * 1_000_000)
-                            .astype(np.int64)
-                            .sum(axis=0)
-                        )
-                        rows.extend(
-                            (s, j, p, int(qs[p]), n) for p in range(d_sub)
-                        )
-                yield pd.DataFrame(
-                    rows, columns=["sub", "cell", "pos", "qsum", "n"]
-                )
-
-        agg = (
-            _dense_pass(corpus.select(vec_col))
-            .mapInPandas(partial_sums, "sub int, cell int, pos int, qsum long, n long")
-            .groupBy("sub", "cell", "pos")
-            .agg(F.sum("qsum").alias("qsum"), F.sum("n").alias("n"))
-            .collect()
-        )
-        for r in agg:
-            books[r["sub"], r["cell"], r["pos"]] = r["qsum"] / 1_000_000 / r["n"]
+        books = _lloyd(corpus, vec_col, books, normalize=normalize)
     return books.tolist()
 
 
@@ -850,8 +808,8 @@ def pq_encode(
     PQ: a 100 TB float corpus becomes an m-byte-per-vector code table
     that fits two orders of magnitude more vectors per executor.
 
-    One Arrow-batched pass; numpy does the (rows x n_codes x d_sub)
-    argmin per subspace vectorized. Emits the original vector and its
+    One Arrow-batched pass; numpy does the nearest-code argmin per
+    subspace vectorized (``_sq_dist``). Emits the original vector and its
     norm alongside the codes so the exact rerank never re-reads the
     corpus."""
     import numpy as np
@@ -871,8 +829,7 @@ def pq_encode(
             codes = np.empty((len(X), m), dtype=np.int32)
             for s in range(m):
                 Us = U[:, s * d_sub : (s + 1) * d_sub]
-                d2 = ((Us[:, None, :] - C[s][None, :, :]) ** 2).sum(-1)
-                codes[:, s] = d2.argmin(axis=1)
+                codes[:, s] = _sq_dist(Us, C[s]).argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf[id_col],
@@ -1096,8 +1053,7 @@ def _ivfpq_encode_pass(
             codes = np.empty((len(X), m_), dtype=np.int32)
             for s in range(m_):
                 Rs = R[:, s * d_sub : (s + 1) * d_sub]
-                d2 = ((Rs[:, None, :] - C[s][None, :, :]) ** 2).sum(-1)
-                codes[:, s] = d2.argmin(axis=1)
+                codes[:, s] = _sq_dist(Rs, C[s]).argmin(axis=1)
             # cumsum = the same sequential left-fold the JVM norm()
             # runs, so the exact rerank's cosines are bit-identical
             # to the brute-force path (what lets s19 sit under the
@@ -1204,7 +1160,6 @@ def ivfpq_query(
     if n_probe is None:
         n_probe = params["n_probe"]
     Cc = np.array(cents, dtype=np.float64)
-    c_sq = (Cc * Cc).sum(axis=1)
     C = np.array(books, dtype=np.float64)
     m_, _, d_sub = C.shape
 
@@ -1212,9 +1167,7 @@ def ivfpq_query(
         for pdf in batches:
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             norms = np.linalg.norm(X, axis=1)
-            near = np.argsort(
-                c_sq[None, :] - 2.0 * (X @ Cc.T), axis=1, kind="stable"
-            )[:, :n_probe]
+            near = np.argsort(_sq_dist(X, Cc), axis=1, kind="stable")[:, :n_probe]
             rows = []
             for i in range(len(X)):
                 for cell in near[i]:

@@ -60,11 +60,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_notifier_pipeline_spark.operators.mutations import filter_new_deletes
+from etl_notifier_pipeline_spark.operators.prefix import prefix_sum
 from etl_notifier_pipeline_spark.storage import _VersionedStore, local_frame
 
 PROCESSED_FILES_SCHEMA = T.StructType(
@@ -267,34 +267,18 @@ class Ledger:
         base = (
             dc.agg(F.coalesce(F.max("query_id"), F.lit(0)).alias("m")).collect()[0]["m"]
         )
-        # Contiguous ids without a global single-partition window:
-        # row_number within a 64-way hash partition, then add per-
-        # partition cumulative offsets (the offset frame is <=64 rows,
-        # so its unpartitioned window is trivially cheap).
+        # Contiguous ids without a global single-partition window: a
+        # running count over 64 hash parts (operators.prefix).
         fresh = fresh.withColumn(
             "__p", F.pmod(F.xxhash64("target_table", "key_json"), F.lit(64))
         )
-        wp = W.partitionBy("__p").orderBy("target_table", "key_json", "event_id")
-        numbered = fresh.withColumn("__rn", F.row_number().over(wp))
-        offs = (
-            numbered.groupBy("__p")
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .withColumn(
-                "__off",
-                F.coalesce(
-                    F.sum("__cnt").over(
-                        W.orderBy("__p").rowsBetween(W.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ),
-            )
-        )
         rows = (
-            numbered.join(F.broadcast(offs.select("__p", "__off")), "__p")
-            .withColumn(
-                "query_id", (F.lit(base) + F.col("__off") + F.col("__rn")).cast("long")
+            prefix_sum(
+                fresh, "__p", F.lit(1), ["target_table", "key_json", "event_id"],
+                alias="__n",
             )
-            .drop("__p", "__rn", "__off")
+            .withColumn("query_id", (F.lit(base) + F.col("__n")).cast("long"))
+            .drop("__p", "__n")
             .withColumn("delete_flag", F.lit(True))
             .withColumn("executed_flag", F.lit(False))
             .withColumn("approval_timestamp", F.lit(None).cast("string"))

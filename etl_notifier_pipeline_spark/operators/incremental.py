@@ -89,94 +89,48 @@ def cdc_agg_delta(
     group_col: str,
     value_col: str,
     value_cast: str = "decimal(12,2)",
-) -> DataFrame:
-    """Per-group (count, sum) delta implied by a ``change_feed``: every
-    change row RETRACTS its old_row contribution (−1, −value) and
-    ASSERTS its new_row contribution (+1, +value) — inserts have only
-    the assertion, deletes only the retraction, and updates carry both
-    (possibly against different groups, so group migrations are exact).
-    This extends append-only ``agg_delta`` maintenance to the full
-    insert/update/delete mutation stream: the classic incremental
-    view-maintenance delta over CDC, costing O(changes), never
-    O(table). Returns ``group_col, d_count, d_sum, d_nn`` (all
-    signed); ``d_nn`` is the non-NULL value
-    count — the standard IVM fix for NULL retraction: when a group's
-    last non-NULL value is retracted but rows remain (e.g. an update
-    sets the only value to NULL), the folded ``d_sum`` is 0 while
-    SQL's SUM over the surviving all-NULL group is NULL, so readers
-    must report SUM as ``CASE WHEN d_nn > 0 THEN d_sum END``.
-    ``merge_aggregates`` folds it into a stored summary with kinds
-    ``{"d_count": "count", "d_sum": "sum", "d_nn": "count"}`` —
-    groups whose count reaches zero should then be dropped by the
-    caller (the retraction analog of "new groups appear")."""
-    val = lambda side: F.col(f"{side}.{value_col}").cast(value_cast)  # noqa: E731
-    grp = lambda side: F.col(f"{side}.{group_col}").alias(group_col)  # noqa: E731
-    # nn gates on the RAW column, not the cast: a non-NULL value that
-    # casts to NULL (overflow/NaN under non-ANSI casts) must still
-    # count toward nn so the fold agrees with the COUNT(value)-seeded
-    # summary and the COUNT(value) oracle
-    nn = lambda side, sign: (  # noqa: E731
-        F.when(
-            F.col(f"{side}.{value_col}").isNotNull(), F.lit(sign)
-        ).otherwise(F.lit(0))
-    ).cast("long")
-    retract = feed.where(F.col("old_row").isNotNull()).select(
-        grp("old_row"),
-        F.lit(-1).cast("long").alias("d_count"),
-        (-val("old_row")).alias("d_sum"),
-        nn("old_row", -1).alias("d_nn"),
-    )
-    assert_ = feed.where(F.col("new_row").isNotNull()).select(
-        grp("new_row"),
-        F.lit(1).cast("long").alias("d_count"),
-        val("new_row").alias("d_sum"),
-        nn("new_row", 1).alias("d_nn"),
-    )
-    return (
-        retract.unionByName(assert_)
-        .groupBy(group_col)
-        .agg(
-            F.sum("d_count").alias("d_count"),
-            # coalesce: a delta whose contributions are all NULL (e.g.
-            # insert of NULL values) must fold as +0, not poison the
-            # stored sum to NULL through merge_aggregates' SUM
-            F.coalesce(F.sum("d_sum"), F.lit(0).cast(value_cast)).alias(
-                "d_sum"
-            ),
-            F.sum("d_nn").alias("d_nn"),
-        )
-    )
-
-
-def cdc_moment_delta(
-    feed: DataFrame,
-    group_col: str,
-    value_col: str,
-    value_cast: str = "decimal(12,2)",
     sumsq_cast: str = "decimal(24,4)",
 ) -> DataFrame:
-    """``cdc_agg_delta`` extended with the SECOND moment: per-group
-    signed ``d_count, d_sum, d_nn, d_sumsq`` implied by a change feed.
-    AVG, VARIANCE and STDDEV are algebraic, not distributive — but
-    their underlying moments (count, Σv, Σv²) are each invertible, so
-    folding this delta with ``merge_aggregates`` (all kinds sum/count)
-    keeps them incrementally maintainable and the reader re-derives:
+    """Per-group moment delta implied by a ``change_feed``: every change
+    row RETRACTS its old_row contribution (−1, −value, −value²) and
+    ASSERTS its new_row contribution (+1, +value, +value²) — inserts
+    have only the assertion, deletes only the retraction, and updates
+    carry both (possibly against different groups, so group migrations
+    are exact). This extends append-only ``agg_delta`` maintenance to
+    the full insert/update/delete mutation stream: the classic
+    incremental view-maintenance delta over CDC, costing O(changes),
+    never O(table). Returns ``group_col, d_count, d_sum, d_nn,
+    d_sumsq`` (all signed).
+
+    ``d_nn`` is the non-NULL value count — the standard IVM fix for
+    NULL retraction: when a group's last non-NULL value is retracted
+    but rows remain (e.g. an update sets the only value to NULL), the
+    folded ``d_sum`` is 0 while SQL's SUM over the surviving all-NULL
+    group is NULL, so readers must report SUM as
+    ``CASE WHEN d_nn > 0 THEN d_sum END``.
+
+    ``merge_aggregates`` folds it into a stored summary with kinds
+    ``{"d_count": "count", "d_sum": "sum", "d_nn": "count"}`` (plus
+    ``"d_sumsq": "sum"`` for the second moment; a fold that names only
+    the first three never computes Σv²) — groups whose count reaches
+    zero should then be dropped by the caller (the retraction analog of
+    "new groups appear"). AVG, VARIANCE and STDDEV are algebraic, not
+    distributive, but their moments are each invertible, so the reader
+    re-derives them:
 
         avg    = d_sum / d_nn
         stddev = sqrt((d_sumsq·nn − d_sum²) / (nn·(nn−1)))
 
     Decimal moments keep the fold EXACT and order-independent (the
     repo's determinism contract): ``d_sum`` in ``value_cast`` widened
-    sums, ``d_sumsq`` in ``sumsq_cast`` (scale doubled by squaring).
-    The derived stddev is then bit-deterministic: exact decimals cast
-    to double once, IEEE arithmetic after."""
+    sums, ``d_sumsq`` in ``sumsq_cast`` (scale doubled by squaring)."""
     val = lambda side: F.col(f"{side}.{value_col}").cast(value_cast)  # noqa: E731
     sq = lambda side: (val(side) * val(side)).cast(sumsq_cast)  # noqa: E731
     grp = lambda side: F.col(f"{side}.{group_col}").alias(group_col)  # noqa: E731
-    # raw-column nn (not the cast) — keeps the fold in lockstep with
-    # F.count(value_col)-seeded summaries and COUNT(value) oracles
-    # even when a value overflows value_cast to NULL (see
-    # cdc_agg_delta)
+    # nn gates on the RAW column, not the cast: a non-NULL value that
+    # casts to NULL (overflow/NaN under non-ANSI casts) must still
+    # count toward nn so the fold agrees with the COUNT(value)-seeded
+    # summary and the COUNT(value) oracle
     nn = lambda side, sign: (  # noqa: E731
         F.when(
             F.col(f"{side}.{value_col}").isNotNull(), F.lit(sign)
@@ -196,6 +150,9 @@ def cdc_moment_delta(
         nn("new_row", 1).alias("d_nn"),
         sq("new_row").alias("d_sumsq"),
     )
+    # coalesce: a delta whose contributions are all NULL (e.g. insert
+    # of NULL values) must fold as +0, not poison the stored sums to
+    # NULL through merge_aggregates' SUM
     zero = lambda cast: F.lit(0).cast(cast)  # noqa: E731
     return (
         retract.unionByName(assert_)

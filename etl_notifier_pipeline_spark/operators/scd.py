@@ -28,8 +28,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from etl_notifier_pipeline_spark.operators.mutations import _pick_per_key
 
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
@@ -58,12 +59,7 @@ def scd2_upsert(
         c for c in incoming.columns if c not in keys
     ]
     order_cols = list(order_by) if order_by else value_cols
-    w_pick = W.partitionBy(*keys).orderBy(*[F.col(c).desc_nulls_last() for c in order_cols])
-    inc = (
-        incoming.withColumn("__rn", F.row_number().over(w_pick))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    inc = _pick_per_key(incoming, keys, order_cols, keep="last")
     current = target.filter(F.col(VALID_TO).isNull())
     history = target.filter(F.col(VALID_TO).isNotNull())
 

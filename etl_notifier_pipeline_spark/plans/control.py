@@ -1121,7 +1121,7 @@ def m19_ivm_mixed_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One materialized view mixing INVERTIBLE and NON-INVERTIBLE
     aggregates, maintained from the change feed (r7 verdict ask #7):
     count/sum/avg/stddev ride the signed moment fold
-    (``cdc_moment_delta`` — Σv and Σv² are invertible even though
+    (``cdc_agg_delta`` — Σv and Σv² are invertible even though
     avg/stddev are only algebraic) while min/max ride per-touched-group
     re-aggregation (``refresh_aggregates`` — no retraction exists for
     an extreme). Per commit the invertible side costs O(changes), the
@@ -1135,7 +1135,7 @@ def m19_ivm_mixed_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_notifier_pipeline_spark.operators import change_feed
     from etl_notifier_pipeline_spark.operators.incremental import (
-        cdc_moment_delta,
+        cdc_agg_delta,
         merge_aggregates,
         refresh_aggregates,
     )
@@ -1194,7 +1194,7 @@ def m19_ivm_mixed_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged = merge_aggregates(
             store.read("inv"),
-            cdc_moment_delta(feed, "event_type", "value"),
+            cdc_agg_delta(feed, "event_type", "value"),
             ["event_type"],
             kinds,
         ).filter(F.col("d_count") > 0)

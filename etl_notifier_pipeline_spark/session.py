@@ -68,35 +68,24 @@ def derived_split_bytes(driver_mem: str, slots: int) -> tuple[int, int]:
     return split, max(2 << 20, split // 2)
 
 
-def get_spark(
-    app_name: str = "etl_notifier_pipeline_spark",
-    *,
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then all cores. On a real
-    cluster, drop the ``master`` call and submit with your own resource
-    config — everything else carries over.
-    """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus or (os.cpu_count() or 8)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+def runtime_conf(
+    cpus: int | None = None, shuffle_partitions: int | None = None
+) -> dict[str, str]:
+    """The engine's runtime-settable SQL confs: ``get_spark`` builds its
+    session with them, and ``__spark_entry__._ensure_session_conf`` sets
+    them on a session the engine did not build, so both plan queries
+    alike. ``cpus`` (the task slots) defaults to ``$SPARK_GRAFT_CPUS``
+    then all cores; the shuffle width and split sizes follow it. Static
+    confs (UI, codegen cache, driver memory) are builder-only and stay
+    in ``get_spark``."""
+    slots = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
     split_bytes, advisory_bytes = derived_split_bytes(
-        driver_mem, cpus or (os.cpu_count() or 8)
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"), slots
     )
-
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or slots),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # Decouple shuffle width from local core count: start every
         # AQE-planned shuffle at 512 partitions and let coalescing fold
         # small ones back down. With the pre-r11 32-partition coupling,
@@ -104,7 +93,7 @@ def get_spark(
         # sf100 (x29 spilled 83 GB, d07 22 GB — SCALE_BENCH_sf100.json,
         # r10); 512 initial partitions cap per-partition shuffle input
         # at ~1/16th while AQE keeps small-query task counts flat.
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "512",
         # AQE partition coalescing is DISABLED inside cached plans by
         # default (canChangeCachedPlanOutputPartitioning=false), so any
         # tracked_persist whose frame sits on a shuffle materialized —
@@ -119,11 +108,8 @@ def get_spark(
         # downstream requirement, adding back an exchange) is the
         # lesser cost — the frames we persist are consumed by
         # aggregates/joins that AQE replans anyway.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # Let AQE convert a join to broadcast from RUNTIME-measured
         # sizes well past the static 10m threshold: a filtered dim
         # whose pre-filter stats look huge (q05's date-filtered orders
@@ -131,35 +117,25 @@ def get_spark(
         # once its shuffle output proves small. Runtime-measured, so
         # unlike raising the static threshold it can't OOM on a bad
         # estimate; 128m is well inside executor budgets at any scale.
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "128m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "128m",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         # Parquet TIMESTAMP(NANOS) has no Spark type: read such a
         # column as long instead of failing the scan. No fixture has
         # one; their timestamps are all MICROS (catalog.SCHEMAS).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # isAdjustedToUTC=false parquet timestamps otherwise surface as
         # TIMESTAMP_NTZ, which strict chrono builtins reject; with the
         # session tz pinned UTC the instant semantics are identical.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false")
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         # List a read's root paths on the driver up to 1024 paths
         # (Spark's default launches a listing job above 32). A 64-bucket
         # BucketedTableStore read passes 65+ paths; building one such
         # read on local[2] (4-core host) cost 0.53 s wall / 1.2-1.5 s
         # CPU with the listing job, 0.05 s / 0.08-0.16 s listed
         # serially. Catalog reads pass one file per table, under 32.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-        # Keep every generated class of a repeated plan compiled. The
-        # default cache holds 100 classes; one headline sweep generates
-        # about 280 and one approval micro-batch 220-257 (4-core host,
-        # local[2]), so each repeat recompiled them all (Janino on the
-        # driver, then the JIT). 1000 is about 3x the largest working
-        # set. Static and sized once per JVM by the first session: it
-        # cannot go through spark.conf.set on a running session.
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.driver.memory", driver_mem)
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         # Per-task DATA budget, both sides of the shuffle — the r11
         # spill diagnosis (docs/SCALE.md "The spill levers, measured"):
         # initialPartitionNum alone halved x29's sf100 spill but left
@@ -176,12 +152,43 @@ def get_spark(
         # deployment's tasks scale up with its per-task memory instead
         # of inheriting this host's constants and multiplying per-task
         # fixed costs ~7x on dense whole-corpus passes.
-        .config("spark.sql.files.maxPartitionBytes", str(split_bytes))
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory_bytes)
-        )
+        "spark.sql.files.maxPartitionBytes": str(split_bytes),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(advisory_bytes),
+    }
+
+
+def get_spark(
+    app_name: str = "etl_notifier_pipeline_spark",
+    *,
+    cpus: int | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) the engine's SparkSession.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then all cores. On a real
+    cluster, drop the ``master`` call and submit with your own resource
+    config — everything else carries over.
+    """
+    if cpus is None:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
+    master = f"local[{cpus}]" if cpus else "local[*]"
+    builder = (
+        SparkSession.builder.master(master)
+        .appName(app_name)
+        .config("spark.ui.enabled", "false")
+        # Keep every generated class of a repeated plan compiled. The
+        # default cache holds 100 classes; one headline sweep generates
+        # about 280 and one approval micro-batch 220-257 (4-core host,
+        # local[2]), so each repeat recompiled them all (Janino on the
+        # driver, then the JIT). 1000 is about 3x the largest working
+        # set. Static and sized once per JVM by the first session: it
+        # cannot go through spark.conf.set on a running session.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {**runtime_conf(cpus, shuffle_partitions), **(extra_conf or {})}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -36,36 +36,24 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _accumulate(
-    prev: tuple, pdfs: Iterator[pd.DataFrame]
-) -> tuple[int, int]:
-    """Shared accumulation for both stateful APIs — one place for the
-    count/sum semantics so the twins cannot drift. Values are summed
-    as integer cents (the fixture's values are 2-decimal money, like
-    the reference's), so state is order-independent and exact."""
-    n, total_cents = prev
+def _update(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Values are summed as integer cents (the fixture's values are
+    2-decimal money, like the reference's), so state is order-
+    independent and exact."""
+    n, total_cents = state.get if state.exists else (0, 0)
     for pdf in pdfs:
         n += len(pdf)
         total_cents += int((pdf["value"] * 100).round().astype("int64").sum())
-    return n, total_cents
-
-
-def _emit(key: tuple, n: int, total_cents: int) -> pd.DataFrame:
-    return pd.DataFrame(
+    state.update((n, total_cents))
+    yield pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n],
             "total_value": [total_cents / 100.0],
         }
     )
-
-
-def _update(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, total_cents = _accumulate(state.get if state.exists else (0, 0), pdfs)
-    state.update((n, total_cents))
-    yield _emit(key, n, total_cents)
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
@@ -77,78 +65,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState form (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-try:  # the API is Spark 4+; gate so Spark 3 deployments still import
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        """Per-user running (count, total) as a ``transformWithState``
-        StatefulProcessor — the Spark-4 replacement for
-        ``applyInPandasWithState``'s function-and-tuple state: named
-        state variables with schemas, optional TTL, and composable
-        timers. State stays two numbers per key, so the store scales
-        with |users|, never |events|.
-        """
-
-        def __init__(self, ttl_ms: int | None = None) -> None:
-            self._ttl_ms = ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events BIGINT, total_cents BIGINT", self._ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._totals.get() if self._totals.exists() else (0, 0)
-            n, total_cents = _accumulate(tuple(prev), rows)
-            self._totals.update((n, total_cents))
-            yield _emit(key, n, total_cents)
-
-        def close(self) -> None:
-            pass
-
-    def running_user_totals_tws(
-        events: DataFrame, *, ttl_ms: int | None = None
-    ) -> DataFrame:
-        """``running_user_totals`` on the transformWithState API.
-
-        Requires ``google.protobuf`` (the state-protocol transport of
-        transformWithState's Python worker) — absent from this
-        container, so the runtime path is gated per the environment
-        policy; the processor itself is the real Spark-4 API usage.
-        """
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - env-dependent
-            raise NotImplementedError(
-                "transformWithStateInPandas needs google.protobuf for its "
-                "state protocol; install protobuf or use "
-                "running_user_totals (applyInPandasWithState)"
-            ) from exc
-        # TTL state is only legal under processing-time semantics
-        # (Spark raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_
-        # ASSIGN_TTL otherwise), so the time mode follows the ttl arg.
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(ttl_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
-
-except ImportError:  # pragma: no cover - Spark 3 fallback
-    RunningTotalsProcessor = None  # type: ignore[assignment]
-
-    def running_user_totals_tws(events: DataFrame, *, ttl_ms: int | None = None):
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark 4+ and its protobuf "
-            "state protocol; use running_user_totals "
-            "(applyInPandasWithState) instead"
-        )

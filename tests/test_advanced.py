@@ -208,59 +208,6 @@ def test_median_matches_sorted_middle(spark):
         assert med[etype] == pytest.approx(statistics.median(vals))
 
 
-def test_transform_with_state_accumulates_across_batches(spark, tmp_path):
-    """The Spark-4 transformWithState twin of st05: same per-user
-    accumulation semantics across micro-batches. Needs protobuf (the
-    state-protocol transport), absent from this container — skipped
-    there, exercised where available."""
-    import json
-
-    pytest.importorskip("google.protobuf")
-    from etl_notifier_pipeline_spark.streaming.stateful import running_user_totals_tws
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    (src / "a.json").write_text(
-        "\n".join(json.dumps({"user_id": 1, "value": v}) for v in (1.0, 2.0))
-    )
-    (src / "b.json").write_text(
-        "\n".join(json.dumps({"user_id": 1, "value": v}) for v in (3.0,))
-    )
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = running_user_totals_tws(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_tws")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_tws").collect()
-    final = max(rows, key=lambda r: r["n_events"])
-    assert final["n_events"] == 3 and final["total_value"] == pytest.approx(6.0)
-
-
-def test_transform_with_state_gate_raises_clearly(spark):
-    """Without protobuf the tws path must fail fast with a pointer to
-    the applyInPandasWithState fallback, not crash a streaming worker."""
-    try:
-        import google.protobuf  # noqa: F401
-        pytest.skip("protobuf available — runtime path is exercised instead")
-    except ImportError:
-        pass
-    from etl_notifier_pipeline_spark.streaming.stateful import running_user_totals_tws
-
-    df = spark.createDataFrame([(1, 1.0)], ["user_id", "value"])
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        running_user_totals_tws(df)
-
-
 def test_approx_quantiles_error_bound(spark):
     """GK-sketch quantiles must land within rank-error accuracy of the
     exact percentiles (accuracy=10000 -> rank error <= n/10000)."""

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -90,17 +91,92 @@ def _reinferred_schemas(tree: ast.AST) -> list[int]:
     ]
 
 
+def _package_trees():
+    """(path relative to the repo, source, AST) of every package module."""
+    pkg = os.path.join(ROOT, "etl_notifier_pipeline_spark")
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    src = f.read()
+                yield os.path.relpath(path, ROOT), src, ast.parse(src, path)
+
+
 def test_no_package_code_reinfers_a_parquet_schema():
     """A schema the code declares or has just written is known without
     the inference job ``spark.read.parquet(p).schema`` launches."""
     assert _reinferred_schemas(ast.parse("s = spark.read.parquet(p).schema")) == [1]
-    pkg = os.path.join(ROOT, "etl_notifier_pipeline_spark")
     found = []
-    for dirpath, _dirs, files in os.walk(pkg):
-        for fn in files:
-            if fn.endswith(".py"):
-                path = os.path.join(dirpath, fn)
-                with open(path) as f:
-                    tree = ast.parse(f.read(), path)
-                found += [f"{os.path.relpath(path, ROOT)}:{ln}" for ln in _reinferred_schemas(tree)]
+    for rel, _src, tree in _package_trees():
+        found += [f"{rel}:{ln}" for ln in _reinferred_schemas(tree)]
     assert found == []
+
+
+def _unpartitioned_windows(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, enclosing function) of every ``Window.orderBy(...)`` or
+    ``Window.partitionBy().orderBy(...)``, under any import alias of
+    ``Window``: a window without partitions, which sorts its whole
+    input in one task."""
+    aliases = {
+        a.asname or a.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        and node.module in ("pyspark.sql", "pyspark.sql.window")
+        for a in node.names
+        if a.name == "Window"
+    }
+    found = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "orderBy"
+            ):
+                base = child.func.value
+                if (
+                    isinstance(base, ast.Call)
+                    and isinstance(base.func, ast.Attribute)
+                    and base.func.attr == "partitionBy"
+                    and not base.args
+                ):
+                    base = base.func.value
+                if isinstance(base, ast.Name) and base.id in aliases:
+                    found.append((child.lineno, fn))
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else fn)
+
+    visit(tree, "")
+    return found
+
+
+# The unpartitioned windows the package may hold: the prefix kernel's
+# window over its per-part totals, and a directory listing's file rank.
+ALLOWED_UNPARTITIONED_WINDOWS = {
+    ("etl_notifier_pipeline_spark/operators/prefix.py", "prefix_sum"),
+    ("etl_notifier_pipeline_spark/extensions/multimodal.py", "media_from_dir"),
+}
+
+
+def test_one_prefix_kernel_and_no_distance_tensor():
+    """Running sums go through ``operators.prefix.prefix_sum`` (no other
+    unpartitioned window), and nearest-centroid searches through
+    ``similarity._sq_dist`` (no batch x centroids x dim difference
+    tensor)."""
+    probe = "from pyspark.sql import Window as W\ndef f():\n    W.partitionBy().orderBy(1)"
+    assert _unpartitioned_windows(ast.parse(probe)) == [(3, "f")]
+    windows, tensors = [], []
+    for rel, src, tree in _package_trees():
+        windows += [
+            f"{rel}:{ln}"
+            for ln, fn in _unpartitioned_windows(tree)
+            if (rel, fn) not in ALLOWED_UNPARTITIONED_WINDOWS
+        ]
+        tensors += [
+            f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+            for m in re.finditer(r"\[:, None, :\]\s*-", src)
+        ]
+    assert windows == []
+    assert tensors == []

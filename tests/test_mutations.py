@@ -839,7 +839,7 @@ class TestRound8AdviceRegressions:
 
 
 class TestMomentIVM:
-    """cdc_moment_delta (r7 verdict ask #7): avg/stddev maintained
+    """cdc_agg_delta's second moment (r7 verdict ask #7): avg/stddev maintained
     from invertible moments (count, Σv, Σv²) + min/max from touched-
     group refresh, in one mixed view. The adversarial case: a deleted
     row that was BOTH the group max AND the group's last non-NULL
@@ -849,7 +849,7 @@ class TestMomentIVM:
     def test_deleted_row_was_max_and_last_nonnull(self, spark, tmp_path):
         from etl_notifier_pipeline_spark.operators import change_feed
         from etl_notifier_pipeline_spark.operators.incremental import (
-            cdc_moment_delta,
+            cdc_agg_delta,
             merge_aggregates,
             refresh_aggregates,
         )
@@ -895,7 +895,7 @@ class TestMomentIVM:
         feed = change_feed(store, "t", ["k"], from_version=1, to_version=2)
         inv = merge_aggregates(
             seed,
-            cdc_moment_delta(feed, "grp", "v"),
+            cdc_agg_delta(feed, "grp", "v"),
             ["grp"],
             {"d_count": "count", "d_sum": "sum", "d_nn": "count",
              "d_sumsq": "sum"},
@@ -943,7 +943,7 @@ class TestMomentIVM:
         direct recompute of the final snapshot, for every group."""
         from etl_notifier_pipeline_spark.operators import change_feed
         from etl_notifier_pipeline_spark.operators.incremental import (
-            cdc_moment_delta,
+            cdc_agg_delta,
             merge_aggregates,
         )
         from etl_notifier_pipeline_spark.storage import TableStore
@@ -999,7 +999,7 @@ class TestMomentIVM:
             )
             view = merge_aggregates(
                 view,
-                cdc_moment_delta(feed, "grp", "v"),
+                cdc_agg_delta(feed, "grp", "v"),
                 ["grp"],
                 {"d_count": "count", "d_sum": "sum", "d_nn": "count",
                  "d_sumsq": "sum"},
@@ -1032,7 +1032,6 @@ class TestMomentIVM:
         from etl_notifier_pipeline_spark.operators import change_feed
         from etl_notifier_pipeline_spark.operators.incremental import (
             cdc_agg_delta,
-            cdc_moment_delta,
             merge_aggregates,
         )
         from etl_notifier_pipeline_spark.storage import TableStore
@@ -1067,9 +1066,9 @@ class TestMomentIVM:
         # recompute ground truth on v2: COUNT(v) counts the NaN-free set
         assert folded["a"] == (1, 1)   # was (1, 2) before the fix
         assert folded["b"] == (0, 0)   # was (0, 1) before the fix
-        # the moment variant agrees
+        # the delta's own d_nn
         d = {
             r["grp"]: r["d_nn"]
-            for r in cdc_moment_delta(feed, "grp", "v").collect()
+            for r in cdc_agg_delta(feed, "grp", "v").collect()
         }
         assert d == {"a": -1, "b": -1}

@@ -34,6 +34,25 @@ def test_driver_contract_shape():
     assert len(q) >= 40
 
 
+def test_driver_session_carries_every_runtime_conf(spark, monkeypatch):
+    """A session the engine did not build, once ``_ensure_session_conf``
+    has run, plans with every runtime conf ``get_spark`` set on the
+    test session (8 slots)."""
+    import __spark_entry__ as entry
+
+    from etl_notifier_pipeline_spark.session import runtime_conf
+
+    keys = sorted(runtime_conf(8))
+    fresh = spark.newSession()
+    for k in keys:
+        fresh.conf.unset(k)
+    want = {k: spark.conf.get(k) for k in keys}
+    assert {k: fresh.conf.get(k, None) for k in keys} != want
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    entry._ensure_session_conf(fresh)
+    assert {k: fresh.conf.get(k) for k in keys} == want
+
+
 def test_driver_green_rotation_counts_only_passes(tmp_path, monkeypatch):
     """The catalog-order rotation reads CORRECTNESS_r*.json dynamically:
     green rows leave the priority set, failed/errored rows re-enter it,

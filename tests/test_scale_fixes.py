@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
-
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from etl_notifier_pipeline_spark.ledger import Ledger
@@ -161,33 +161,77 @@ class TestBatchedLedgerMarks:
         assert got["e3"] == ("pending", False, None)  # untouched
 
 
+def _windows(df) -> list[tuple[list[str], set[str]]]:
+    """(partition columns, input columns) of every Window in ``df``'s
+    executed plan (runs ``df``; walks into AQE query stages)."""
+    df.collect()
+    seq = lambda s: [s.apply(i) for i in range(s.size())]  # noqa: E731
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        else:
+            if name == "Window":
+                found.append((
+                    [e.sql() for e in seq(node.partitionSpec())],
+                    {a.name() for a in seq(node.child().output())},
+                ))
+            todo.extend(seq(node.children()))
+    return found
+
+
+def assert_two_phase_prefix(df, part: str) -> None:
+    """The ``operators.prefix`` plan shape: the running window over the
+    input rows is partitioned by ``part``; the only unpartitioned
+    window reads the per-part totals (columns ``part``, ``__total``)."""
+    wins = _windows(df)
+    assert sorted(p for p, _ in wins) == [[], [part]], wins
+    assert [cols for p, cols in wins if not p] == [{part, "__total"}], wins
+
+
 class TestQueueDeleteIds:
-    def test_contiguous_ids_without_global_window(self, spark, tmp_store):
+    def test_contiguous_ids_without_global_window(self, spark, tmp_store, monkeypatch):
+        from etl_notifier_pipeline_spark import ledger as ledger_mod
+
+        kernel, kernel_out = ledger_mod.prefix_sum, []
+
+        def recording_prefix_sum(*args, **kwargs):
+            kernel_out.append(kernel(*args, **kwargs))
+            return kernel_out[-1]
+
+        monkeypatch.setattr(ledger_mod, "prefix_sum", recording_prefix_sum)
         led = Ledger(spark, tmp_store)
         reqs = spark.createDataFrame(
             [(f"e{i}", "t", f'{{"k":"{i}"}}') for i in range(500)],
             ["event_id", "target_table", "key_json"],
         )
         # multi-partition input: the per-partition offset logic must
-        # still produce globally contiguous ids (the returned frame is
-        # localCheckpoint-ed, so shape is asserted behaviorally here
-        # and structurally below on an un-checkpointed replica)
+        # still produce globally contiguous ids
         rows = led.queue_deletes(reqs.repartition(8))
         ids = sorted(r["query_id"] for r in rows.collect())
         assert ids == list(range(1, 501))  # contiguous from base+1
-        # structural check on the id-assignment window: hash-partitioned
-        # row_number, no global single-partition window over the batch
-        import inspect
-
-        from etl_notifier_pipeline_spark import ledger as ledger_mod
-
-        src = inspect.getsource(ledger_mod.Ledger.queue_deletes)
-        assert 'W.partitionBy("__p")' in src
-        assert 'W.orderBy("target_table", "key_json", "event_id")' not in src
+        # the ids come from the prefix kernel (the returned frame is
+        # localCheckpoint-ed, so the plan is read off the kernel's
+        # output): hash-partitioned running count, no global window
+        # over the batch
+        assert len(kernel_out) == 1
+        assert_two_phase_prefix(kernel_out[0], "__p")
         # next batch continues above the previous max
         more = led.queue_deletes(spark.createDataFrame(
             [("e9", "t", '{"k":"new"}')], ["event_id", "target_table", "key_json"]))
         assert [r["query_id"] for r in more.collect()] == [501]
+
+    @pytest.mark.parametrize(
+        "query,part", [("x22_block_pack_spans", "__g"), ("q80_pareto_abc", "__b")]
+    )
+    def test_registry_prefix_sums_have_no_global_row_window(self, spark, query, part):
+        from etl_notifier_pipeline_spark.plans import get
+
+        assert_two_phase_prefix(get(query).fn(spark, SF_DIR), part)
 
     def test_intra_batch_duplicate_keys_queue_once(self, spark, tmp_store):
         led = Ledger(spark, tmp_store)
